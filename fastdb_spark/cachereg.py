@@ -11,6 +11,7 @@ this between queries; tests in teardown).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
@@ -39,11 +40,6 @@ def release_staged() -> int:
     return n
 
 
-#: kill-switch for the adaptive narrowing below (A/B measurement and an
-#: operational escape hatch: flipping it makes stage_adaptive == stage).
-ADAPTIVE_ENABLED = True
-
-
 def stage_adaptive(df: DataFrame, target_bytes: int = 32 * 1024 * 1024):
     """Stage ``df`` eagerly, then return a view coalesced to
     ``ceil(cached_bytes / target_bytes)`` partitions when that is
@@ -65,8 +61,6 @@ def stage_adaptive(df: DataFrame, target_bytes: int = 32 * 1024 * 1024):
     data is real.  Layout-only: values and row order semantics are
     untouched (every consumer is an unordered join/aggregate input)."""
     df = stage(df)
-    if not ADAPTIVE_ENABLED:
-        return df
     try:
         nbytes = int(
             df.select("*")
@@ -75,9 +69,9 @@ def stage_adaptive(df: DataFrame, target_bytes: int = 32 * 1024 * 1024):
             .stats()
             .sizeInBytes()
         )
-        width = df.rdd.getNumPartitions()
-    except Exception:
-        # connect mode / stats unavailable: keep the plain staged frame
+        width = df._jdf.rdd().getNumPartitions()
+    except (AttributeError, Py4JError):
+        # connect mode has no _jdf: keep the plain staged frame
         return df
     target = max(1, -(-nbytes // max(target_bytes, 1)))
     if target < width:

@@ -12,6 +12,16 @@ integer, and the ``n_hashes`` permutations are integer arithmetic
 row).  ``minhash_signature_fast`` (xxhash64, no oracle twin) remains the
 alternative where cross-engine parity is not needed.
 
+The four MinHash/LSH builders share one contract: they take the NAME of
+a column (a plain identifier, no dots) and return ONE ``F.expr`` built
+from SQL text.  The whole sketch is parsed JVM-side in a single call
+instead of being assembled from O(n_hashes) Column objects over py4j,
+and the band builders may reference their signature column once per
+band, which is free for an attribute.  Anything else — a computed
+Column, a dotted path, a non-identifier name — raises: stage the input
+as a named column first.  :func:`sketch_impl` maps a ``hash_impl``
+name to its (signature builder, band builder, persisted scheme tag).
+
 Scale notes: signatures are computed in one projection over the shingle
 array (no explode, no shuffle); LSH banding explodes to ``bands`` rows per
 document and groups by band value — the classic shuffle-light candidate
@@ -22,6 +32,7 @@ same partition).
 from __future__ import annotations
 
 import re
+from typing import Callable, NamedTuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -54,155 +65,73 @@ def md5x_offsets(n_hashes: int) -> list[int]:
 _IDENT = re.compile(r"^[A-Za-z_][A-Za-z0-9_]*$")
 
 
-def _sql_of(col: Column | str) -> str | None:
-    """Backtick-quoted SQL reference for a PLAIN named column — a str
-    name or a bare-attribute Column (``F.col("sig")``); ``None`` for
-    anything else.  Lets the sketch builders embed their input column
-    into ONE ``F.expr`` string instead of assembling O(n_hashes) Column
-    objects through py4j (~70-190 ms of pure driver time per
-    construction, paid per sketch per gate).
-
-    r13 rewrite, two findings at once:
-
-    - Spark 4 removed ``Column.expr()`` from the classic java Column,
-      so the r12 form (``col._jc.expr().sql()``) raised Py4JError on
-      EVERY call and the expr-string fast paths silently never fired —
-      every sketch construction was paying the Column-API loops this
-      helper exists to avoid.  The replacement introspects the
-      Column's ``node()`` (`org.apache.spark.sql.internal.*`).
-    - ADVICE r12 (medium): ``Expression.sql()`` is documented
-      best-effort and need not round-trip.  The new gate accepts ONLY
-      an UnresolvedAttribute whose single-part name is a simple
-      identifier and quotes it itself — a bare backticked identifier
-      embedded in an expr string provably resolves to the same
-      attribute ``F.col(name)`` would.  Dotted paths, computed
-      expressions and connect-mode columns all return ``None`` and the
-      builders keep the Column-API construction."""
-    if isinstance(col, str):
-        name = col
-    else:
-        try:
-            node = col._jc.node()
-            if node.getClass().getSimpleName() != "UnresolvedAttribute":
-                return None
-            name = node.sql()
-        except Exception:
-            return None
-    if not _IDENT.match(name):
-        return None
+def _ref(name: str) -> str:
+    """Backtick-quoted SQL reference for the plain column ``name``; a
+    bare quoted identifier resolves to the same attribute ``F.col(name)``
+    would.  Raises ``TypeError`` for a non-``str`` and ``ValueError`` for
+    a name that is not a simple identifier."""
+    if not isinstance(name, str):
+        raise TypeError(
+            "sketch builders take a column name (str), got "
+            f"{type(name).__name__}; stage the input as a named column"
+        )
+    if not _IDENT.fullmatch(name):
+        raise ValueError(
+            f"sketch builders take a plain column name, got {name!r}"
+        )
     return f"`{name}`"
 
 
-def minhash_signature(shingles: Column | str, n_hashes: int = 12) -> Column:
-    """MinHash signature (the "md5x" scheme): ONE md5 per shingle seeds a
-    32-bit integer x = first-8-hex-chars, and element i is the min over
-    shingles of the integer permutation ``(x*(2i+1) + b_i) mod 2^32``
-    (odd multiplier -> a bijection of Z_2^32, so each element is a valid
-    min-hash of a distinct permutation).  Arithmetic is identical in
-    ANSI SQL, so sketches stay oracle-checkable — and the single
-    transform -> integer fold computes the md5 exactly once per shingle
-    (the previous md5-per-(shingle, seed) scheme cost n_hashes md5 calls
-    per shingle and dominated every minhash pipeline; this one measured
-    2.4x faster end-to-end on the signature stage).
+def minhash_signature(shingles: str, n_hashes: int = 12) -> Column:
+    """MinHash signature (the "md5x" scheme) of the ``array<string>``
+    column named ``shingles``: ONE md5 per shingle seeds a 32-bit integer
+    x = first-8-hex-chars, and element i is the min over shingles of the
+    integer permutation ``(x*(2i+1) + b_i) mod 2^32`` (odd multiplier ->
+    a bijection of Z_2^32, so each element is a valid min-hash of a
+    distinct permutation).  Arithmetic is identical in ANSI SQL, so
+    sketches stay oracle-checkable, and the single transform -> integer
+    fold computes the md5 exactly once per shingle.
 
     Returns ``array<long>``; empty shingle arrays yield all-``MD5X_EMPTY``
     sentinel signatures (see :data:`MD5X_EMPTY`)."""
+    src = _ref(shingles)
     offs = md5x_offsets(n_hashes)
-    # ONE expr string (r12; fast-path gate revived r13 — see _sql_of):
-    # the Column-object fold cost ~190 ms of py4j driver time per
-    # construction; the SQL text is the same operators on the same
-    # bigint arithmetic, parsed JVM-side in one call
-    src = _sql_of(shingles)
-    if isinstance(shingles, str):
-        shingles = F.col(shingles)
-    if src is not None:
-        init = "array(" + ",".join(
-            f"{MD5X_EMPTY}L" for _ in range(n_hashes)
-        ) + ")"
-        mins = ",".join(
-            f"least(element_at(acc, {i + 1}), "
-            f"(x * {2 * i + 1}L + {offs[i]}L) % {MD5X_MOD}L)"
-            for i in range(n_hashes)
-        )
-        return F.expr(
-            f"aggregate(transform({src}, s -> "
-            "CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)), "
-            f"{init}, (acc, x) -> array({mins}))"
-        )
-    init = F.array(*[F.lit(MD5X_EMPTY).cast("long") for _ in range(n_hashes)])
-
-    def fold(acc: Column, x: Column) -> Column:
-        return F.array(
-            *[
-                F.least(
-                    F.element_at(acc, i + 1),
-                    (x * F.lit(2 * i + 1) + F.lit(offs[i])) % F.lit(MD5X_MOD),
-                )
-                for i in range(n_hashes)
-            ]
-        )
-
-    xs = F.transform(
-        shingles,
-        lambda s: F.conv(F.substring(F.md5(s), 1, 8), 16, 10).cast("long"),
+    init = "array(" + ",".join(f"{MD5X_EMPTY}L" for _ in range(n_hashes)) + ")"
+    mins = ",".join(
+        f"least(element_at(acc, {i + 1}), "
+        f"(x * {2 * i + 1}L + {offs[i]}L) % {MD5X_MOD}L)"
+        for i in range(n_hashes)
     )
-    return F.aggregate(xs, init, fold)
+    return F.expr(
+        f"aggregate(transform({src}, s -> "
+        "CAST(conv(substring(md5(s), 1, 8), 16, 10) AS BIGINT)), "
+        f"{init}, (acc, x) -> array({mins}))"
+    )
 
 
-def lsh_band_hashes(
-    signature: Column | str, bands: int, rows_per_band: int
-) -> Column:
-    """Array of ``bands`` band keys: ``'b{j}:'`` + the comma-joined
-    signature slice (equality is all a band key needs — no hash of the
-    hash).  Documents sharing any band key are near-dup candidates.
+def lsh_band_hashes(signature: str, bands: int, rows_per_band: int) -> Column:
+    """Array of ``bands`` band keys for the md5x signature column named
+    ``signature``: ``'b{j}:'`` + the comma-joined signature slice
+    (equality is all a band key needs — no hash of the hash).  Documents
+    sharing any band key are near-dup candidates.
 
     Sentinel (all-``MD5X_EMPTY``) signatures — shingle-less documents —
     get an EMPTY band array: banding them would put every shingle-less
     document in ONE shared bucket whose self-join is quadratic in their
     count (all pairs later rejected by the Jaccard refine anyway, since
     two empty shingle sets score 0).  They remain exact-dedup-able via
-    their fingerprints.
-
-    The signature argument should be a NAMED column (``'sig'`` /
-    ``F.col('sig')`` — what every internal call site passes): the
-    generated SQL references it ``bands + 1`` times, which is free for
-    an attribute but would re-evaluate an inline signature expression
-    per band (ADVICE r12) — inline expressions therefore take the
-    Column-API fallback, where the same caveat applies."""
-    src = _sql_of(signature)
-    if isinstance(signature, str):
-        signature = F.col(signature)
-    if src is not None:
-        # ONE expr string (r12) — same operators, same band keys
-        keys = ",".join(
-            f"concat('b{j}:', array_join(transform("
-            f"slice({src}, {j * rows_per_band + 1}, {rows_per_band}), "
-            "x -> CAST(x AS STRING)), ','))"
-            for j in range(bands)
-        )
-        return F.expr(
-            f"IF(element_at({src}, 1) = {MD5X_EMPTY}L, "
-            f"CAST(array() AS ARRAY<STRING>), array({keys}))"
-        )
-    keys = F.array(
-        *[
-            F.concat(
-                F.lit(f"b{j}:"),
-                F.array_join(
-                    F.transform(
-                        F.slice(signature, j * rows_per_band + 1, rows_per_band),
-                        lambda x: x.cast("string"),
-                    ),
-                    ",",
-                ),
-            )
-            for j in range(bands)
-        ]
+    their fingerprints."""
+    src = _ref(signature)
+    keys = ",".join(
+        f"concat('b{j}:', array_join(transform("
+        f"slice({src}, {j * rows_per_band + 1}, {rows_per_band}), "
+        "x -> CAST(x AS STRING)), ','))"
+        for j in range(bands)
     )
-    return F.when(
-        F.element_at(signature, 1) == F.lit(MD5X_EMPTY),
-        F.array().cast("array<string>"),
-    ).otherwise(keys)
+    return F.expr(
+        f"IF(element_at({src}, 1) = {MD5X_EMPTY}L, "
+        f"CAST(array() AS ARRAY<STRING>), array({keys}))"
+    )
 
 
 def simhash60(df: DataFrame, id_col: str, shingles_col: str) -> DataFrame:
@@ -256,13 +185,12 @@ def hamming60(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def minhash_signature_fast(
-    shingles: Column | str, n_hashes: int = 12
-) -> Column:
-    """FAST-PATH MinHash: each shingle is string-hashed ONCE
-    (``xxhash64``), the ``n_hashes`` permutations derive from that base
-    via long-input ``xxhash64(base, i)`` — integer-only, no per-seed
-    string re-hash, ~an order of magnitude cheaper at scale.
+def minhash_signature_fast(shingles: str, n_hashes: int = 12) -> Column:
+    """FAST-PATH MinHash of the ``array<string>`` column named
+    ``shingles``: each shingle is string-hashed ONCE (``xxhash64``), the
+    ``n_hashes`` permutations derive from that base via long-input
+    ``xxhash64(base, i)`` — integer-only, no per-seed string re-hash,
+    ~an order of magnitude cheaper at scale.
 
     NOT oracle-parity (duckdb seeds xxhash64 differently): banding
     buckets differ from the md5 path, so candidate sets differ — the
@@ -279,49 +207,28 @@ def minhash_signature_fast(
     in ONE shared bucket per band, a quadratic self-join on uncapped
     paths).
 
-    r13 (VERDICT r12 #2): the base ``transform(shingles, xxhash64)`` is
-    bound to a lambda variable via a single-element-array transform — a
-    let-binding CollapseProject cannot inline back into the consuming
-    lambdas — so the per-shingle STRING hash runs ONCE per row instead
-    of once per signature element (the r12 tree re-evaluated it
-    n_hashes times; at 100 TB that is 11 redundant xxhash64 passes over
-    every shingle array).  Each element then applies the same per-seed
-    integer ``xxhash64(h, i)`` and ``array_min`` as before, so values
-    (incl. the all-NULL empty sentinel: the init array survives an
-    empty base untouched either way) are identical — pinned in
-    tests/test_round13_opt.py."""
-    src = _sql_of(shingles)
-    if isinstance(shingles, str):
-        shingles = F.col(shingles)
-    if src is not None:
-        mins = ",".join(
-            f"array_min(transform(mhb, h -> xxhash64(h, {i})))"
-            for i in range(n_hashes)
-        )
-        return F.expr(
-            f"element_at(transform(array(transform({src}, "
-            f"s -> xxhash64(s))), mhb -> array({mins})), 1)"
-        )
-    base = F.transform(shingles, lambda s: F.xxhash64(s))
-
-    def _mins(b: Column) -> Column:
-        return F.array(
-            *[
-                F.array_min(
-                    F.transform(b, lambda h: F.xxhash64(h, F.lit(i)))
-                ).alias(f"mh{i}")
-                for i in range(n_hashes)
-            ]
-        )
-
-    return F.element_at(F.transform(F.array(base), _mins), 1)
+    The base ``transform(shingles, xxhash64)`` is bound to a lambda
+    variable via a single-element-array transform — a let-binding
+    CollapseProject cannot inline back into the consuming lambdas — so
+    the per-shingle STRING hash runs ONCE per row instead of once per
+    signature element."""
+    src = _ref(shingles)
+    mins = ",".join(
+        f"array_min(transform(mhb, h -> xxhash64(h, {i})))"
+        for i in range(n_hashes)
+    )
+    return F.expr(
+        f"element_at(transform(array(transform({src}, "
+        f"s -> xxhash64(s))), mhb -> array({mins})), 1)"
+    )
 
 
 def lsh_band_hashes_fast(
-    signature: Column | str, bands: int, rows_per_band: int
+    signature: str, bands: int, rows_per_band: int
 ) -> Column:
-    """Fast-path band hashes: fold each signature slice with long-input
-    ``xxhash64`` (band index as the fold seed) — integer-only.
+    """Fast-path band keys for the signature column named ``signature``:
+    fold each signature slice with long-input ``xxhash64`` (band index
+    as the fold seed) — integer-only.
 
     Sentinel (all-null) signatures — shingle-less documents, see
     :func:`minhash_signature_fast` — get an EMPTY band array, mirroring
@@ -329,36 +236,45 @@ def lsh_band_hashes_fast(
     without this every shingle-less document would share identical band
     keys and one quadratic bucket per band (all pairs later rejected by
     the Jaccard refine anyway, since two empty shingle sets score 0).
-    They remain exact-dedup-able via their fingerprints.
-
-    Pass a NAMED signature column (see :func:`lsh_band_hashes` — the
-    generated SQL references it per band)."""
-    src = _sql_of(signature)
-    if isinstance(signature, str):
-        signature = F.col(signature)
-    if src is not None:
-        # ONE expr string (r12) — same xxhash64 fold per band
-        keys = ",".join(
-            f"CAST(aggregate(slice({src}, {j * rows_per_band + 1}, "
-            f"{rows_per_band}), CAST({j} AS BIGINT), "
-            "(acc, x) -> xxhash64(acc, x)) AS STRING)"
-            for j in range(bands)
-        )
-        return F.expr(
-            f"IF(isnull(element_at({src}, 1)), "
-            f"CAST(array() AS ARRAY<STRING>), array({keys}))"
-        )
-    keys = F.array(
-        *[
-            F.aggregate(
-                F.slice(signature, j * rows_per_band + 1, rows_per_band),
-                F.lit(j).cast("long"),
-                lambda acc, x: F.xxhash64(acc, x),
-            ).cast("string")
-            for j in range(bands)
-        ]
+    They remain exact-dedup-able via their fingerprints."""
+    src = _ref(signature)
+    keys = ",".join(
+        f"CAST(aggregate(slice({src}, {j * rows_per_band + 1}, "
+        f"{rows_per_band}), CAST({j} AS BIGINT), "
+        "(acc, x) -> xxhash64(acc, x)) AS STRING)"
+        for j in range(bands)
     )
-    return F.when(
-        F.element_at(signature, 1).isNull(),
-        F.array().cast("array<string>"),
-    ).otherwise(keys)
+    return F.expr(
+        f"IF(isnull(element_at({src}, 1)), "
+        f"CAST(array() AS ARRAY<STRING>), array({keys}))"
+    )
+
+
+class SketchImpl(NamedTuple):
+    """One ``hash_impl``: its signature builder, its band builder, and
+    the scheme tag a dedup index persists to name its stored
+    signature/band-key format."""
+
+    signature: Callable[[str, int], Column]
+    bands: Callable[[str, int, int], Column]
+    scheme: str
+
+
+#: ``hash_impl`` -> builders + scheme tag.  'md5x' = one md5 per shingle
+#: + integer permutations (oracle parity); 'xx-fast' = one xxhash64 per
+#: shingle + xxhash64 permutations.  The tags are persisted in index
+#: metadata and must stay byte-identical, or existing indexes stop
+#: opening.
+SKETCH_IMPLS = {
+    "md5": SketchImpl(minhash_signature, lsh_band_hashes, "md5x"),
+    "fast": SketchImpl(minhash_signature_fast, lsh_band_hashes_fast, "xx-fast"),
+}
+
+
+def sketch_impl(hash_impl: str) -> SketchImpl:
+    """The :class:`SketchImpl` for ``hash_impl`` (``"md5"`` or
+    ``"fast"``); ``ValueError`` on anything else."""
+    try:
+        return SKETCH_IMPLS[hash_impl]
+    except KeyError:
+        raise ValueError(f"unknown hash_impl {hash_impl!r}") from None

@@ -25,10 +25,9 @@ from pyspark.storagelevel import StorageLevel
 
 from fastdb_spark.functions.sketches import (
     hamming60,
-    lsh_band_hashes,
-    minhash_signature,
     simhash60,
     simhash_bands,
+    sketch_impl,
 )
 from fastdb_spark.functions.text import (
     char_shingles,
@@ -352,15 +351,7 @@ def minhash_lsh_pairs(
     different banding buckets — no duckdb twin).  The Jaccard refine is
     identical either way, and exact duplicates collide in every band
     under both."""
-    from fastdb_spark.functions.sketches import (
-        lsh_band_hashes_fast,
-        minhash_signature_fast,
-    )
-
-    mk_sig = minhash_signature if hash_impl == "md5" else minhash_signature_fast
-    mk_bands = lsh_band_hashes if hash_impl == "md5" else lsh_band_hashes_fast
-    if hash_impl not in ("md5", "fast"):
-        raise ValueError(f"unknown hash_impl {hash_impl!r}")
+    impl = sketch_impl(hash_impl)
     rows = n_hashes // bands
     # stage pre-explode: the banded set duplicates the shingle payload
     # `bands` times; caching the compact (id, sh, sig) frame instead keeps
@@ -369,11 +360,11 @@ def minhash_lsh_pairs(
         df.select(
             F.col(id_col),
             word_shingles(F.col(text_col), shingle_k).alias("sh"),
-        ).withColumn("sig", mk_sig(F.col("sh"), n_hashes))
+        ).withColumn("sig", impl.signature("sh", n_hashes))
     )
     banded = keyed.select(
         id_col,
-        F.explode(mk_bands(F.col("sig"), bands, rows)).alias("band"),
+        F.explode(impl.bands("sig", bands, rows)).alias("band"),
     )
     pairs = _candidate_pairs(
         banded, keyed.select(id_col, "sh"), id_col, "band",

@@ -40,7 +40,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from fastdb_spark.functions.sketches import lsh_band_hashes, minhash_signature
+from fastdb_spark.functions.sketches import sketch_impl
 from fastdb_spark.functions.text import doc_fingerprint, word_shingles
 from fastdb_spark.locks import table_write_lock
 from fastdb_spark.pipeline.dedup import (
@@ -50,16 +50,6 @@ from fastdb_spark.pipeline.dedup import (
 )
 
 _META = "_meta.json"
-
-#: sketch-scheme marker per hash implementation.  The marker names the
-#: STORED band-key/signature format (ADVICE r6: recording 'md5x' for
-#: xxhash64-permuted fast indexes would misdescribe them to any consumer
-#: keying off sketch_scheme alone): 'md5x' = one md5 per shingle +
-#: integer permutations; 'xx-fast' = one xxhash64 per shingle + xxhash64
-#: permutations.  Upserts require the index marker to be the one its
-#: recorded hash_impl produces TODAY — an index persisted under any
-#: older in-place format change is refused with a rebuild message.
-SKETCH_SCHEMES = {"md5": "md5x", "fast": "xx-fast"}
 
 #: default id-hash partition count for the three index tables.  Removal
 #: rewrites only the partitions holding removed ids, so the takedown bill
@@ -95,24 +85,16 @@ def _sketch(
     over raw shingles either way, so final dedup decisions are
     identical in expectation; exact duplicates collide in every band
     under both."""
-    from fastdb_spark.functions.sketches import (
-        lsh_band_hashes_fast,
-        minhash_signature_fast,
-    )
-
-    if hash_impl not in ("md5", "fast"):
-        raise ValueError(f"unknown hash_impl {hash_impl!r}")
-    mk_sig = minhash_signature if hash_impl == "md5" else minhash_signature_fast
-    mk_bands = lsh_band_hashes if hash_impl == "md5" else lsh_band_hashes_fast
+    impl = sketch_impl(hash_impl)
     rows = n_hashes // bands
     return df.select(
         F.col(id_col),
         doc_fingerprint(F.col(text_col)).alias("fingerprint"),
         word_shingles(F.col(text_col), shingle_k).alias("sh"),
     ).withColumn(
-        "sig", mk_sig(F.col("sh"), n_hashes)
+        "sig", impl.signature("sh", n_hashes)
     ).withColumn(
-        "bands", mk_bands(F.col("sig"), bands, rows)
+        "bands", impl.bands("sig", bands, rows)
     )
 
 
@@ -233,7 +215,7 @@ def build_dedup_index(
                 # Upserts refuse indexes whose marker is not the one
                 # their hash_impl produces today (rebuild_dedup_index
                 # migrates in one call).
-                "sketch_scheme": SKETCH_SCHEMES[hash_impl],
+                "sketch_scheme": sketch_impl(hash_impl).scheme,
             },
             f,
         )
@@ -434,7 +416,7 @@ def _check_scheme(p: dict, path: str) -> None:
     recorded ``hash_impl`` produces today — banding a new batch against
     them would match zero buckets and silently disable near-dup
     detection."""
-    expect = SKETCH_SCHEMES[p.get("hash_impl", "md5")]
+    expect = sketch_impl(p.get("hash_impl", "md5")).scheme
     if p.get("sketch_scheme") != expect:
         raise ValueError(
             f"dedup index at {path!r} was persisted under sketch scheme "
@@ -471,26 +453,14 @@ def rebuild_dedup_index(
         hash_impl = hash_impl or p.get("hash_impl", "md5")
         n_hashes = n_hashes or p["n_hashes"]
         bands = bands or p["bands"]
-        if hash_impl not in SKETCH_SCHEMES:
-            raise ValueError(f"unknown hash_impl {hash_impl!r}")
-        from fastdb_spark.functions.sketches import (
-            lsh_band_hashes_fast,
-            minhash_signature_fast,
-        )
-
-        mk_sig = (
-            minhash_signature if hash_impl == "md5" else minhash_signature_fast
-        )
-        mk_bands = (
-            lsh_band_hashes if hash_impl == "md5" else lsh_band_hashes_fast
-        )
+        impl = sketch_impl(hash_impl)
         sh = spark.read.parquet(os.path.join(path, "shingles"))
         id_col = next(
             c for c in sh.columns if c not in ("sh", "id_bucket")
         )
         banded = (
-            sh.withColumn("sig", mk_sig(F.col("sh"), n_hashes))
-            .withColumn("bands", mk_bands(F.col("sig"), bands, n_hashes // bands))
+            sh.withColumn("sig", impl.signature("sh", n_hashes))
+            .withColumn("bands", impl.bands("sig", bands, n_hashes // bands))
             .select(F.explode("bands").alias("band"), F.col(id_col))
         )
         # bands/ derives from shingles/ only, so the overwrite has no
@@ -520,7 +490,7 @@ def rebuild_dedup_index(
                 "hash_impl": hash_impl,
                 "n_hashes": n_hashes,
                 "bands": bands,
-                "sketch_scheme": SKETCH_SCHEMES[hash_impl],
+                "sketch_scheme": impl.scheme,
             }
         )
         with open(_params_path(path), "w") as f:

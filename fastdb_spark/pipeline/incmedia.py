@@ -366,11 +366,13 @@ def media_index_probe(
     so concurrent swaps cannot invalidate the returned frame."""
     p = _load_params(path)
     id_col = p.get("id_col", "media_id")
-    from fastdb_spark.cachereg import release_staged, stage_adaptive
+    from fastdb_spark.cachereg import release_staged, stage
 
     with table_write_lock(os.path.normpath(path)):
-        # decode wide, maintain narrow (see build_media_index)
-        hashes = stage_adaptive(
+        # plain stage: on this read-only probe stage_adaptive's narrowed
+        # view measured no faster than the cached layout in interleaved
+        # A/Bs (build and upsert, where it did help, keep it)
+        hashes = stage(
             _hash_frame(
                 new_media,
                 id_col,

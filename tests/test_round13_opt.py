@@ -1,21 +1,14 @@
 """Round-13 optimization equivalence pins.
 
-Three families of change, all required to be VALUE-IDENTICAL:
+Two families of change, both required to be VALUE-IDENTICAL:
 
-1. The sketch expr-string fast path is revived: Spark 4 removed
-   ``Column.expr()`` from the classic java Column, so r12's ``_sql_of``
-   raised on every call and the builders silently always took the
-   O(n_hashes) py4j Column loops.  The r13 ``_sql_of`` introspects the
-   Column node and accepts ONLY simple named attributes (which also
-   closes the ADVICE r12 "Expression.sql() is best-effort" finding) —
-   these tests pin expr-path values against the Column-API fallback.
-2. Loop-invariant subexpressions are hoisted out of HOF lambdas with a
+1. Loop-invariant subexpressions are hoisted out of HOF lambdas with a
    let-binding (``element_at(transform(array(bound), x -> body), 1)``)
    that CollapseProject cannot inline back: ``minhash_signature_fast``'s
    base hash array (was re-evaluated once per signature element) and
    ``with_ivf_cluster``'s per-row ``norm(v)`` (was re-folded once per
    centroid).  Pinned against verbatim inline copies of the old trees.
-3. ``tiny_local_df`` parses DDL via ``StructType.fromDDL`` (ADVICE r12:
+2. ``tiny_local_df`` parses DDL via ``StructType.fromDDL`` (ADVICE r12:
    the comma split broke on ``decimal(10,2)``) and accepts typed
    StructType schemas, routing timestamps through Arrow.
 """
@@ -90,45 +83,7 @@ def shingle_corpus(spark):
     return spark.createDataFrame(rows, "doc_id long, sh array<string>")
 
 
-# --- 1. revived expr-string fast path ----------------------------------------
-
-
-def test_sql_of_accepts_only_simple_attributes(spark):
-    assert sk._sql_of("sig") == "`sig`"
-    assert sk._sql_of(F.col("sh")) == "`sh`"
-    # computed expressions, dotted paths, exotic names -> Column fallback
-    assert sk._sql_of(F.concat(F.col("a"), F.lit("x"))) is None
-    assert sk._sql_of(F.col("a.b")) is None
-    assert sk._sql_of("not an identifier!") is None
-
-
-@pytest.mark.parametrize("n_hashes,bands", [(12, 4), (8, 2)])
-def test_minhash_md5x_expr_equals_column_api(spark, shingle_corpus,
-                                             n_hashes, bands):
-    """The expr-string form (fast path, fires for named columns) must
-    produce the identical md5x signature + band keys as the Column-API
-    fallback (forced via a non-stringifiable input expression)."""
-    rows = n_hashes // bands
-    fast = shingle_corpus.withColumn(
-        "sig", sk.minhash_signature(F.col("sh"), n_hashes)
-    ).withColumn("bands", sk.lsh_band_hashes(F.col("sig"), bands, rows))
-    # identity-wrapped input does not stringify -> Column API path
-    slow = shingle_corpus.withColumn(
-        "sig",
-        sk.minhash_signature(F.slice(F.col("sh"), 1, 1 << 30), n_hashes),
-    ).withColumn(
-        "bands",
-        sk.lsh_band_hashes(
-            F.slice(F.col("sig"), 1, 1 << 30), bands, rows
-        ),
-    )
-    a = {r["doc_id"]: (r["sig"], r["bands"]) for r in fast.collect()}
-    b = {r["doc_id"]: (r["sig"], r["bands"]) for r in slow.collect()}
-    assert a == b
-    # the fast path actually fired: expr-parsed lambdas keep their SQL
-    # variable names ("s"), the Column-API fallback generates x_N names
-    plan = fast._jdf.queryExecution().analyzed().toString()
-    assert "lambda s#" in plan
+# --- 1. minhash_signature_fast base-hash hoist ------------------------------
 
 
 def test_minhash_fast_base_hash_evaluated_once(spark, shingle_corpus):
@@ -137,7 +92,7 @@ def test_minhash_fast_base_hash_evaluated_once(spark, shingle_corpus):
     every edge row (incl. the empty-array all-NULL sentinel)."""
     n_hashes = 12
     new = shingle_corpus.withColumn(
-        "sig", sk.minhash_signature_fast(F.col("sh"), n_hashes)
+        "sig", sk.minhash_signature_fast("sh", n_hashes)
     )
     old = shingle_corpus.withColumn(
         "sig", _pre_r13_minhash_fast(F.col("sh"), n_hashes)
@@ -153,28 +108,10 @@ def test_minhash_fast_base_hash_evaluated_once(spark, shingle_corpus):
     assert plan.count("array_min") == n_hashes
     # the sentinel detector in the band builder still sees NULLs
     banded = new.withColumn(
-        "bands", sk.lsh_band_hashes_fast(F.col("sig"), 4, 3)
+        "bands", sk.lsh_band_hashes_fast("sig", 4, 3)
     )
     got = {r["doc_id"]: r["bands"] for r in banded.collect()}
     assert got[2] == []  # empty band array for shingle-less docs
-
-
-def test_minhash_fast_column_fallback_also_hoisted(spark, shingle_corpus):
-    """The Column-API fallback (non-attribute input) gets the same
-    let-binding hoist and the same values."""
-    n_hashes = 8
-    new = shingle_corpus.withColumn(
-        "sig",
-        sk.minhash_signature_fast(
-            F.slice(F.col("sh"), 1, 1 << 30), n_hashes
-        ),
-    )
-    old = shingle_corpus.withColumn(
-        "sig", _pre_r13_minhash_fast(F.col("sh"), n_hashes)
-    )
-    a = {r["doc_id"]: r["sig"] for r in new.collect()}
-    b = {r["doc_id"]: r["sig"] for r in old.collect()}
-    assert a == b
 
 
 # --- 2. with_ivf_cluster norm hoist ------------------------------------------

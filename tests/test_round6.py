@@ -524,7 +524,7 @@ def test_md5x_signature_matches_reference_python(spark):
                                "i long, sh array<string>")
     got = {
         r["i"]: list(r["sig"])
-        for r in df.select("i", minhash_signature(F.col("sh"), 8).alias("sig"))
+        for r in df.select("i", minhash_signature("sh", 8).alias("sig"))
         .collect()
     }
     for i, c in enumerate(cases):
@@ -554,9 +554,10 @@ def test_md5x_signature_matches_duckdb_oracle_arithmetic(spark, tmp_path):
     got = {
         r["doc_id"]: list(r["sig"])
         for r in df.select(
-            "doc_id",
-            minhash_signature(word_shingles(F.col("text"), 3), 12).alias("sig"),
-        ).collect()
+            "doc_id", word_shingles(F.col("text"), 3).alias("sh")
+        )
+        .select("doc_id", minhash_signature("sh", 12).alias("sig"))
+        .collect()
     }
     con = duckdb.connect()
     want = {
@@ -720,12 +721,9 @@ def test_sentinel_signatures_emit_no_bands(spark):
     )
     out = {
         r["doc_id"]: list(r["bands"])
-        for r in df.select(
-            "doc_id",
-            lsh_band_hashes(minhash_signature(F.col("sh"), 12), 4, 3).alias(
-                "bands"
-            ),
-        ).collect()
+        for r in df.withColumn("sig", minhash_signature("sh", 12))
+        .select("doc_id", lsh_band_hashes("sig", 4, 3).alias("bands"))
+        .collect()
     }
     assert out[0] == []  # sentinel -> no bands
     assert len(out[1]) == 4 and all(b.startswith("b") for b in out[1])

@@ -29,8 +29,8 @@ def test_fast_sentinel_signatures_emit_no_bands(spark):
         "doc_id long, sh array<string>",
     )
     out = (
-        df.withColumn("sig", minhash_signature_fast(F.col("sh"), 12))
-        .withColumn("bands", lsh_band_hashes_fast(F.col("sig"), 4, 3))
+        df.withColumn("sig", minhash_signature_fast("sh", 12))
+        .withColumn("bands", lsh_band_hashes_fast("sig", 4, 3))
         .select("doc_id", "bands")
         .collect()
     )

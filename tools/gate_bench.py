@@ -16,24 +16,33 @@ import sys
 import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-os.chdir(REPO)
-sys.path.insert(0, REPO)
 
 
-def main() -> None:
+def main(gates: list[str] | None = None) -> None:
+    gates = sys.argv[1:] if gates is None else gates
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     runs = int(os.environ.get("GATE_RUNS", "3"))
 
+    os.chdir(REPO)
+    sys.path.insert(0, REPO)
     import __spark_entry__ as entrymod
+
+    qmap = entrymod.queries()
+    unknown = [g for g in gates if g not in qmap]
+    if unknown:
+        sys.exit(
+            f"unknown gate(s): {', '.join(unknown)} "
+            "(valid names are the keys of __spark_entry__.queries())"
+        )
+
     from fastdb_spark.session import get_spark
 
     spark = get_spark("fastdb-gate-bench", master=f"local[{cpus}]")
     spark.range(1_000_000).selectExpr("sum(id)").collect()
-    qmap = entrymod.queries()
     out: dict = {"sf_dir": sf_dir, "cpus": cpus, "runs": runs,
                  "loadavg_start": round(os.getloadavg()[0], 2)}
-    for gate in sys.argv[1:]:
+    for gate in gates:
         fn = qmap[gate]
         seen = []
         for _ in range(runs):

@@ -36,10 +36,26 @@ import __spark_entry__ as entrymod
 from fastdb_spark.session import get_spark
 
 
-def _force(df) -> int:
-    # noop datasource executes the whole plan without materializing output
+def run_once(spark, fn, sf_dir: str) -> tuple[float, float]:
+    """Run one gate the bench way and return ``(total_s, build_s)``:
+    build ``fn(spark, sf_dir)``, force it end to end with the noop sink
+    (full computation, no driver collect), then release tracked stages
+    and drop any remaining cached blocks so the next run reuses
+    nothing.  ``total_s`` times build + execute — some operators stage
+    intermediates eagerly (persist+count), so timing only the final
+    action would undercount; ``build_s`` is the part before the force."""
+    from fastdb_spark.cachereg import release_staged
+    from fastdb_spark.operators.paginate import unpersist_pages
+
+    t0 = time.perf_counter()
+    df = fn(spark, sf_dir)
+    build_s = time.perf_counter() - t0
     df.write.format("noop").mode("overwrite").save()
-    return 0
+    total_s = time.perf_counter() - t0
+    release_staged()
+    unpersist_pages()
+    spark.catalog.clearCache()
+    return total_s, build_s
 
 
 def _host_cpu_sample() -> tuple[int, int, int] | None:
@@ -96,26 +112,13 @@ def main() -> None:
         best = None
         seen: list[float] = []
         while True:
-            # time build + execute: some operators stage intermediates
-            # eagerly (persist+count), so timing only the final action
-            # would undercount.  min-of-N: the shared test host shows up
-            # to 3x run-to-run CPU-steal variance, and the first run pays
-            # one-time whole-stage-codegen compilation; the min is the
+            # min-of-N: the shared test host shows up to 3x run-to-run
+            # CPU-steal variance, and the first run pays one-time
+            # whole-stage-codegen compilation; the min is the
             # reproducible per-query cost.
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            _force(df)
-            dt = time.perf_counter() - t0
+            dt = run_once(spark, fn, sf_dir)[0]
             seen.append(round(dt, 4))
             best = dt if best is None else min(best, dt)
-            # each query self-contained: release tracked stages, then
-            # drop any remaining cached blocks — no cross-run reuse
-            from fastdb_spark.cachereg import release_staged
-            from fastdb_spark.operators.paginate import unpersist_pages
-
-            release_staged()
-            unpersist_pages()
-            spark.catalog.clearCache()
             if len(seen) < runs:
                 continue
             # expensive gates get extra runs: min-of-2 cannot reject a

@@ -24,7 +24,7 @@ import hashlib
 import json
 import struct
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from fastdb_spark.functions.vectors import (
@@ -35,9 +35,11 @@ from fastdb_spark.functions.vectors import (
     double_array_lit,
     int_array_lit,
     let1,
+    nested_double_array_lit,
     norm,
     norm_py,
 )
+from fastdb_spark.localrel import tiny_local_df
 
 #: index-root sidecar recording build-time parameters (notably the
 #: assignment strategy — ADVICE r10: maintenance must replay the BUILD's
@@ -160,7 +162,9 @@ def with_lsh_bucket(
             f"got n_planes={n_planes}"
         )
     v = as_double_array(F.col(vec_col))
-    planes = _nested_array_lit([_hyperplane(p, dim) for p in range(n_planes)])
+    planes = nested_double_array_lit(
+        [_hyperplane(p, dim) for p in range(n_planes)]
+    )
     # ONE transform lambda over a nested plane literal (r12, same move as
     # with_ivf_cluster): per-plane arithmetic unchanged — round-9 dot
     # sign test, weight 1 << p, integer sum — so buckets are
@@ -399,40 +403,6 @@ def ivf_centroids(
     return _seed_training_vectors(embeddings, n_clusters, id_col, vec_col)
 
 
-def _tiny_local_df(spark, rows: list[tuple], schema: str) -> DataFrame:
-    """KB-sized driver-side table as ONE Arrow batch (guide §4/§6).
-
-    ``createDataFrame(list_of_tuples)`` parallelizes the pickled rows
-    over defaultParallelism partitions, and a later ``coalesce(1)``
-    (wanted for the one-file layout tables) then evaluates all N
-    Python-RDD parents SEQUENTIALLY in a single task — measured ~6 s
-    per 25-row centroid write on local[32], which every index build
-    paid.  Routing through pandas makes the frame an Arrow-backed
-    local relation: same rows, same explicit schema, no Python worker
-    in the write path (~0.2 s).  Doubles cross Arrow bit-exactly, so
-    written bytes are value-identical."""
-    from fastdb_spark.localrel import tiny_local_df
-
-    return tiny_local_df(spark, rows, schema)
-
-
-def _nested_array_lit(vectors: list[list[float]]) -> Column:
-    """ONE ``array<array<double>>`` literal for a centroid/plane list.
-
-    A single nested literal keeps the expression tree O(1) in the list
-    length; the pre-r12 shape (k separate per-vector subtrees, each with
-    its own lambda-bearing cosine fold) cost ~8 s of driver-side
-    analysis/optimization per materialization at k=25 (guide §7.3: very
-    large plans are single-threaded driver work) and is unbuildable at
-    SemDeDup-paper k.  Built as one SQL expression string (r12 second
-    pass: even ``F.lit(nested_list)`` round-trips py4j per ELEMENT —
-    1.0-2.1 s per construction at 25x64 — while the expr string is one
-    call, ~6 ms, bit-identical doubles)."""
-    from fastdb_spark.functions.vectors import nested_double_array_lit
-
-    return nested_double_array_lit(vectors)
-
-
 def with_ivf_cluster(
     embeddings: DataFrame,
     centroids: list[list[float]],
@@ -451,7 +421,7 @@ def with_ivf_cluster(
     the identical lowest-id tie rule — so assignments are bit-identical
     to the pre-r12 shape (regression-tested)."""
     v = as_double_array(F.col(vec_col))
-    cents = _nested_array_lit(centroids)
+    cents = nested_double_array_lit(centroids)
     cnorms = [norm_py(c) for c in centroids]
     import math as _math
 
@@ -561,7 +531,7 @@ def build_ivf_index(
         embeddings, n_clusters, id_col, vec_col, strategy=strategy, seed=seed
     )
     spark = embeddings.sparkSession
-    cent_df = _tiny_local_df(
+    cent_df = tiny_local_df(
         spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
         "cluster long, centroid array<double>",
@@ -625,7 +595,7 @@ def build_ivf_index(
             tagged, books, id_col=id_col, vec_col=vec_col,
             keep=["cluster"], keep_vec=vec_col,
         )
-    book_df = _tiny_local_df(
+    book_df = tiny_local_df(
         spark,
         [
             (i, j, books[i][j], bool(pq_residual))
@@ -883,7 +853,7 @@ def ivf_index_remove(
             # (measured on the dedup index, BENCH_SCALE r9: 5-22x
             # slower than the anti-join); large lists silently take
             # the DataFrame form
-            rm = _tiny_local_df(
+            rm = tiny_local_df(
                 spark, [(i,) for i in idlist], f"{id_col} long"
             ).localCheckpoint(eager=True)
 
@@ -1067,11 +1037,6 @@ def ivf_index_stats(
     # O(k*dim) driver calls per plan, minutes at production k — while a
     # single expr string is one call; same per-row centroid, still a
     # broadcast constant, no join, no shuffle beyond the final agg)
-    from fastdb_spark.functions.vectors import (
-        int_array_lit,
-        nested_double_array_lit,
-    )
-
     cent_expr = F.element_at(
         F.map_from_arrays(
             int_array_lit(int(r["cluster"]) for r in cents_rows),
@@ -1142,37 +1107,27 @@ def stream_ivf_index(
             f"no IVF index at {index_path}; build_ivf_index first"
         )
 
-    # micro-batches are batch-sized, not table-sized ('auto'-safe
-    # shared helper, ADVICE r8)
-    from fastdb_spark.session import tune_micro_batch_shuffle
+    from fastdb_spark.pipeline.incdedup import _stream_index
 
-    tune_micro_batch_shuffle(spark)
-
-    n_batches = {"n": 0}
-
-    def _upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        ivf_index_upsert(
+    return _stream_index(
+        spark,
+        vectors_path,
+        f"{id_col} long, {vec_col} {vec_type}",
+        checkpoint,
+        lambda batch_df: ivf_index_upsert(
             batch_df,
             index_path,
             id_col=id_col,
             vec_col=vec_col,
             dedup_ids=True,
-        )
-        n_batches["n"] += 1
-        if compact_every and n_batches["n"] % compact_every == 0:
-            ivf_index_compact(spark, index_path, min_files=compact_min_files)
-
-    reader = spark.readStream.schema(f"{id_col} long, {vec_col} {vec_type}")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(vectors_path)
-        .writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint)
+        ),
+        lambda: ivf_index_compact(
+            spark, index_path, min_files=compact_min_files
+        ),
+        compact_every,
+        available_now,
+        max_files_per_trigger,
     )
-    if available_now:
-        stream = stream.trigger(availableNow=True)
-    return stream.start()
 
 
 def _adc_score(
@@ -1333,7 +1288,7 @@ def ivfpq_search_index_many(
     # Arrow-backed LocalRelation (r12): the pickled-list form is an
     # opaque LogicalRDD whose broadcast build runs a Spark job over
     # defaultParallelism Python partitions per evaluation
-    probes = _tiny_local_df(
+    probes = tiny_local_df(
         spark,
         probe_rows,
         "query_id string, cluster int, lut array<double>, "

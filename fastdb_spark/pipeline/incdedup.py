@@ -28,8 +28,11 @@ document >= threshold, or (c) the in-batch greedy-MIS near-dup pass
 (keep x iff no KEPT lower-id near neighbor — replay-idempotent,
 ``dedup.greedy_mis_drops``; ``curate_corpus`` keeps the simpler
 one-shot rule, which coincides on clique-shaped duplicate families)
-drops it.  Concurrent upserts serialize on the table write lock
-(``locks.table_write_lock``) — same lost-update story as storage.py.
+drops it.  :func:`dedup_index_probe` and :func:`dedup_index_upsert` share
+one classification (:func:`_classify`), so the upsert appends exactly
+what the probe calls ``fresh``.  Concurrent upserts serialize on the
+table write lock (``locks.table_write_lock``) — same lost-update story
+as storage.py.
 """
 
 from __future__ import annotations
@@ -313,7 +316,6 @@ def _append_survivors(
     batches above ``id_ceiling`` are staged to a scratch parquet
     instead — the append reads the scratch copy, no unbounded driver
     collect — and ``ids`` comes back ``None``."""
-    mode = "overwrite" if overwrite else "append"
     # NOTE: localCheckpoint blocks are freed by the ContextCleaner when
     # the checkpointed RDD is garbage-collected on the driver — an
     # explicit unpersist() on the DataFrame is a no-op (ADVICE r6), so
@@ -321,20 +323,13 @@ def _append_survivors(
     # and die with the local `surv` reference.
     #
     # Bucket alignment happens HERE, before the one checkpoint all three
-    # writes share: repartitioning on id_bucket routes each bucket to
-    # exactly one task (one file per bucket per append — a raw
-    # partitionBy write emits tasks x buckets tiny files, which made the
-    # first-cut layout 2-3.5x slower than flat at 1M docs), and doing it
-    # pre-checkpoint means the three table writes pay ZERO shuffles
+    # writes share, so the three table writes pay ZERO shuffles
     # (per-write repartition cost the sf0.1 index gates +4.6 s each).
     # The bands explode below preserves partitioning, so exploded rows
     # stay bucket-aligned.
-    if id_buckets:
-        surv = surv.withColumn(
-            "id_bucket",
-            F.pmod(F.col(id_col), F.lit(id_buckets)).cast("int"),
-        ).repartition("id_bucket")
-    surv = surv.localCheckpoint(eager=True)
+    surv = _align_id_buckets(surv, id_col, id_buckets).localCheckpoint(
+        eager=True
+    )
     scratch = None
     try:
         # ONE bounded action decides small-vs-backfill AND collects the
@@ -352,31 +347,6 @@ def _append_survivors(
             n = len(head)
             ids = sorted(r[id_col] for r in head)
 
-        def _write(df: DataFrame, table: str) -> None:
-            # hive-partition by id hash so dedup_index_remove prunes its
-            # rewrites to the partitions holding removed ids; the frame
-            # is already bucket-aligned (repartition above), so this is
-            # shuffle-free.  maxRecordsPerFile re-splits pathological
-            # buckets at backfill scale.
-            tdir = os.path.join(path, table)
-            if id_buckets:
-                w = df.write.option("maxRecordsPerFile", 10_000_000)
-                if overwrite:
-                    # a REBUILD under partitionOverwriteMode=dynamic
-                    # replaces only the partitions present in the new
-                    # build — bucket partitions from a previous larger
-                    # index at the same path would survive, resurrecting
-                    # stale (possibly taken-down) entries (ADVICE r8);
-                    # force static per-write so the whole table is
-                    # replaced regardless of session conf
-                    w = w.option("partitionOverwriteMode", "static")
-                w.partitionBy("id_bucket").mode(mode).parquet(tdir)
-                _seed_if_empty(
-                    surv.sparkSession, tdir, df.drop("id_bucket").schema
-                )
-            else:
-                df.write.mode(mode).parquet(tdir)
-
         bkt = ["id_bucket"] if id_buckets else []
         # the three table writes read the SAME checkpointed partitions
         # and land in disjoint directories — overlap them (guide §2.6)
@@ -385,7 +355,9 @@ def _append_survivors(
         from fastdb_spark.parallel import run_independent_jobs
 
         run_independent_jobs(
-            lambda spec: _write(*spec),
+            lambda spec: _write_id_bucketed(
+                spec[0], os.path.join(path, spec[1]), id_buckets, overwrite
+            ),
             [
                 (surv.select("fingerprint", id_col, *bkt), "fingerprints"),
                 (
@@ -468,22 +440,12 @@ def rebuild_dedup_index(
         # refreshByPath during the write can never trigger recomputation
         banded = banded.localCheckpoint(eager=True)
         nb = p.get("id_buckets")
-        if nb:
-            banded.withColumn(
-                "id_bucket", F.pmod(F.col(id_col), F.lit(nb)).cast("int")
-            ).repartition("id_bucket").write.option(
-                "maxRecordsPerFile", 10_000_000
-            ).option(
-                # full-table rebuild: never leave stale partitions behind
-                # under a dynamic session conf (ADVICE r8)
-                "partitionOverwriteMode", "static"
-            ).partitionBy("id_bucket").mode("overwrite").parquet(
-                os.path.join(path, "bands")
-            )
-        else:
-            banded.write.mode("overwrite").parquet(
-                os.path.join(path, "bands")
-            )
+        _write_id_bucketed(
+            _align_id_buckets(banded, id_col, nb),
+            os.path.join(path, "bands"),
+            nb,
+            overwrite=True,
+        )
         n = sh.select(id_col).distinct().count()
         p.update(
             {
@@ -534,39 +496,26 @@ def stream_dedup_index(
     single-writer discipline as the upserts, no separate maintenance
     job to schedule."""
     _check_scheme(_load_params(index_path), index_path)
-
-    # micro-batches are batch-sized, not table-sized (same rationale as
-    # streaming/ingest.py; 'auto'-safe shared helper, ADVICE r8)
-    from fastdb_spark.session import tune_micro_batch_shuffle
-
-    tune_micro_batch_shuffle(spark)
-
-    n_batches = {"n": 0}
-
-    def _upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        dedup_index_upsert(
+    return _stream_index(
+        spark,
+        docs_path,
+        f"{id_col} long, {text_col} string",
+        checkpoint,
+        lambda batch_df: dedup_index_upsert(
             spark,
             batch_df,
             index_path,
             id_col=id_col,
             text_col=text_col,
             max_bucket_size=max_bucket_size,
-        )
-        n_batches["n"] += 1
-        if compact_every and n_batches["n"] % compact_every == 0:
-            compact_dedup_index(spark, index_path, min_files=compact_min_files)
-
-    reader = spark.readStream.schema(f"{id_col} long, {text_col} string")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(docs_path)
-        .writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint)
+        ),
+        lambda: compact_dedup_index(
+            spark, index_path, min_files=compact_min_files
+        ),
+        compact_every,
+        available_now,
+        max_files_per_trigger,
     )
-    if available_now:
-        stream = stream.trigger(availableNow=True)
-    return stream.start()
 
 
 def dedup_index_remove(
@@ -954,6 +903,93 @@ def _compact_tables(
     return out
 
 
+def _align_id_buckets(df: DataFrame, id_col: str, nb: int | None) -> DataFrame:
+    """``df`` plus ``id_bucket = pmod(id, nb)``, repartitioned on it so
+    each bucket lands in exactly one task: one file per bucket per write
+    (a raw ``partitionBy`` write emits tasks x buckets tiny files, which
+    made the first-cut layout 2-3.5x slower than flat at 1M docs).  A
+    caller that writes several tables from one materialized frame aligns
+    BEFORE materializing, so every write is shuffle-free.  ``nb=None``
+    (flat layout) returns ``df`` unchanged."""
+    if not nb:
+        return df
+    return df.withColumn(
+        "id_bucket", F.pmod(F.col(id_col), F.lit(nb)).cast("int")
+    ).repartition("id_bucket")
+
+
+def _write_id_bucketed(
+    df: DataFrame, tdir: str, nb: int | None, overwrite: bool
+) -> None:
+    """Shared table writer of the id-bucket layout (text and media
+    indexes): ``df`` from :func:`_align_id_buckets` is hive-partitioned
+    by ``id_bucket`` so the takedown prunes its rewrites to the
+    partitions holding removed ids; ``nb=None`` writes flat.
+    ``maxRecordsPerFile`` re-splits pathological buckets at backfill
+    scale.  An overwrite is forced static: under a dynamic session
+    ``partitionOverwriteMode`` a rebuild would replace only the
+    partitions present in the new frame, and bucket partitions of a
+    previous larger index at the same path would survive, resurrecting
+    stale (possibly taken-down) entries (ADVICE r8).  A write that
+    leaves the table with no part files is re-seeded
+    (:func:`_seed_if_empty`) so the next read still infers a schema."""
+    mode = "overwrite" if overwrite else "append"
+    if not nb:
+        df.write.mode(mode).parquet(tdir)
+        return
+    w = df.write.option("maxRecordsPerFile", 10_000_000)
+    if overwrite:
+        w = w.option("partitionOverwriteMode", "static")
+    w.partitionBy("id_bucket").mode(mode).parquet(tdir)
+    _seed_if_empty(df.sparkSession, tdir, df.drop("id_bucket").schema)
+
+
+def _stream_index(
+    spark: SparkSession,
+    source_path: str,
+    schema: str,
+    checkpoint: str,
+    upsert,
+    compact,
+    compact_every: int | None,
+    available_now: bool,
+    max_files_per_trigger: int | None,
+):
+    """Shared ``foreachBatch`` loop of the index streams (text, media,
+    semantic, IVF): ``readStream`` over a parquet file source with the
+    explicit ``schema`` (file-source streams need one), ``upsert(batch)``
+    per micro-batch and ``compact()`` after every ``compact_every``-th
+    one — compaction runs between triggers under the same single-writer
+    discipline as the upserts, no separate maintenance job to schedule.
+    Micro-batches are batch-sized, not table-sized, so the shuffle width
+    is tuned down first (same rationale as ``streaming/ingest.py``;
+    'auto'-safe shared helper, ADVICE r8).  Returns the started
+    ``StreamingQuery``."""
+    from fastdb_spark.session import tune_micro_batch_shuffle
+
+    tune_micro_batch_shuffle(spark)
+    n_batches = 0
+
+    def _batch(batch_df: DataFrame, epoch_id: int) -> None:
+        nonlocal n_batches
+        upsert(batch_df)
+        n_batches += 1
+        if compact_every and n_batches % compact_every == 0:
+            compact()
+
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    stream = (
+        reader.parquet(source_path)
+        .writeStream.foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint)
+    )
+    if available_now:
+        stream = stream.trigger(availableNow=True)
+    return stream.start()
+
+
 #: audit of the most recent upsert's candidate-cap truncation: docs whose
 #: vs-index candidate set was cut at ``max_bucket_size`` MIGHT have had
 #: their one true near-dup dropped.  ``truncated_docs`` is a FLOOR capped
@@ -975,8 +1011,8 @@ def _near_dups_vs_index(
     audit: dict | None = None,
 ) -> DataFrame:
     """Ids of ``fresh`` docs whose Jaccard vs ANY indexed document meets
-    the stored threshold — the vs-index near-dup leg shared by
-    :func:`dedup_index_upsert` and :func:`dedup_index_probe`.  ``fresh``
+    the stored threshold — the vs-index near-dup leg of
+    :func:`_classify` (probe and upsert alike).  ``fresh``
     carries (id, sh, bands) from :func:`_sketch`.  ``max_bucket_size``
     caps candidates PER NEW doc (the refine only needs one hit; never
     the index side); truncated docs are recorded in ``audit`` when one
@@ -1039,6 +1075,71 @@ def _near_dups_vs_index(
     )
 
 
+def _classify(
+    spark: SparkSession,
+    sk: DataFrame,
+    path: str,
+    p: dict,
+    id_col: str,
+    max_bucket_size: int | None,
+    audit: dict | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(verdicts, surv)`` for the staged sketch ``sk`` of a batch vs
+    the index at ``path`` — the one classification behind
+    :func:`dedup_index_probe` and :func:`dedup_index_upsert`.
+
+    verdicts: one ``(id, verdict)`` row per batch document, verdict in
+    ``exact`` / ``in_batch_exact`` / ``near`` / ``in_batch_near`` /
+    ``fresh`` (first match wins, in that order).  surv: the ``fresh``
+    documents with every ``sk`` column — what an upsert appends.
+    ``audit`` is forwarded to :func:`_near_dups_vs_index` (one extra
+    bounded collect; the probe passes none).  Caller holds the lock and
+    releases the staged frames."""
+    fps = spark.read.parquet(os.path.join(path, "fingerprints")).select(
+        "fingerprint"
+    )
+    # (a) exact vs index + in-batch keep-min-id
+    exact = sk.join(fps, on="fingerprint", how="left_semi").select(id_col)
+    rest = sk.join(fps, on="fingerprint", how="left_anti")
+    canon = rest.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
+    keepmin = rest.join(canon, on=[id_col, "fingerprint"], how="left_semi")
+    in_batch_exact = rest.join(
+        keepmin.select(id_col), on=id_col, how="left_anti"
+    ).select(id_col)
+    # (b) near-dup vs index: band-bucket join against the stored
+    # buckets, shingle refine against the stored shingle sets.  Lazy
+    # checkpoint: the chain is otherwise evaluated TWICE — once inside
+    # the greedy-MIS fixpoint actions of (c) and again when the verdicts
+    # or the append's survivors materialize (exchange reuse does not
+    # cross actions).  Computed on first use, reused after; the tiny id
+    # frame is all that is stored (r13).
+    near = _near_dups_vs_index(
+        spark, keepmin, path, p, id_col, max_bucket_size, audit=audit
+    ).localCheckpoint(eager=False)
+    rest2 = keepmin.join(near, on=id_col, how="left_anti")
+    # (c) in-batch greedy-MIS near-dup (replay-idempotent rule)
+    in_batch_near = _inbatch_drops(
+        rest2, id_col, p["threshold"], max_bucket_size
+    )
+    surv = rest2.join(in_batch_near, on=id_col, how="left_anti")
+    verdicts = (
+        exact.select(id_col, F.lit("exact").alias("verdict"))
+        .unionByName(
+            in_batch_exact.select(
+                id_col, F.lit("in_batch_exact").alias("verdict")
+            )
+        )
+        .unionByName(near.select(id_col, F.lit("near").alias("verdict")))
+        .unionByName(
+            in_batch_near.select(
+                id_col, F.lit("in_batch_near").alias("verdict")
+            )
+        )
+        .unionByName(surv.select(id_col, F.lit("fresh").alias("verdict")))
+    )
+    return verdicts, surv
+
+
 def dedup_index_probe(
     spark: SparkSession,
     new_docs: DataFrame,
@@ -1058,9 +1159,10 @@ def dedup_index_probe(
     - ``in_batch_near``  — dropped by the in-batch greedy pass
     - ``fresh``          — would be appended by an upsert
 
-    Precedence is exactly the upsert's; the ``fresh`` set EQUALS the id
-    set :func:`dedup_index_upsert` would return for the same batch
-    (property-tested).  The result is materialized (lineage severed)
+    Probe and :func:`dedup_index_upsert` run the same classification
+    (:func:`_classify`), so the ``fresh`` set EQUALS the id set the
+    upsert would return for the same batch by construction (and
+    property-tested).  The result is materialized (lineage severed)
     under the table write lock, so a concurrent takedown's partition
     swap cannot invalidate the returned frame; the index is untouched
     (mtime-asserted in tests)."""
@@ -1069,61 +1171,15 @@ def dedup_index_probe(
     from fastdb_spark.cachereg import release_staged
 
     with table_write_lock(os.path.normpath(path)):
+        # pre-hash_impl indexes carry no key: they were md5
         sk = _staged_sketch(
             new_docs, id_col, text_col,
             p["shingle_k"], p["n_hashes"], p["bands"],
             p.get("hash_impl", "md5"),
         )
         try:
-            fps = spark.read.parquet(os.path.join(path, "fingerprints"))
-            exact = sk.join(
-                fps.select("fingerprint"), on="fingerprint", how="left_semi"
-            ).select(id_col)
-            rest = sk.join(exact, on=id_col, how="left_anti")
-            canon = rest.groupBy("fingerprint").agg(
-                F.min(id_col).alias(id_col)
-            )
-            keepmin = rest.join(
-                canon, on=[id_col, "fingerprint"], how="left_semi"
-            )
-            in_batch_exact = rest.join(
-                keepmin.select(id_col), on=id_col, how="left_anti"
-            ).select(id_col)
-            # lazy checkpoint: the vs-index band-join/refine chain is
-            # otherwise evaluated TWICE — once inside the greedy-MIS
-            # fixpoint actions (via rest2 -> pairs -> edges) and again
-            # when the verdict union materializes (exchange reuse does
-            # not cross actions).  Computed on first use, reused after;
-            # the tiny id frame is all that is stored (r13).
-            near = _near_dups_vs_index(
-                spark, keepmin, path, p, id_col, max_bucket_size
-            ).localCheckpoint(eager=False)
-            rest2 = keepmin.join(near, on=id_col, how="left_anti")
-            in_batch_near = _inbatch_drops(
-                rest2, id_col, p["threshold"], max_bucket_size
-            )
-            fresh = rest2.join(
-                in_batch_near, on=id_col, how="left_anti"
-            ).select(id_col)
-            out = (
-                exact.select(id_col, F.lit("exact").alias("verdict"))
-                .unionByName(
-                    in_batch_exact.select(
-                        id_col, F.lit("in_batch_exact").alias("verdict")
-                    )
-                )
-                .unionByName(
-                    near.select(id_col, F.lit("near").alias("verdict"))
-                )
-                .unionByName(
-                    in_batch_near.select(
-                        id_col, F.lit("in_batch_near").alias("verdict")
-                    )
-                )
-                .unionByName(
-                    fresh.select(id_col, F.lit("fresh").alias("verdict"))
-                )
-            ).localCheckpoint(eager=True)
+            verdicts, _ = _classify(spark, sk, path, p, id_col, max_bucket_size)
+            out = verdicts.localCheckpoint(eager=True)
         finally:
             release_staged()
     return out
@@ -1138,7 +1194,9 @@ def dedup_index_upsert(
     max_bucket_size: int | None = DEFAULT_MAX_BUCKET,
     id_ceiling: int = DEFAULT_ID_CEILING,
 ) -> list | None:
-    """Dedup ``new_docs`` against the index AND append the survivors.
+    """Dedup ``new_docs`` against the index AND append the survivors —
+    exactly the documents :func:`dedup_index_probe` calls ``fresh``
+    (both run :func:`_classify`).
 
     Returns the sorted surviving ids (materialized inside the write
     lock — the check-then-append must be atomic vs other writers), or
@@ -1165,32 +1223,9 @@ def dedup_index_upsert(
             p.get("hash_impl", "md5"),
         )
         try:
-            # (a) exact vs index + in-batch keep-min-id
-            fps = spark.read.parquet(os.path.join(path, "fingerprints"))
-            fresh = sk.join(
-                fps.select("fingerprint"), on="fingerprint", how="left_anti"
-            )
-            canon = fresh.groupBy("fingerprint").agg(
-                F.min(id_col).alias(id_col)
-            )
-            fresh = fresh.join(
-                canon, on=[id_col, "fingerprint"], how="left_semi"
-            )
-            # (b) near-dup vs index: band-bucket join against the stored
-            # buckets, shingle refine against the stored shingle sets
-            # lazy checkpoint: evaluated in the in-batch MIS fixpoint
-            # (c) AND in the append's survivor materialization — compute
-            # the band-join/refine chain once (r13, see probe)
-            dup_vs_index = _near_dups_vs_index(
-                spark, fresh, path, p, id_col, max_bucket_size,
+            _, surv = _classify(
+                spark, sk, path, p, id_col, max_bucket_size,
                 audit=LAST_UPSERT_AUDIT,
-            ).localCheckpoint(eager=False)
-            fresh = fresh.join(dup_vs_index, on=id_col, how="left_anti")
-            # (c) in-batch greedy-MIS near-dup (replay-idempotent rule)
-            surv = fresh.join(
-                _inbatch_drops(fresh, id_col, p["threshold"], max_bucket_size),
-                on=id_col,
-                how="left_anti",
             )
             ids, _n = _append_survivors(
                 surv, path, id_col, overwrite=False, id_ceiling=id_ceiling,
@@ -1199,47 +1234,3 @@ def dedup_index_upsert(
         finally:
             release_staged()
     return ids
-
-
-def stream_dedup_upserts(
-    spark: SparkSession,
-    source_dir: str,
-    index_path: str,
-    checkpoint: str,
-    schema: str = "doc_id long, text string",
-    fmt: str = "json",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> list:
-    """Structured-Streaming front end for the dedup index: consume
-    document files from ``source_dir`` as a stream and run every
-    micro-batch through :func:`dedup_index_upsert`.
-
-    ``availableNow`` trigger (drain what exists, then stop) — the batch
-    replay of a continuous ingest.  At-least-once delivery is safe: a
-    replayed batch is entirely deduped against the index it already
-    updated (the exact anti-join makes the upsert idempotent), which is
-    the same at-least-once + idempotent-merge contract the alert ingest
-    uses (``streaming/ingest.py``).  Returns the surviving ids across
-    all batches, in arrival order of the batches.
-    """
-    survivors: list = []
-
-    def handle(batch, _bid):
-        if batch.isEmpty():
-            return
-        ids = dedup_index_upsert(
-            spark, batch, index_path, id_col=id_col, text_col=text_col
-        )
-        survivors.extend(ids or [])
-
-    reader = spark.readStream.schema(schema)
-    stream = getattr(reader, fmt)(source_dir)
-    q = (
-        stream.writeStream.foreachBatch(handle)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return survivors

@@ -18,8 +18,8 @@ Index layout (``path/``):
 
 - ``hashes/``    — (phash, media_id) parquet, hive-partitioned by
   ``id_bucket = pmod(media_id, id_buckets)`` for partition-pruned
-  takedowns (the round-8 id-bucket discipline shared with the text
-  index).
+  takedowns (the round-8 id-bucket layout, written by the text
+  index's shared writer ``incdedup._write_id_bucketed``).
 - ``_meta.json`` — hash method (phash/dhash) + id_buckets; upserts
   enforce consistency (a batch hashed with the other method would match
   nothing and silently disable dedup).
@@ -29,7 +29,9 @@ iff (a) some INDEXED item's fingerprint is within ``max_hamming`` of
 its own, or (b) the in-batch greedy-MIS pass drops it (keep x iff no
 KEPT lower-id item is within ``max_hamming`` — the replay-idempotent
 rule, ``dedup.greedy_mis_drops``; at hamming 0 this is exactly
-keep-min-per-fingerprint).  Removal is NOT retroactive: items dropped in earlier batches
+keep-min-per-fingerprint).  Probe and upsert share one classification
+(:func:`_classify`): the upsert appends exactly what the probe calls
+``fresh``.  Removal is NOT retroactive: items dropped in earlier batches
 because they duplicated a now-removed item stay dropped; a re-ingest of
 the removed content is accepted again.  Concurrent upserts serialize on
 the table write lock.
@@ -59,7 +61,10 @@ from fastdb_spark.pipeline.dedup import DEFAULT_MAX_BUCKET
 from fastdb_spark.pipeline.incdedup import (
     DEFAULT_ID_BUCKETS,
     DEFAULT_ID_CEILING,
+    _align_id_buckets,
     _remove_ids,
+    _stream_index,
+    _write_id_bucketed,
 )
 
 _META = "_meta.json"
@@ -129,42 +134,6 @@ def _hash_frame(
         f"unknown media index method {method!r} "
         "(phash | dhash | video | audio | precomputed)"
     )
-
-
-def _write_hashes(
-    hashes: DataFrame,
-    path: str,
-    id_col: str,
-    mode: str,
-    id_buckets: int | None,
-) -> None:
-    from fastdb_spark.pipeline.incdedup import _seed_if_empty
-
-    df = hashes.select("phash", F.col(id_col))
-    tdir = os.path.join(path, "hashes")
-    if id_buckets:
-        # repartition ON the bucket column: one file per bucket per
-        # append instead of one per (task, bucket) — see
-        # incdedup._append_survivors.  The single hashes table makes the
-        # one-shuffle-per-write shape fine here (the text index shares
-        # one aligned checkpoint across its three tables instead).
-        bdf = df.withColumn(
-            "id_bucket",
-            F.pmod(F.col(id_col), F.lit(id_buckets)).cast("int"),
-        ).repartition("id_bucket")
-        w = bdf.write.option("maxRecordsPerFile", 10_000_000)
-        if mode == "overwrite":
-            # full-table rebuild: never leave stale bucket partitions
-            # from a previous larger index behind under a dynamic
-            # session conf (ADVICE r8)
-            w = w.option("partitionOverwriteMode", "static")
-        w.partitionBy("id_bucket").mode(mode).parquet(tdir)
-        # an empty-survivor build emits no part files at all; keep the
-        # table readable for the next upsert (ADVICE r8, shared
-        # discipline with the text index)
-        _seed_if_empty(hashes.sparkSession, tdir, df.schema)
-    else:
-        df.write.mode(mode).parquet(tdir)
 
 
 def _dedup_batch(
@@ -252,7 +221,14 @@ def build_media_index(
             hashes, id_col, max_hamming, bands, max_bucket_size
         ).localCheckpoint(eager=True)
         n = surv.count()
-        _write_hashes(surv, path, id_col, "overwrite", id_buckets)
+        _write_id_bucketed(
+            _align_id_buckets(
+                surv.select("phash", F.col(id_col)), id_col, id_buckets
+            ),
+            os.path.join(path, "hashes"),
+            id_buckets,
+            overwrite=True,
+        )
     finally:
         release_staged()
     with open(_params_path(path), "w") as f:
@@ -271,6 +247,51 @@ def build_media_index(
     return n
 
 
+def _classify(
+    spark: SparkSession,
+    hashes: DataFrame,
+    path: str,
+    p: dict,
+    id_col: str,
+    max_bucket_size: int | None,
+    audit: dict | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(verdicts, surv)`` for the staged fingerprint frame ``hashes``
+    of a batch vs the index at ``path`` — the one classification behind
+    :func:`media_index_probe` and :func:`media_index_upsert`.
+
+    verdicts: one ``(id, verdict)`` row per decodable batch item,
+    verdict in ``dup`` / ``in_batch_dup`` / ``fresh``.  surv: the
+    ``fresh`` items with every ``hashes`` column — what an upsert
+    appends.  ``audit`` is forwarded to ``imagededup.hash_matches``
+    (the probe passes none).  Caller holds the lock and releases the
+    staged frames."""
+    idx = spark.read.parquet(os.path.join(path, "hashes"))
+    dup = hash_matches(
+        hashes,
+        idx,
+        id_col,
+        "phash",
+        p["max_hamming"],
+        p["bands"],
+        max_bucket_size,
+        audit=audit,
+    ).select(F.col("new_id").alias(id_col)).distinct()
+    rest = hashes.join(dup, on=id_col, how="left_anti")
+    surv = _dedup_batch(
+        rest, id_col, p["max_hamming"], p["bands"], max_bucket_size
+    )
+    in_batch = rest.join(surv.select(id_col), on=id_col, how="left_anti")
+    verdicts = (
+        dup.select(id_col, F.lit("dup").alias("verdict"))
+        .unionByName(
+            in_batch.select(id_col, F.lit("in_batch_dup").alias("verdict"))
+        )
+        .unionByName(surv.select(id_col, F.lit("fresh").alias("verdict")))
+    )
+    return verdicts, surv
+
+
 def media_index_upsert(
     spark: SparkSession,
     new_media: DataFrame,
@@ -280,11 +301,13 @@ def media_index_upsert(
     id_ceiling: int = DEFAULT_ID_CEILING,
 ) -> list | None:
     """Dedup ``new_media`` against the index AND append the survivors'
-    fingerprints.  Returns the sorted surviving ids (materialized inside
-    the write lock — check-then-append must be atomic vs other writers),
-    or ``None`` for batches above ``id_ceiling`` (backfill scale — read
-    the index to enumerate).  Hash method and hamming threshold come
-    from the index metadata, never the caller.
+    fingerprints — exactly the items :func:`media_index_probe` calls
+    ``fresh`` (both run :func:`_classify`).  Returns the sorted
+    surviving ids (materialized inside the write lock — check-then-append
+    must be atomic vs other writers), or ``None`` for batches above
+    ``id_ceiling`` (backfill scale — read the index to enumerate).  Hash
+    method and hamming threshold come from the index metadata, never the
+    caller.
 
     Guard-ON by default like ``dedup_index_upsert`` (VERDICT r8 #1); the
     cap applies only to banded probes and caps candidates PER NEW item
@@ -311,20 +334,9 @@ def media_index_upsert(
             )
         )
         try:
-            idx = spark.read.parquet(os.path.join(path, "hashes"))
-            hits = hash_matches(
-                hashes,
-                idx,
-                id_col,
-                "phash",
-                p["max_hamming"],
-                p["bands"],
-                max_bucket_size,
+            _, surv = _classify(
+                spark, hashes, path, p, id_col, max_bucket_size,
                 audit=LAST_UPSERT_AUDIT,
-            ).select(F.col("new_id").alias(id_col)).distinct()
-            fresh = hashes.join(hits, on=id_col, how="left_anti")
-            surv = _dedup_batch(
-                fresh, id_col, p["max_hamming"], p["bands"], max_bucket_size
             )
             # sever lineage before the append: the survivor plan reads
             # the hashes/ dir this write appends to (the round-6
@@ -340,7 +352,18 @@ def media_index_upsert(
                 ids = None
             else:
                 ids = sorted(r[id_col] for r in head)
-            _write_hashes(surv, path, id_col, "append", p.get("id_buckets"))
+            # one hashes table: aligning per write costs one shuffle, fine
+            # here (the text index shares one aligned checkpoint across
+            # its three tables instead)
+            nb = p.get("id_buckets")
+            _write_id_bucketed(
+                _align_id_buckets(
+                    surv.select("phash", F.col(id_col)), id_col, nb
+                ),
+                os.path.join(path, "hashes"),
+                nb,
+                overwrite=False,
+            )
         finally:
             release_staged()
     return ids
@@ -360,10 +383,12 @@ def media_index_probe(
     ``in_batch_dup`` (dropped by the in-batch keep-min/greedy pass), or
     ``fresh`` (an upsert would append it).  Undecodable payloads appear
     under NO verdict (the shared torn-payload skip contract — the
-    caller's reject cascade sees them via the count difference).  The
+    caller's reject cascade sees them via the count difference).  Probe
+    and upsert run the same classification (:func:`_classify`), so the
     ``fresh`` set equals :func:`media_index_upsert`'s returned ids for
-    the same batch (property-tested); materialized under the write lock
-    so concurrent swaps cannot invalidate the returned frame."""
+    the same batch by construction (and property-tested); materialized
+    under the write lock so concurrent swaps cannot invalidate the
+    returned frame."""
     p = _load_params(path)
     id_col = p.get("id_col", "media_id")
     from fastdb_spark.cachereg import release_staged, stage
@@ -383,34 +408,10 @@ def media_index_probe(
             )
         )
         try:
-            idx = spark.read.parquet(os.path.join(path, "hashes"))
-            dup = hash_matches(
-                hashes,
-                idx,
-                id_col,
-                "phash",
-                p["max_hamming"],
-                p["bands"],
-                max_bucket_size,
-            ).select(F.col("new_id").alias(id_col)).distinct()
-            rest = hashes.join(dup, on=id_col, how="left_anti")
-            surv = _dedup_batch(
-                rest, id_col, p["max_hamming"], p["bands"], max_bucket_size
-            ).select(id_col)
-            in_batch = rest.join(surv, on=id_col, how="left_anti").select(
-                id_col
+            verdicts, _ = _classify(
+                spark, hashes, path, p, id_col, max_bucket_size
             )
-            out = (
-                dup.select(id_col, F.lit("dup").alias("verdict"))
-                .unionByName(
-                    in_batch.select(
-                        id_col, F.lit("in_batch_dup").alias("verdict")
-                    )
-                )
-                .unionByName(
-                    surv.select(id_col, F.lit("fresh").alias("verdict"))
-                )
-            ).localCheckpoint(eager=True)
+            out = verdicts.localCheckpoint(eager=True)
         finally:
             release_staged()
     return out
@@ -492,37 +493,23 @@ def stream_media_index(
     identically.  ``compact_every=N`` runs :func:`compact_media_index`
     after every Nth micro-batch (same rationale and discipline as
     ``stream_dedup_index``)."""
-    p = _load_params(index_path)
-    id_col = p.get("id_col", "media_id")
-
-    # micro-batches are batch-sized, not table-sized (same rationale as
-    # stream_dedup_index; 'auto'-safe shared helper, ADVICE r8)
-    from fastdb_spark.session import tune_micro_batch_shuffle
-
-    tune_micro_batch_shuffle(spark)
-
-    n_batches = {"n": 0}
-
-    def _upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        media_index_upsert(
+    id_col = _load_params(index_path).get("id_col", "media_id")
+    return _stream_index(
+        spark,
+        media_path,
+        f"{id_col} long, {payload_col} binary",
+        checkpoint,
+        lambda batch_df: media_index_upsert(
             spark,
             batch_df,
             index_path,
             payload_col=payload_col,
             max_bucket_size=max_bucket_size,
-        )
-        n_batches["n"] += 1
-        if compact_every and n_batches["n"] % compact_every == 0:
-            compact_media_index(spark, index_path, min_files=compact_min_files)
-
-    reader = spark.readStream.schema(f"{id_col} long, {payload_col} binary")
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(media_path)
-        .writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint)
+        ),
+        lambda: compact_media_index(
+            spark, index_path, min_files=compact_min_files
+        ),
+        compact_every,
+        available_now,
+        max_files_per_trigger,
     )
-    if available_now:
-        stream = stream.trigger(availableNow=True)
-    return stream.start()

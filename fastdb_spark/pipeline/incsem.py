@@ -476,33 +476,22 @@ def stream_semantic_index(
         raise ValueError(
             f"no semantic index at {index_path}; build_semantic_index first"
         )
-    from fastdb_spark.session import tune_micro_batch_shuffle
+    from fastdb_spark.pipeline.incdedup import _stream_index
 
-    tune_micro_batch_shuffle(spark)
-    n_batches = {"n": 0}
-
-    def _upsert(batch_df: DataFrame, epoch_id: int) -> None:
-        semantic_index_upsert(
+    return _stream_index(
+        spark,
+        vectors_path,
+        f"{id_col} long, {vec_col} {vec_type}",
+        checkpoint,
+        lambda batch_df: semantic_index_upsert(
             batch_df, index_path, id_col=id_col, vec_col=vec_col,
             strategy=strategy, assign_strategy=assign_strategy,
             dedup_ids=True,
-        )
-        n_batches["n"] += 1
-        if compact_every and n_batches["n"] % compact_every == 0:
-            compact_semantic_index(
-                spark, index_path, min_files=compact_min_files
-            )
-
-    reader = spark.readStream.schema(
-        f"{id_col} long, {vec_col} {vec_type}"
+        ),
+        lambda: compact_semantic_index(
+            spark, index_path, min_files=compact_min_files
+        ),
+        compact_every,
+        available_now,
+        max_files_per_trigger,
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    writer = (
-        reader.parquet(vectors_path)
-        .writeStream.foreachBatch(_upsert)
-        .option("checkpointLocation", checkpoint)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -286,10 +286,11 @@ def test_index_remove_unblocks_near_dups(spark, tmp_path):
 
 def test_stream_dedup_index_end_to_end(spark, tmp_path):
     """readStream -> foreachBatch -> dedup_index_upsert: exact and near
-    dups of seed docs are dropped across micro-batches, fresh docs
-    append; a full re-delivery (same files, FRESH checkpoint — the
-    at-least-once worst case) leaves the index contents unchanged
-    because every replayed survivor matches its own fingerprint."""
+    dups of seed docs and an exact dup of an earlier stream doc are
+    dropped across micro-batches, fresh docs append; a full re-delivery
+    (same files, FRESH checkpoint — the at-least-once worst case) leaves
+    the index contents unchanged because every replayed survivor matches
+    its own fingerprint."""
     from fastdb_spark.pipeline import incdedup
 
     idx = str(tmp_path / "sidx")
@@ -318,6 +319,8 @@ def test_stream_dedup_index_end_to_end(spark, tmp_path):
         [
             (12, "the quick brown fox jumps over the lazy cat"),  # near dup of 1
             (13, "another genuinely novel document arrives here now"),
+            # exact dup of stream doc 11, never in the seed index
+            (14, "a wholly new document body with its own words"),
         ],
     ).coalesce(1).write.parquet(str(stream_dir / "b"))
 

@@ -146,7 +146,10 @@ def test_media_index_upsert_guard_on_default_still_blocks_dups(
 
 def test_media_index_upsert_banded_audit_resets(spark, tmp_path):
     """A capped banded upsert flags truncated items; the next uncapped
-    call resets the audit (the ADVICE r5 discipline, media twin)."""
+    call resets the audit (the ADVICE r5 discipline, media twin), and a
+    probe in between leaves it alone."""
+    import copy
+
     from fastdb_spark.pipeline import incmedia as im
 
     path = str(tmp_path / "bidx")
@@ -176,6 +179,30 @@ def test_media_index_upsert_banded_audit_resets(spark, tmp_path):
         max_bucket_size=None,
     )
     assert im.LAST_UPSERT_AUDIT == {"truncated_items": 0, "sample": []}
+    # a probe shares the upsert's classification but never writes the
+    # upsert audit, capped or not.  Precomputed fingerprints make the
+    # truncation certain: three indexed hashes pairwise at hamming 8
+    # share their three zero bands with a probe hash of 0
+    ppath = str(tmp_path / "pbidx")
+    fams = [(1, 0xF << 48), (2, 0xF0 << 48), (3, 0xF00 << 48)]
+    im.build_media_index(
+        _hash_df(spark, fams).withColumnRenamed("phash", "payload"),
+        ppath,
+        method="precomputed",
+        max_hamming=2,
+        bands=4,
+        id_buckets=4,
+    )
+    new = _hash_df(spark, [(50, 0)]).withColumnRenamed("phash", "payload")
+    assert im.media_index_upsert(spark, new, ppath, max_bucket_size=1) == [50]
+    truncated = copy.deepcopy(im.LAST_UPSERT_AUDIT)
+    assert truncated == {"truncated_items": 1, "sample": [50]}
+    probe = _hash_df(spark, [(60, 1 << 62)]).withColumnRenamed(
+        "phash", "payload"
+    )
+    for cap in (1, None):
+        im.media_index_probe(spark, probe, ppath, max_bucket_size=cap)
+        assert im.LAST_UPSERT_AUDIT == truncated
 
 
 # ---------------------------------------------------------------------------
@@ -191,6 +218,26 @@ def test_build_dedup_index_empty_corpus_bucketed_stays_readable(
     empty = spark.createDataFrame([], "doc_id long, text string")
     assert inc.build_dedup_index(empty, path, id_buckets=4) == 0
     # the regression: this read raised UNABLE_TO_INFER_SCHEMA
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")],
+        "doc_id long, text string",
+    )
+    assert inc.dedup_index_upsert(spark, docs, path) == [1]
+
+
+def test_rebuild_dedup_index_empty_bucketed_index_stays_readable(
+    spark, tmp_path
+):
+    """rebuild_dedup_index rewrites bands/ through the same id-bucket
+    writer as build and upsert, so an empty rebuild is re-seeded too:
+    the rewrite used to leave bands/ with no part files, and the next
+    upsert raised UNABLE_TO_INFER_SCHEMA."""
+    from fastdb_spark.pipeline import incdedup as inc
+
+    path = str(tmp_path / "eridx")
+    empty = spark.createDataFrame([], "doc_id long, text string")
+    assert inc.build_dedup_index(empty, path, id_buckets=4) == 0
+    assert inc.rebuild_dedup_index(spark, path) == 0
     docs = spark.createDataFrame(
         [(1, "alpha beta gamma delta epsilon zeta")],
         "doc_id long, text string",

@@ -588,6 +588,8 @@ def test_incdedup_id_ceiling_scratch_path(spark, tmp_path):
 def test_incdedup_truncation_audit(spark, tmp_path):
     """Docs whose vs-index candidate set hits max_bucket_size are
     flagged in LAST_UPSERT_AUDIT (the cap can drop the one true match)."""
+    import copy
+
     from fastdb_spark.pipeline import incdedup
 
     path = str(tmp_path / "didx6")
@@ -608,6 +610,15 @@ def test_incdedup_truncation_audit(spark, tmp_path):
     incdedup.dedup_index_upsert(spark, batch, path, max_bucket_size=1)
     assert incdedup.LAST_UPSERT_AUDIT["truncated_docs"] >= 1
     assert 50 in incdedup.LAST_UPSERT_AUDIT["sample"]
+    # a probe shares the upsert's classification but never writes the
+    # upsert audit, capped or not
+    before = copy.deepcopy(incdedup.LAST_UPSERT_AUDIT)
+    probe = _mk_docs(
+        spark, [(60, "apple banana cherry date elderberry fig grape plum")]
+    )
+    for cap in (1, None):
+        incdedup.dedup_index_probe(spark, probe, path, max_bucket_size=cap)
+        assert incdedup.LAST_UPSERT_AUDIT == before
 
 
 def test_incdedup_matches_oneshot_on_single_batch(spark, tmp_path):
@@ -808,42 +819,3 @@ def test_argument_guards(spark):
         remove_boilerplate_blocks(docs, max_docs=0)
     with pytest.raises(ValueError):
         sh.token_budget_select(docs, budget={"en": 10})  # dict w/o stratum
-
-
-def test_stream_dedup_upserts(spark, tmp_path):
-    """Streaming front end: two jsonl files drain through foreachBatch
-    into the dedup index; the final index equals the sequential-upsert
-    result, and a replay (fresh checkpoint, same files) adds nothing."""
-    import json as _json
-
-    from fastdb_spark.pipeline.incdedup import build_dedup_index, stream_dedup_upserts
-
-    idx = str(tmp_path / "sidx")
-    build_dedup_index(_mk_docs(spark, _BASE_TEXTS), idx)
-    src = tmp_path / "incoming"
-    src.mkdir()
-    (src / "b1.json").write_text(
-        "\n".join(
-            _json.dumps(d)
-            for d in [
-                {"doc_id": 100, "text": "alpha beta gamma delta epsilon zeta eta theta"},
-                {"doc_id": 101, "text": "totally fresh words nobody used before now"},
-            ]
-        )
-    )
-    (src / "b2.json").write_text(
-        _json.dumps({"doc_id": 102, "text": "totally fresh words nobody used before now"})
-    )
-    got = stream_dedup_upserts(
-        spark, str(src), idx, checkpoint=str(tmp_path / "ck1")
-    )
-    # 100 is an exact dup of indexed doc 0; 102 duplicates 101 (order of
-    # micro-batches for two files is one batch or two — either way only
-    # the first copy of the fresh text survives)
-    assert 100 not in got
-    assert sorted(got) == [101]
-    # replay with a fresh checkpoint: everything already indexed
-    again = stream_dedup_upserts(
-        spark, str(src), idx, checkpoint=str(tmp_path / "ck2")
-    )
-    assert again == []

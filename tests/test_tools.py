@@ -27,3 +27,17 @@ def test_gate_bench_rejects_unknown_gate_names(monkeypatch):
     msg = str(exc.value.code)
     assert "no_such_gate" in msg and "nor_this_one" in msg
     assert "minhash_lsh_dedup" not in msg
+
+
+def test_run_once_releases_staged_frames(spark):
+    """``bench.run_once`` is the one run step of bench.py and the gate
+    tools: it times build and force, and leaves nothing staged."""
+    import bench
+    from fastdb_spark import cachereg
+
+    def gate(spark, _sf_dir):
+        return cachereg.stage(spark.range(8)).selectExpr("id + 1 AS x")
+
+    total_s, build_s = bench.run_once(spark, gate, "unused")
+    assert 0 <= build_s <= total_s
+    assert cachereg._STAGED == []

@@ -1,7 +1,7 @@
-"""Focused min-of-N bench for a gate subset — bench.py's methodology
-(same session builder, noop sink, release_staged + clearCache between
-runs) on just the named gates, for quiet A/Bs during an optimization
-round without paying the full 118-gate suite.
+"""Focused min-of-N bench for a gate subset — bench.py's own run step
+(``bench.run_once``: noop sink, release_staged + clearCache between
+runs, same ``get_spark`` session) on just the named gates, for quiet A/Bs
+during an optimization round without paying the full 118-gate suite.
 
 Usage:
     SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
@@ -13,7 +13,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -36,6 +35,7 @@ def main(gates: list[str] | None = None) -> None:
             "(valid names are the keys of __spark_entry__.queries())"
         )
 
+    from bench import run_once
     from fastdb_spark.session import get_spark
 
     spark = get_spark("fastdb-gate-bench", master=f"local[{cpus}]")
@@ -46,16 +46,7 @@ def main(gates: list[str] | None = None) -> None:
         fn = qmap[gate]
         seen = []
         for _ in range(runs):
-            t0 = time.perf_counter()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            seen.append(round(time.perf_counter() - t0, 4))
-            from fastdb_spark.cachereg import release_staged
-            from fastdb_spark.operators.paginate import unpersist_pages
-
-            release_staged()
-            unpersist_pages()
-            spark.catalog.clearCache()
+            seen.append(round(run_once(spark, fn, sf_dir)[0], 4))
         out[gate] = {"min": min(seen), "runs": seen}
         print(f"# {gate}: {min(seen):.3f}s {seen}", file=sys.stderr)
     out["loadavg_end"] = round(os.getloadavg()[0], 2)

@@ -1,7 +1,8 @@
 """Per-job profile of one bench gate: run it exactly the way bench.py
-does (same session builder, same noop force) with the Spark event log
-on, then break the gate's wall-clock into Spark jobs (with their
-descriptions / call sites) and the DRIVER-SIDE gaps between them.
+does (same ``get_spark`` session, same ``bench.run_once`` step) with the
+Spark event log on, then break the gate's wall-clock into Spark jobs
+(with their descriptions / call sites) and the DRIVER-SIDE gaps
+between them.
 
 The gaps matter as much as the jobs at gate scale (sf0.1 is 5k docs /
 2k vectors): plan analysis, py4j chatter, file-system choreography and
@@ -35,6 +36,7 @@ def main() -> None:
     os.makedirs(log_dir, exist_ok=True)
 
     import __spark_entry__ as entrymod
+    from bench import run_once
     from fastdb_spark.session import get_spark
 
     spark = get_spark(
@@ -56,20 +58,10 @@ def main() -> None:
         fn = qmap[gate]
         best = None
         for i in range(runs):
-            from fastdb_spark.cachereg import release_staged
-            from fastdb_spark.operators.paginate import unpersist_pages
-
             spark.sparkContext.setJobDescription(None)
-            t0 = time.perf_counter()
             t0_ms = int(time.time() * 1000)
-            df = fn(spark, sf_dir)
-            t_build = time.perf_counter() - t0
-            df.write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
+            dt, t_build = run_once(spark, fn, sf_dir)
             t1_ms = int(time.time() * 1000)
-            release_staged()
-            unpersist_pages()
-            spark.catalog.clearCache()
             print(f"## {gate} run {i}: total {dt:.3f}s (build {t_build:.3f}s)")
             if best is None or dt < best[0]:
                 best = (dt, t0_ms, t1_ms)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 
 from fastdb_spark.catalog import Catalog
 from fastdb_spark.operators.paginate import random_sample
+from fastdb_spark.parallel import run_independent_jobs
 from fastdb_spark.queries import ltcv as ltcv_q
 from fastdb_spark.queries import objstats as objstats_q
 from fastdb_spark.queries import search as search_q
@@ -74,11 +75,10 @@ class FastdbAPI:
     def __init__(self, spark: SparkSession, catalog_root: str, queue_root: str | None = None):
         self.spark = spark
         self.catalog = Catalog(spark, catalog_root)
-        self.tables = {
-            t: self.catalog.table(t)
-            for t in CATALOG_TABLES
-            if self.catalog.exists(t)
-        }
+        # each open infers its table's schema with a Spark job; overlap them
+        names = [t for t in CATALOG_TABLES if self.catalog.exists(t)]
+        opened = run_independent_jobs(self.catalog.table, names)
+        self.tables = dict(zip(names, opened))
         self.resolver = ProcverResolver(
             self.tables["processing_version"],
             self.tables["processing_version_alias"],

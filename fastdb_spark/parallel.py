@@ -1,27 +1,35 @@
 """Driver-side overlap of INDEPENDENT Spark jobs (guide §2.6).
 
-The maintenance paths (index takedown, compaction) rewrite several
-independent targets — one directory per table or per cluster partition —
-and the pre-r12 loops ran them serially from the driver: each iteration
-paid its own job-launch latency and left the executors idle through the
-tail of the previous iteration.  Spark's scheduler happily runs several
-jobs at once inside one application; submitting the per-target rewrites
-from a small thread pool lets the next target's tasks back-fill the
-executors as the previous one drains (FIFO scheduling is exactly the
-back-fill behaviour wanted here).
+The maintenance paths (index takedown, compaction), the per-table merges
+of an alert-ingest batch and the table opens of a fresh API each touch
+several independent targets — one directory per table or per cluster
+partition.  Run serially from the driver, each target pays its own
+job-launch latency and leaves the executors idle through the tail of the
+previous one.  Spark's scheduler happily runs several jobs at once inside
+one application; submitting the per-target work from a small thread pool
+lets the next target's tasks back-fill the executors as the previous one
+drains (FIFO scheduling is exactly the back-fill behaviour wanted here).
 
-``pyspark.InheritableThread`` semantics are not required for these
-call sites — the rewrites set no thread-local job groups/descriptions —
-so a plain ``ThreadPoolExecutor`` is used, as the optimization guide
-does.  Exceptions propagate: the first failure cancels nothing already
-running but re-raises to the caller after all submitted work settles,
-so a failed rewrite is never silently swallowed.
+Pool jobs keep the caller's job group, job description and tags: each
+item is wrapped with ``pyspark.inheritable_thread_target`` in the calling
+thread, so cancelling or monitoring the caller's group covers them.  The
+wrap is taken once PER ITEM because one wrapper hands every thread the
+same local-properties object, and a property one job sets (its SQL
+execution id, say) would then leak into the jobs running beside it.
+
+Exceptions propagate: a failure cancels nothing already running but
+re-raises to the caller after all submitted work settles, so a failed
+job is never silently swallowed.
 """
 
 from __future__ import annotations
 
+import functools
 from concurrent.futures import ThreadPoolExecutor
 from typing import Callable, Iterable, Sequence, TypeVar
+
+from pyspark import inheritable_thread_target
+from pyspark.sql import SparkSession
 
 T = TypeVar("T")
 R = TypeVar("R")
@@ -46,5 +54,10 @@ def run_independent_jobs(
     items = list(items)
     if len(items) <= 1:
         return [fn(it) for it in items]
+    session = SparkSession.active()
+    calls = [
+        inheritable_thread_target(session)(functools.partial(fn, it))
+        for it in items
+    ]
     with ThreadPoolExecutor(max_workers=min(max_workers, len(items))) as pool:
-        return list(pool.map(fn, items))
+        return list(pool.map(lambda call: call(), calls))

@@ -13,15 +13,26 @@ as an idempotent ``foreachBatch`` pipeline:
    the leader id — re-running the same batch yields the same roots, which
    makes the whole pipeline replay-safe),
 4. **idempotent merges** (S5/T4): ``ON CONFLICT DO NOTHING`` upserts into
-   every table.
+   every table.  The merges run overlapped
+   (:func:`fastdb_spark.parallel.run_independent_jobs`): those into
+   ``diasource``, ``diaforcedsource``, ``diasource_brokerinfo`` and
+   ``cutouts`` alongside steps 2-3, those into ``root_diaobject`` and
+   ``diaobject_position`` once step 3 is done.  ``diaobject`` lands
+   last, after all of them succeeded.  A reader in mid-batch may
+   see a batch's photometry or positions before its ``diaobject`` row;
+   the lightcurve and search queries inner-join through ``diaobject``,
+   so they hide those rows until the batch is complete.
 
 Exactly-once: transport offsets are the streaming checkpoint's job; the
 merge layer is replay-safe by construction (same input -> same keys ->
-DO NOTHING dedups).
+DO NOTHING dedups).  A failed merge re-raises after the other merges
+settle and leaves ``diaobject`` unwritten, so the batch's objects are
+still new to a replay of the same batch, which repairs every table.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -29,6 +40,7 @@ from pyspark.sql import functions as F
 
 from fastdb_spark.operators.dedup import dedup_first_seen
 from fastdb_spark.operators.spatial import crossmatch
+from fastdb_spark.parallel import run_independent_jobs
 from fastdb_spark.storage import ParquetTable
 
 ASSOC_RADIUS_DEG = 1.0 / 3600.0  # 1 arcsec (reference source_importer 1")
@@ -185,6 +197,71 @@ def associate_roots(
     return minted if matched is None else matched.unionByName(minted)
 
 
+def _upsert(silver: SilverCatalog, table: str, rows: DataFrame, keys) -> None:
+    silver.table(table).upsert(rows, keys, "nothing")
+
+
+def _merge_new_objects(
+    silver: SilverCatalog, objects: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """New-object detection and root association for one batch, then the
+    root and position merges; returns ``(new_objs, assoc)`` for the
+    diaobject merge, which the caller runs last."""
+    obj_t = silver.table("diaobject")
+    roots_t = silver.table("root_diaobject")
+
+    existing_objs = obj_t.read() if obj_t.exists() else None
+    if existing_objs is not None:
+        new_objs = objects.join(
+            existing_objs.select("diaobjectid", "base_procver_id"),
+            on=["diaobjectid", "base_procver_id"],
+            how="left_anti",
+        )
+    else:
+        new_objs = objects
+    # new_objs/assoc read the silver tables the merges below APPEND to,
+    # and each append's refreshByPath invalidates any cached plan reading
+    # that path — a cache() here would silently RECOMPUTE against the
+    # already-updated tables after the first merge (the anti-join then
+    # drops every just-inserted object, so the position merge and the
+    # new_objects stat saw EMPTY sets — a real shipped bug, regression-
+    # tested in test_round6.py).  localCheckpoint severs the lineage so
+    # later merges cannot recompute.  (The batch frames, ``objects``
+    # among them, derive only from the wrangled input — no silver reads —
+    # so plain cache is safe for them.)
+    new_objs = new_objs.localCheckpoint(eager=True)
+
+    roots = roots_t.read() if roots_t.exists() else None
+    assoc = associate_roots(new_objs, roots).localCheckpoint(eager=True)
+
+    # new roots = minted ids not already present
+    minted_roots = (
+        assoc.join(
+            new_objs.select("diaobjectid", "ra", "dec"), on="diaobjectid"
+        )
+        .groupBy("rootid")
+        .agg(F.first("ra").alias("ra"), F.first("dec").alias("dec"))
+        .select(F.col("rootid").alias("id"), "ra", "dec")
+    )
+    pos_rows = new_objs.filter(F.col("ra").isNotNull()).select(
+        "diaobjectid",
+        "base_procver_id",
+        "ra",
+        "dec",
+        F.lit(None).cast("float").alias("raerr"),
+        F.lit(None).cast("float").alias("decerr"),
+        F.lit(None).cast("float").alias("ra_dec_cov"),
+    )
+    run_independent_jobs(
+        lambda m: _upsert(silver, *m),
+        [
+            ("root_diaobject", minted_roots, ["id"]),
+            ("diaobject_position", pos_rows, ["diaobjectid", "base_procver_id"]),
+        ],
+    )
+    return new_objs, assoc
+
+
 def ingest_batch(
     silver: SilverCatalog,
     wrangled: dict[str, DataFrame],
@@ -201,99 +278,56 @@ def ingest_batch(
     # cache: each frame feeds multiple joins below
     for df in batch.values():
         df.cache()
-
-    obj_t = silver.table("diaobject")
-    roots_t = silver.table("root_diaobject")
-
-    existing_objs = obj_t.read() if obj_t.exists() else None
-    if existing_objs is not None:
-        new_objs = batch["diaobject"].join(
-            existing_objs.select("diaobjectid", "base_procver_id"),
-            on=["diaobjectid", "base_procver_id"],
-            how="left_anti",
+    try:
+        src = batch["diasource"].drop("savetime")
+        frc = batch["diaforcedsource"].drop("savetime")
+        brk = batch["brokerinfo"].drop("savetime")
+        merges = [
+            ("diasource", src, ["diasourceid", "base_procver_id"]),
+            ("diaforcedsource", frc, ["diaobjectid", "visit", "base_procver_id"]),
+            (
+                "diasource_brokerinfo",
+                brk,
+                ["brokername", "topic", "diasourceid", "base_procver_id"],
+            ),
+        ]
+        # binary cutout payloads (the reference's thumbnail collections ->
+        # multimodal media rows; payloads stay opaque, see pipeline.multimodal)
+        if "cutouts" in wrangled:
+            cut = dedup_first_seen(
+                wrangled["cutouts"], ["alertid"], ["savetime"]
+            ).drop("savetime")
+            merges.append(("cutouts", cut, ["alertid"]))
+        jobs = [functools.partial(_merge_new_objects, silver, batch["diaobject"])]
+        jobs += [functools.partial(_upsert, silver, *m) for m in merges]
+        # the merges land in disjoint tables, and the photometry merges do
+        # not wait for the association: overlap them all.  diaobject goes
+        # last, once they all succeeded — its rows are what the next
+        # batch's new_objs treats as already ingested, so a failure
+        # anywhere before it leaves the batch's objects "new" and a replay
+        # of the batch repairs every table
+        (new_objs, assoc), *_ = run_independent_jobs(lambda job: job(), jobs)
+        obj_rows = new_objs.join(assoc, on="diaobjectid").select(
+            "diaobjectid", "base_procver_id", "rootid"
         )
-    else:
-        new_objs = batch["diaobject"]
-    # new_objs/assoc read the silver tables the merges below APPEND to,
-    # and each append's refreshByPath invalidates any cached plan reading
-    # that path — a cache() here would silently RECOMPUTE against the
-    # already-updated tables after the first merge (the anti-join then
-    # drops every just-inserted object, so the position merge and the
-    # new_objects stat saw EMPTY sets — a real shipped bug, regression-
-    # tested in test_round6.py).  localCheckpoint severs the lineage so
-    # later merges cannot recompute.  (batch[...] frames derive only
-    # from the wrangled input — no silver reads — so plain cache is
-    # safe for them.)
-    new_objs = new_objs.localCheckpoint(eager=True)
+        _upsert(silver, "diaobject", obj_rows, ["diaobjectid", "base_procver_id"])
 
-    roots = roots_t.read() if roots_t.exists() else None
-    assoc = associate_roots(new_objs, roots).localCheckpoint(eager=True)
-
-    # new roots = minted ids not already present
-    minted_roots = (
-        assoc.join(
-            new_objs.select("diaobjectid", "ra", "dec"), on="diaobjectid"
-        )
-        .groupBy("rootid")
-        .agg(F.first("ra").alias("ra"), F.first("dec").alias("dec"))
-        .select(F.col("rootid").alias("id"), "ra", "dec")
-    )
-    roots_t.upsert(minted_roots, ["id"], on_conflict="nothing")
-
-    obj_rows = new_objs.join(assoc, on="diaobjectid").select(
-        "diaobjectid", "base_procver_id", "rootid"
-    )
-    obj_t.upsert(obj_rows, ["diaobjectid", "base_procver_id"], "nothing")
-
-    pos_rows = new_objs.filter(F.col("ra").isNotNull()).select(
-        "diaobjectid",
-        "base_procver_id",
-        "ra",
-        "dec",
-        F.lit(None).cast("float").alias("raerr"),
-        F.lit(None).cast("float").alias("decerr"),
-        F.lit(None).cast("float").alias("ra_dec_cov"),
-    )
-    silver.table("diaobject_position").upsert(
-        pos_rows, ["diaobjectid", "base_procver_id"], "nothing"
-    )
-
-    src = batch["diasource"].drop("savetime")
-    silver.table("diasource").upsert(
-        src, ["diasourceid", "base_procver_id"], "nothing"
-    )
-    frc = batch["diaforcedsource"].drop("savetime")
-    silver.table("diaforcedsource").upsert(
-        frc, ["diaobjectid", "visit", "base_procver_id"], "nothing"
-    )
-    brk = batch["brokerinfo"].drop("savetime")
-    silver.table("diasource_brokerinfo").upsert(
-        brk, ["brokername", "topic", "diasourceid", "base_procver_id"], "nothing"
-    )
-
-    # binary cutout payloads (the reference's thumbnail collections ->
-    # multimodal media rows; payloads stay opaque, see pipeline.multimodal)
-    if "cutouts" in wrangled:
-        cut = dedup_first_seen(
-            wrangled["cutouts"], ["alertid"], ["savetime"]
-        ).drop("savetime")
-        silver.table("cutouts").upsert(cut, ["alertid"], "nothing")
-
-    stats = {}
-    if collect_stats:
-        stats = {
+        if not collect_stats:
+            return {}
+        return {
             "sources": src.count(),
             "forced": frc.count(),
             "objects": batch["diaobject"].count(),
             "new_objects": new_objs.count(),
         }
-    for df in batch.values():
-        df.unpersist()
-    # new_objs/assoc are localCheckpoint()ed, not cache()d: unpersist()
-    # on them is a no-op (ADVICE r6) — their blocks are freed by the
-    # ContextCleaner when the per-batch references are GC'd, bounding
-    # retained storage to the in-flight batch
-    return stats
+    finally:
+        # on a failed merge too: nothing cached outlives the batch
+        for df in batch.values():
+            df.unpersist()
+        # new_objs/assoc are localCheckpoint()ed, not cache()d: unpersist()
+        # on them is a no-op (ADVICE r6) — their blocks are freed by the
+        # ContextCleaner when the per-batch references are GC'd, bounding
+        # retained storage to the in-flight batch
 
 
 def run_alert_file_stream(

@@ -38,19 +38,30 @@ class ProcverResolver:
         self._pv = processing_version
         self._alias = processing_version_alias
         self._bpv_of_pv = base_procver_of_procver
+        self._ids: dict[str, str] = {}
 
     def procver_id(self, procver: str) -> str:
         """id / description / alias -> processing_version.id
-        (reference ``src/db.py:1597-1630``)."""
+        (reference ``src/db.py:1597-1630``).
+
+        Successful lookups are memoized per resolver: one request resolves
+        the same handle once per table it reads, and each lookup is a
+        collect.  An unknown handle is looked up (and raises) every time.
+        """
+        if procver in self._ids:
+            return self._ids[procver]
         pv = self._pv.filter(
             (F.col("id") == procver) | (F.col("description") == procver)
         ).limit(1).collect()
         if pv:
-            return pv[0]["id"]
-        al = self._alias.filter(F.col("description") == procver).limit(1).collect()
-        if al:
-            return al[0]["procver_id"]
-        raise KeyError(f"unknown processing version {procver!r}")
+            pvid = pv[0]["id"]
+        else:
+            al = self._alias.filter(F.col("description") == procver).limit(1).collect()
+            if not al:
+                raise KeyError(f"unknown processing version {procver!r}")
+            pvid = al[0]["procver_id"]
+        self._ids[procver] = pvid
+        return pvid
 
     def bpv_mapping(self, procver: str, table: str) -> DataFrame:
         """DataFrame[base_procver_id, priority] for one (procver, table)

@@ -215,6 +215,21 @@ def build_golden_pandas() -> dict[str, pd.DataFrame]:
     }
 
 
+def count_jobs(spark: SparkSession, group: str, fn) -> int:
+    """Run ``fn()`` under job group ``group``; return how many Spark jobs
+    the group holds once the listener bus has delivered their events."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="session")
 def spark() -> SparkSession:
     s = get_spark("fastdb-spark-tests", master="local[4]", shuffle_partitions=4)

@@ -7,8 +7,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from fastdb_spark.api import FastdbAPI
+from fastdb_spark.versions import ProcverResolver
 
-from .conftest import ROOT
+from .conftest import PV, ROOT, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -25,6 +26,29 @@ def test_processing_versions(api):
     names = [r["description"] for r in api.processing_versions().collect()]
     assert names == sorted(names)
     assert {"pv1", "pv2", "pv3", "realtime", "default"} <= set(names)
+
+
+def test_procver_resolution_memoized(spark, api):
+    """A resolved handle costs its lookup jobs once per resolver; an
+    unknown handle is looked up, and raises, on every call."""
+    r = ProcverResolver(
+        api.tables["processing_version"],
+        api.tables["processing_version_alias"],
+        api.tables["base_procver_of_procver"],
+    )
+    first = count_jobs(spark, "resolve-first", lambda: r.procver_id("default"))
+    again = count_jobs(
+        spark, "resolve-again", lambda: [r.procver_id("default") for _ in range(3)]
+    )
+    assert first >= 1 and again == 0
+    assert r.procver_id("default") == PV["pv2"]
+
+    def unknown():
+        with pytest.raises(KeyError):
+            r.procver_id("nope")
+
+    assert count_jobs(spark, "resolve-unknown-1", unknown) >= 1
+    assert count_jobs(spark, "resolve-unknown-2", unknown) >= 1
 
 
 def test_get_many_ltcvs_roundtrip(api):

@@ -8,6 +8,7 @@ import datetime as dt
 import os
 
 import pytest
+from pyspark import StorageLevel
 from pyspark.sql import functions as F
 
 from fastdb_spark.sources.alerts import (
@@ -16,6 +17,7 @@ from fastdb_spark.sources.alerts import (
     wrangle_alerts,
 )
 from fastdb_spark.storage import ParquetTable
+from fastdb_spark.streaming import ingest as ingest_mod
 from fastdb_spark.streaming.ingest import (
     SilverCatalog,
     associate_roots,
@@ -120,6 +122,49 @@ def test_ingest_batch_idempotent(spark, alerts_batch1, tmp_path):
     assert silver.table("root_diaobject").read().count() == 2
     assert silver.table("diasource").read().count() == 4
     assert silver.table("diaobject").read().count() == 3
+
+
+@pytest.mark.parametrize("failing", ["diaobject_position", "root_diaobject"])
+def test_ingest_replay_repairs_failed_merge(
+    spark, alerts_batch1, tmp_path, monkeypatch, failing
+):
+    """A failed merge re-raises after the other merges settle and leaves
+    diaobject unwritten, so a replay of the same batch still sees its
+    objects as new and completes every table; no batch frame stays
+    cached after the failure."""
+    silver = SilverCatalog(spark, str(tmp_path / "silver"))
+    w = reject_solar_system(wrangle_alerts(alerts_batch1, BPV, savetime=F.lit(T0)))
+    upsert = ParquetTable.upsert
+
+    def failing_upsert(self, updates, keys, on_conflict="nothing"):
+        if os.path.basename(self.path) == f"{failing}.parquet":
+            raise OSError(f"{failing} merge failed")
+        return upsert(self, updates, keys, on_conflict)
+
+    batches = []
+    dedup = ingest_mod.dedup_batch
+
+    def recording_dedup(wrangled):
+        batches.append(dedup(wrangled))
+        return batches[-1]
+
+    monkeypatch.setattr(ingest_mod, "dedup_batch", recording_dedup)
+    monkeypatch.setattr(ParquetTable, "upsert", failing_upsert)
+    with pytest.raises(OSError, match="merge failed"):
+        ingest_batch(silver, w, collect_stats=False)
+    assert not silver.table("diaobject").exists()
+    assert silver.table("diasource").read().count() == 4  # settled
+    assert all(df.storageLevel == StorageLevel.NONE for df in batches[0].values())
+
+    monkeypatch.setattr(ParquetTable, "upsert", upsert)
+    assert ingest_batch(silver, w)["new_objects"] == 3
+    assert silver.table("diaobject_position").read().count() == 3
+    assert silver.table("diaobject").read().count() == 3
+    assert silver.table("diasource").read().count() == 4
+    roots = {r["id"] for r in silver.table("root_diaobject").read().collect()}
+    objs = silver.table("diaobject").read().toPandas().set_index("diaobjectid")
+    assert len(roots) == 2 and set(objs.rootid) == roots
+    assert objs.rootid[1001] == objs.rootid[1002] != objs.rootid[1003]
 
 
 def test_ingest_second_batch_associates_to_existing(spark, alerts_batch1, tmp_path):

@@ -176,8 +176,19 @@ def greedy_mis_drops(
     DAG-ordered edges give a unique fixpoint — the greedy set — reached
     in O(longest dropped-kept alternation) rounds: 1 for cliques, a few
     for chains.  Each round is one anti-join + distinct on the edge
-    frame, lineage truncated per round; equal consecutive drop-counts
-    imply equal sets (nesting), so the count is a sound stop signal.
+    frame; equal consecutive drop-counts imply equal sets (nesting), so
+    the count is a sound stop signal.
+
+    The ``localCheckpoint(eager=False)`` calls are not lazy under AQE,
+    which every ``session.get_spark`` session enables: the call runs
+    every shuffle-map stage of its plan as Spark jobs, and only the
+    final stage waits for the first action.  The edge checkpoint
+    therefore runs the whole candidate-pair and refine chain of the
+    caller at the call (12 jobs inside it in a traced 1000-document
+    ``dedup_index`` probe), and each round's checkpoint runs its
+    anti-join and distinct shuffles before its ``count`` stores the
+    drop set; later rounds read the stored blocks, not the earlier
+    rounds' plans.
 
     The loop ALWAYS runs to the count-stable fixpoint — nesting makes
     the per-round count strictly decreasing until convergence, so

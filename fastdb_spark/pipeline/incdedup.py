@@ -33,6 +33,16 @@ one classification (:func:`_classify`), so the upsert appends exactly
 what the probe calls ``fresh``.  Concurrent upserts serialize on the
 table write lock (``locks.table_write_lock``) — same lost-update story
 as storage.py.
+
+Classification shape: the three index tables are opened together; the
+exact leg (a left join to the distinct index fingerprints plus a
+``min(id)`` window over ``fingerprint``, :func:`_exact_leg` — also the
+build's keep-min pass) is staged once with an exact-verdict column;
+the vs-index and in-batch near-dup legs run on its kept rows and come
+back as left-joined id flags, so the verdict is one ``coalesce`` column
+over the staged frame and the upsert's survivors are its ``fresh``
+filter.  Every later Spark action reads the staged exact leg instead of
+re-planning it.
 """
 
 from __future__ import annotations
@@ -190,8 +200,7 @@ def build_dedup_index(
         docs, id_col, text_col, shingle_k, n_hashes, bands, hash_impl
     )
     try:
-        canon = sk.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-        kept = sk.join(canon, on=[id_col, "fingerprint"], how="left_semi")
+        kept = _exact_leg(sk, id_col).filter(F.col("_v").isNull()).drop("_v")
         surv = kept.join(
             _inbatch_drops(kept, id_col, threshold, max_bucket_size),
             on=id_col,
@@ -223,6 +232,30 @@ def build_dedup_index(
             f,
         )
     return n
+
+
+def _exact_leg(
+    sk: DataFrame, id_col: str, fps: DataFrame | None = None
+) -> DataFrame:
+    """``sk`` plus the exact-dedup verdict ``_v``: ``exact`` when the
+    fingerprint is among the index fingerprints ``fps``,
+    ``in_batch_exact`` when it is not the batch's min id of its
+    fingerprint, null for the one kept document per fingerprint.  The
+    keep-min rule is a ``min(id)`` window over ``fingerprint``, so the
+    leg is one shuffle of the batch and one left join to the distinct
+    index fingerprints.  A document with a null id or a null
+    fingerprint is never the kept one, so it is ``in_batch_exact``."""
+    m = F.min(id_col).over(Window.partitionBy("fingerprint"))
+    keep = F.col("fingerprint").isNotNull() & (F.col(id_col) == m)
+    v = F.when(keep, F.lit(None)).otherwise(F.lit("in_batch_exact"))
+    if fps is None:
+        return sk.withColumn("_v", v)
+    hits = fps.select("fingerprint").distinct().withColumn("_hit", F.lit(True))
+    return (
+        sk.join(hits, on="fingerprint", how="left")
+        .withColumn("_v", F.when(F.col("_hit"), F.lit("exact")).otherwise(v))
+        .drop("_hit")
+    )
 
 
 def _inbatch_drops(
@@ -1002,26 +1035,25 @@ LAST_UPSERT_AUDIT: dict = {"truncated_docs": 0, "sample": []}
 
 
 def _near_dups_vs_index(
-    spark: SparkSession,
     fresh: DataFrame,
-    path: str,
-    p: dict,
+    old_bands: DataFrame,
+    old_sh: DataFrame,
+    threshold: float,
     id_col: str,
     max_bucket_size: int | None,
     audit: dict | None = None,
 ) -> DataFrame:
     """Ids of ``fresh`` docs whose Jaccard vs ANY indexed document meets
-    the stored threshold — the vs-index near-dup leg of
-    :func:`_classify` (probe and upsert alike).  ``fresh``
-    carries (id, sh, bands) from :func:`_sketch`.  ``max_bucket_size``
+    ``threshold`` — the vs-index near-dup leg of :func:`_classify`
+    (probe and upsert alike).  ``fresh`` carries (id, sh, bands) from
+    :func:`_sketch`; ``old_bands`` and ``old_sh`` are the opened
+    ``bands/`` and ``shingles/`` index tables.  ``max_bucket_size``
     caps candidates PER NEW doc (the refine only needs one hit; never
     the index side); truncated docs are recorded in ``audit`` when one
     is passed (one bounded limit-collect on a cachereg-staged frame —
     the caller's ``release_staged()`` frees it)."""
     from fastdb_spark.cachereg import stage
 
-    old_bands = spark.read.parquet(os.path.join(path, "bands"))
-    old_sh = spark.read.parquet(os.path.join(path, "shingles"))
     new_banded = fresh.select(id_col, F.explode("bands").alias("band"))
     cand = (
         new_banded.join(
@@ -1069,7 +1101,7 @@ def _near_dups_vs_index(
         )
     )
     return (
-        scored.filter(F.col("jac") >= p["threshold"])
+        scored.filter(F.col("jac") >= threshold)
         .select(id_col)
         .distinct()
     )
@@ -1094,49 +1126,53 @@ def _classify(
     documents with every ``sk`` column — what an upsert appends.
     ``audit`` is forwarded to :func:`_near_dups_vs_index` (one extra
     bounded collect; the probe passes none).  Caller holds the lock and
-    releases the staged frames."""
-    fps = spark.read.parquet(os.path.join(path, "fingerprints")).select(
-        "fingerprint"
+    releases the staged frames.
+
+    The exact leg (:func:`_exact_leg`) is staged once; the near-dup id
+    sets come back to it as left-joined flags, so the verdict is one
+    ``coalesce`` column and ``surv`` is its ``fresh`` filter."""
+    from fastdb_spark.cachereg import stage
+    from fastdb_spark.parallel import run_independent_jobs
+
+    # each open infers its table's schema with a Spark job; overlap them
+    fps, old_bands, old_sh = run_independent_jobs(
+        lambda t: spark.read.parquet(os.path.join(path, t)),
+        ("fingerprints", "bands", "shingles"),
     )
-    # (a) exact vs index + in-batch keep-min-id
-    exact = sk.join(fps, on="fingerprint", how="left_semi").select(id_col)
-    rest = sk.join(fps, on="fingerprint", how="left_anti")
-    canon = rest.groupBy("fingerprint").agg(F.min(id_col).alias(id_col))
-    keepmin = rest.join(canon, on=[id_col, "fingerprint"], how="left_semi")
-    in_batch_exact = rest.join(
-        keepmin.select(id_col), on=id_col, how="left_anti"
-    ).select(id_col)
+    # (a) exact vs index + in-batch keep-min-id, staged once
+    ex = stage(_exact_leg(sk, id_col, fps))
+    keepmin = ex.filter(F.col("_v").isNull())
     # (b) near-dup vs index: band-bucket join against the stored
-    # buckets, shingle refine against the stored shingle sets.  Lazy
-    # checkpoint: the chain is otherwise evaluated TWICE — once inside
-    # the greedy-MIS fixpoint actions of (c) and again when the verdicts
-    # or the append's survivors materialize (exchange reuse does not
-    # cross actions).  Computed on first use, reused after; the tiny id
-    # frame is all that is stored (r13).
+    # buckets, shingle refine against the stored shingle sets.  The
+    # checkpoint keeps (c) and the verdict join from re-running the
+    # chain (exchange reuse does not cross actions).  It is lazy only in
+    # its final stage: under AQE, which every get_spark session enables,
+    # localCheckpoint(eager=False) runs every shuffle-map stage of the
+    # chain at this call (3 jobs in a traced 1000-document dedup_index
+    # probe); only the tiny id frame is stored.
     near = _near_dups_vs_index(
-        spark, keepmin, path, p, id_col, max_bucket_size, audit=audit
+        keepmin, old_bands, old_sh, p["threshold"], id_col,
+        max_bucket_size, audit=audit,
     ).localCheckpoint(eager=False)
-    rest2 = keepmin.join(near, on=id_col, how="left_anti")
     # (c) in-batch greedy-MIS near-dup (replay-idempotent rule)
     in_batch_near = _inbatch_drops(
-        rest2, id_col, p["threshold"], max_bucket_size
+        keepmin.join(near, on=id_col, how="left_anti"),
+        id_col, p["threshold"], max_bucket_size,
     )
-    surv = rest2.join(in_batch_near, on=id_col, how="left_anti")
-    verdicts = (
-        exact.select(id_col, F.lit("exact").alias("verdict"))
-        .unionByName(
-            in_batch_exact.select(
-                id_col, F.lit("in_batch_exact").alias("verdict")
-            )
+    flagged = (
+        ex.join(near.withColumn("_near", F.lit("near")), on=id_col, how="left")
+        .join(
+            in_batch_near.withColumn("_ibn", F.lit("in_batch_near")),
+            on=id_col,
+            how="left",
         )
-        .unionByName(near.select(id_col, F.lit("near").alias("verdict")))
-        .unionByName(
-            in_batch_near.select(
-                id_col, F.lit("in_batch_near").alias("verdict")
-            )
+        .withColumn(
+            "verdict",
+            F.coalesce("_v", "_near", "_ibn", F.lit("fresh")),
         )
-        .unionByName(surv.select(id_col, F.lit("fresh").alias("verdict")))
     )
+    verdicts = flagged.select(id_col, "verdict")
+    surv = flagged.filter(F.col("verdict") == "fresh").select(*sk.columns)
     return verdicts, surv
 
 

@@ -763,7 +763,7 @@ def _q_semantic_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     - build admits the EVEN half of the clustered corpus (one-shot
       in-batch rule at eps=0.92, frozen literal centroids);
     - ``semantic_index_remove`` takes down ``vec_id % 10 == 0`` (all
-      even — partition-pruned per-cluster rewrites);
+      even — partition-pruned cluster rewrites);
     - the upsert admits the ODD half: vs-index eps-neighbor drops
       (against the post-takedown index — non-retroactive semantics:
       odd twins of removed evens must be ACCEPTED), then the one-shot
@@ -3393,7 +3393,7 @@ def _q_ann_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the even-id half of the clustered corpus, ``ivf_index_remove``
     every indexed vector with ``vec_id % 10 == 0`` (removal set derived
     from the index's OWN vectors table — the lineage-hazard caller
-    shape; partition-pruned per-cluster rewrites), ``ivf_index_upsert``
+    shape; partition-pruned cluster rewrites), ``ivf_index_upsert``
     the odd half, then probe EXHAUSTIVELY (nprobe = n_clusters) so the
     result must EQUAL the exact top-10 over the corpus minus the
     removed ids.  A removal that left rows behind, dropped too much, or

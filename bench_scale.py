@@ -1479,11 +1479,12 @@ def bench_semindex(spark) -> dict:
             out["replay_100k_s"] = round(time.perf_counter() - t0, 2)
             out["replay_100k_appended"] = replayed
         # SCALE_SEMINDEX_RM_STEP picks the takedown spread: step 100
-        # lands the 1k ids on gcd-bound clusters (25 at k=2500 — the
-        # NARROW pruned path); a step coprime to k (e.g. 101) spreads
-        # them over ~min(1000, k) clusters — the WIDE bulk
-        # dynamic-overwrite path.  SCALE_SEMINDEX_SKIP="probe,upsert,
-        # replay,compact" trims the series to build+takedown.
+        # lands the 1k ids on gcd-bound clusters (25 at k=2500); a step
+        # coprime to k (e.g. 101) spreads them over ~min(1000, k)
+        # clusters.  Both shapes are one rewrite job with a rename swap
+        # per touched cluster; the spread prices the swaps and the
+        # wider write.  SCALE_SEMINDEX_SKIP="probe,upsert,replay,
+        # compact" trims the series to build+takedown.
         rm_step = int(os.environ.get("SCALE_SEMINDEX_RM_STEP", 100))
         t0 = time.perf_counter()
         out["takedown_1k_removed"] = semantic_index_remove(

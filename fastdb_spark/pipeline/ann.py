@@ -801,169 +801,38 @@ def ivf_index_remove(
     anti-join, the backfill-scale form).  Returns the number of vectors
     actually removed.
 
-    Partition-pruned by construction: only the cluster directories that
-    contain removed ids are rewritten (tmp outside the partitioned dir +
-    atomic rename; a fully-emptied cluster directory is deleted, which
-    the probe paths already tolerate — an empty cluster is just a probe
-    that returns no candidates).  Centroids and codebooks are untouched:
-    quantizers stay frozen between rebuilds, and removal never changes
-    what the remaining codes mean.  Serializes on the index write lock.
+    Partition-pruned: one aggregate over the hit rows names (and
+    counts) the cluster partitions holding removed ids, and only those
+    are rewritten, by the takedown engine the text and media indexes
+    share (``incdedup._remove_ids``): one write job into a tmp dir
+    outside the partitioned tree, then a two-rename swap per cluster,
+    however many clusters the ids spread over.  A fully-emptied cluster
+    directory is deleted, which the probe paths already tolerate (an
+    empty cluster is a probe that returns no candidates).  Centroids and
+    codebooks are untouched: quantizers stay frozen between rebuilds,
+    and removal never changes what the remaining codes mean.
+    Serializes on the index write lock.
 
-    Reader-isolation note (ADVICE r9): the NARROW path (<= 32 partial
-    clusters) swaps each rewritten partition with two directory renames,
-    so an UNLOCKED concurrent reader can at worst observe one cluster
-    mid-swap.  The WIDE path (> 32 partial clusters) is one dynamic-
-    partition-overwrite job, and Spark's commit deletes every matched
-    ``cluster=N/`` directory before moving staged files in — an
-    unlocked concurrent probe can observe missing or partially-written
-    partitions across the whole commit window.  Readers that need a
-    consistent view during takedowns must serialize on the index write
-    lock (the engine's own probe entry points — ``semantic_index_probe``
-    and the foreachBatch stream upserts — already do); an ad-hoc
-    ``ivf_search_index`` call is snapshot-unsafe against a concurrent
-    WIDE takedown by design: the staged-rename alternative measured
-    3.7x slower at 256 affected clusters (70.5 s vs 19.2 s, BENCH_SCALE
-    r9), and a takedown that wide is an offline-maintenance shape, not
-    a serving shape."""
+    Reader isolation (ADVICE r9): an UNLOCKED concurrent reader can at
+    worst miss one cluster partition for the span of its two renames,
+    and may see some clusters before and some after the takedown.
+    Readers that need a consistent view during takedowns serialize on
+    the index write lock (the engine's own probe entry points —
+    ``semantic_index_probe`` and the foreachBatch stream upserts —
+    already do); an ad-hoc ``ivf_search_index`` call does not."""
     import os
-    import shutil
 
-    from fastdb_spark.locks import table_write_lock
+    from fastdb_spark.pipeline.incdedup import _id_hits, _remove_ids
 
-    with table_write_lock(path):
-        vec_dir = os.path.join(path, "vectors")
-        if isinstance(ids, DataFrame):
-            # sever lineage BEFORE any rewrite: the natural caller derives
-            # the removal set from the index's own vectors table, and a
-            # lazy broadcast plan over a partition this loop has already
-            # swapped throws FILE_NOT_EXIST (the round-6 refreshByPath
-            # hazard class, same fix as dedup_index_remove)
-            rm = ids.select(
-                F.col(ids.columns[0]).alias(id_col)
-            ).localCheckpoint(eager=True)
+    def clusters(rm) -> tuple[list, int]:
+        # bounded by n_clusters (the KB-sized centroid table's row count)
+        vecs = spark.read.parquet(os.path.join(path, "vectors"))
+        hits = _id_hits(vecs, rm, id_col).groupBy("cluster").count().collect()
+        return sorted(r["cluster"] for r in hits), sum(r["count"] for r in hits)
 
-            def drop(df: DataFrame) -> DataFrame:
-                return df.join(F.broadcast(rm), on=id_col, how="left_anti")
-
-            def hit(df: DataFrame) -> DataFrame:
-                return df.join(F.broadcast(rm), on=id_col, how="left_semi")
-
-        elif len(idlist := [int(i) for i in ids]) > 1024:
-            # a 10^4-element isin literal is a codegen/eval bomb
-            # (measured on the dedup index, BENCH_SCALE r9: 5-22x
-            # slower than the anti-join); large lists silently take
-            # the DataFrame form
-            rm = tiny_local_df(
-                spark, [(i,) for i in idlist], f"{id_col} long"
-            ).localCheckpoint(eager=True)
-
-            def drop(df: DataFrame) -> DataFrame:
-                return df.join(F.broadcast(rm), on=id_col, how="left_anti")
-
-            def hit(df: DataFrame) -> DataFrame:
-                return df.join(F.broadcast(rm), on=id_col, how="left_semi")
-
-        else:
-
-            def drop(df: DataFrame) -> DataFrame:
-                return df.filter(~F.col(id_col).isin(idlist))
-
-            def hit(df: DataFrame) -> DataFrame:
-                return df.filter(F.col(id_col).isin(idlist))
-
-        # two aggregate jobs up front (both bounded by n_clusters — the
-        # KB-sized centroid table's row count) instead of two count jobs
-        # per affected cluster inside the rewrite loop
-        vecs = spark.read.parquet(vec_dir)
-        hit_counts = {
-            r["cluster"]: r["n"]
-            for r in hit(vecs)
-            .groupBy("cluster")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        total_counts = {
-            r["cluster"]: r["n"]
-            for r in vecs.filter(
-                F.col("cluster").isin(list(hit_counts)) if hit_counts else F.lit(False)
-            )
-            .groupBy("cluster")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        affected = sorted(hit_counts)
-        removed = sum(hit_counts.values())
-        emptied = [cl for cl in affected if total_counts[cl] == hit_counts[cl]]
-        partial = [cl for cl in affected if total_counts[cl] > hit_counts[cl]]
-        for cl in emptied:
-            shutil.rmtree(
-                os.path.join(vec_dir, f"cluster={cl}"), ignore_errors=True
-            )
-        if len(partial) > 32:
-            # wide takedown (ids spread over many clusters): the
-            # per-cluster tmp+swap loop is SERIAL in the driver — at 256
-            # affected clusters it measured 70 s for a 1k-id removal
-            # where the data work is trivial.  One dynamic-partition-
-            # overwrite job rewrites every partially-affected partition
-            # at once; only partitions PRESENT in the written frame are
-            # replaced, and `partial` clusters all keep >= 1 row by
-            # construction, so nothing is silently left stale (emptied
-            # clusters were rmtree'd above).  Checkpoint severs the read
-            # from the directories the write replaces.
-            kept = drop(
-                spark.read.parquet(vec_dir).filter(
-                    F.col("cluster").isin(partial)
-                )
-            ).localCheckpoint(eager=True)
-            (
-                kept.write.partitionBy("cluster")
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(vec_dir)
-            )
-        else:
-            from fastdb_spark.parallel import run_independent_jobs
-
-            def _rewrite_cluster(cl: int) -> None:
-                cdir = os.path.join(vec_dir, f"cluster={cl}")
-                # ONE job per cluster (r12): the tmp write below reads
-                # cdir and completes BEFORE the swap renames it, and
-                # nothing lazy survives past the write (`rm` is already
-                # checkpointed), so the per-cluster localCheckpoint the
-                # r11 shape ran first was a redundant second
-                # materialization job — half the narrow-path job count.
-                # tmp AND old live OUTSIDE the partitioned tree: a
-                # transient "cluster=N_old" sibling would corrupt
-                # partition-column inference for any concurrent reader
-                tmp = os.path.join(path, f"_rm_tmp_cluster_{cl}")
-                drop(spark.read.parquet(cdir)).write.mode(
-                    "overwrite"
-                ).parquet(tmp)
-                old = os.path.join(path, f"_rm_old_cluster_{cl}")
-                os.rename(cdir, old)
-                os.rename(tmp, cdir)
-                shutil.rmtree(old, ignore_errors=True)
-
-            # each cluster's checkpoint+rewrite+swap touches only its own
-            # directory — independent jobs, overlapped from a bounded
-            # driver pool (guide §2.6) instead of the r11 serial loop
-            # whose per-cluster job latency dominated narrow takedowns
-            run_independent_jobs(_rewrite_cluster, partial)
-        # a takedown that wipes EVERY cluster leaves vectors/ with no
-        # part files — unreadable (UNABLE_TO_INFER_SCHEMA) for the next
-        # probe or upsert; re-seed one cluster dir with a zero-row
-        # schema-bearing slice (same discipline as incdedup._remove_ids)
-        if affected and not any(
-            name.startswith("part-")
-            for _r, _d, files in os.walk(vec_dir)
-            for name in files
-        ):
-            vschema = vecs.drop("cluster").schema
-            spark.createDataFrame([], vschema).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(vec_dir, f"cluster={affected[0]}"))
-        spark.catalog.refreshByPath(vec_dir)
-    return removed
+    return _remove_ids(
+        spark, ids, path, (("vectors", None),), id_col, "cluster", clusters
+    )
 
 
 def ivf_index_compact(
@@ -986,9 +855,8 @@ def ivf_index_compact(
         spark,
         path,
         (("vectors", None),),  # schema varies with PQ options
-        1,  # any truthy value selects the partitioned branch
+        "cluster",
         min_files,
-        part_col="cluster",
     )
 
 

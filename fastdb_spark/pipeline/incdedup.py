@@ -87,8 +87,13 @@ def _sketch(
     bands: int,
     hash_impl: str = "md5",
 ) -> DataFrame:
-    """(id, fingerprint, sh, sig) for a batch — computed once, reused by
-    every phase (cachereg-staged by callers).
+    """(id, fingerprint, sh, bands) for a batch — computed once, reused
+    by every phase (cachereg-staged by callers).  The MinHash signature
+    only feeds the band keys, so it is dropped once they are built:
+    nothing downstream reads it, and it is the widest column a staged
+    frame would otherwise cache (``bands`` references it once per band,
+    so the optimizer keeps it a separate projection and computes it once
+    per row).
 
     ``hash_impl`` mirrors :func:`~fastdb_spark.pipeline.dedup.
     minhash_lsh_pairs`: ``"md5"`` (cross-engine oracle parity) or
@@ -108,7 +113,7 @@ def _sketch(
         "sig", impl.signature("sh", n_hashes)
     ).withColumn(
         "bands", impl.bands("sig", bands, rows)
-    )
+    ).drop("sig")
 
 
 def _staged_sketch(
@@ -189,9 +194,9 @@ def build_dedup_index(
     ``id_buckets`` (also recorded in metadata) lays all three tables out
     hive-partitioned by ``id_bucket = pmod(doc_id, id_buckets)`` so that
     :func:`dedup_index_remove` rewrites ONLY the partitions containing
-    removed ids — the takedown twin of ``ivf_index_remove``'s
-    per-cluster pruning (VERDICT r7 #5: the unpruned form rewrote the
-    full index per removal batch, a non-starter at 100-TB index sizes).
+    removed ids — the pruning ``ivf_index_remove`` applies to cluster
+    partitions (VERDICT r7 #5: the unpruned form rewrote the full index
+    per removal batch, a non-starter at 100-TB index sizes).
     ``None`` keeps the flat layout (removal falls back to the full
     three-table rewrite)."""
     from fastdb_spark.cachereg import release_staged
@@ -289,29 +294,30 @@ def _inbatch_drops(
     return greedy_mis_drops(pairs, id_col)
 
 
-def _has_part_files(tdir: str) -> bool:
-    return any(
-        name.startswith("part-")
-        for _r, _d, files in os.walk(tdir)
-        for name in files
+def _part_files(d: str) -> int:
+    return sum(
+        1 for _r, _d, files in os.walk(d) for f in files if f.startswith("part-")
     )
 
 
-def _seed_if_empty(spark: SparkSession, tdir: str, schema, bucket: int = 0) -> None:
-    """Keep an id-bucketed table READABLE when a write leaves it with no
-    part files at all: a ``partitionBy`` write of a zero-row frame emits
-    nothing, and the next ``spark.read.parquet`` over the table raises
-    UNABLE_TO_INFER_SCHEMA (ADVICE r8: an overwrite BUILD whose survivor
-    set is empty — empty or fully-duplicate corpus — regressed exactly
-    the edge the flat layout handles for free, since an empty
-    non-partitioned write emits a schema-bearing file).  Re-seed one
-    ``id_bucket`` partition with a zero-row schema-bearing slice — the
-    same discipline :func:`_remove_ids` applies to emptied tables.
-    ``schema`` carries the data columns only (the partition column comes
-    from the directory name)."""
-    if not _has_part_files(tdir):
+def _seed_if_empty(
+    spark: SparkSession, tdir: str, schema, part_col: str, value=0
+) -> None:
+    """Keep a partitioned index table READABLE when a write leaves it
+    with no part files at all: a ``partitionBy`` write of a zero-row
+    frame emits nothing, and the next ``spark.read.parquet`` over the
+    table raises UNABLE_TO_INFER_SCHEMA (ADVICE r8: an overwrite BUILD
+    whose survivor set is empty — empty or fully-duplicate corpus —
+    regressed exactly the edge the flat layout handles for free, since
+    an empty non-partitioned write emits a schema-bearing file).
+    Re-seed the ``part_col=value`` partition with a zero-row
+    schema-bearing slice — the same discipline :func:`_rewrite_parts`
+    applies to tables a takedown empties.  ``schema`` carries the data
+    columns only (the partition column comes from the directory
+    name)."""
+    if not _part_files(tdir):
         spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-            os.path.join(tdir, f"id_bucket={bucket}")
+            os.path.join(tdir, f"{part_col}={value}")
         )
 
 
@@ -453,7 +459,7 @@ def rebuild_dedup_index(
     ``shingle_k`` CANNOT change (shingles are stored pre-cut).  Returns
     the number of indexed documents.  Serializes on the table write
     lock like every upsert."""
-    with table_write_lock(os.path.normpath(path)):
+    with table_write_lock(path):
         p = _load_params(path)
         hash_impl = hash_impl or p.get("hash_impl", "md5")
         n_hashes = n_hashes or p["n_hashes"]
@@ -569,16 +575,11 @@ def dedup_index_remove(
     On an id-bucketed index (``id_buckets`` in _meta.json — the default
     layout since round 8) only the hive partitions that CONTAIN removed
     ids are rewritten: a k-id takedown touches at most
-    ``min(k, id_buckets)`` partitions per table, never the whole index —
-    the same pruning discipline as ``ivf_index_remove``'s per-cluster
-    rewrites (VERDICT r7 #5).  Flat (pre-bucketed) indexes fall back to
-    the full three-table rewrite.  Either way each rewrite is a tmp-dir
-    + atomic-swap (the same tmp+swap discipline as storage.py: writing
-    over a directory a live plan reads is the refreshByPath
-    recomputation hazard the round-6 bug hunt established; the tmp write
-    reads the OLD directory and the swap is a rename; tmp/old live
-    OUTSIDE the partitioned tree so partition discovery never sees
-    them).  Serializes on the table write lock.
+    ``min(k, id_buckets)`` partitions per table, never the whole index.
+    Flat (pre-bucketed) indexes rewrite each table whole.  Either way
+    the rewrite is the tmp-dir + rename swap of :func:`_rewrite_parts`,
+    the engine every persisted index (text, media, IVF) shares.
+    Serializes on the table write lock.
 
     Semantics stated precisely (tested): removal is NOT retroactive —
     documents that were dropped in earlier batches because they
@@ -598,8 +599,71 @@ def dedup_index_remove(
             ("shingles", [id_col, "sh"]),
         ),
         id_col,
-        p.get("id_buckets"),
+        *_bucket_layout(p.get("id_buckets")),
     )
+
+
+#: longest id list a takedown filters with an ``isin`` literal.  A
+#: 10^4-element literal is a codegen/eval bomb: measured at a 10M-doc
+#: index (BENCH_SCALE r9), the 10k-id list form cost 96.6 s (bucketed) /
+#: 37.5 s (flat) vs ~6 s for the equivalent 1k batch — the filter, not
+#: the rewrite.  Longer lists take the broadcast anti-join.
+_ISIN_MAX_IDS = 1024
+
+
+def _removal_set(spark: SparkSession, ids, id_col: str):
+    """Id triage of every takedown: a list of at most ``_ISIN_MAX_IDS``
+    ids stays a Python list (an ``isin`` literal); a longer list or a
+    single-column DataFrame becomes a localCheckpointed one-column
+    ``id_col`` frame (a broadcast join side).  The checkpoint severs
+    lineage BEFORE any rewrite: a caller naturally derives the removal
+    set from the index's own tables, and the broadcast is re-evaluated
+    once per rewritten table — after the first swap the old part files
+    are gone and a lazy plan over them throws FILE_NOT_EXIST (the
+    round-6 refreshByPath hazard, caught by
+    test_no_cartesian_product[dedup_index_takedown])."""
+    if not isinstance(ids, DataFrame):
+        ids = [int(i) for i in ids]
+        if len(ids) <= _ISIN_MAX_IDS:
+            return ids
+        from fastdb_spark.localrel import tiny_local_df
+
+        ids = tiny_local_df(spark, [(i,) for i in ids], f"{id_col} long")
+    return ids.select(F.col(ids.columns[0]).alias(id_col)).localCheckpoint(
+        eager=True
+    )
+
+
+def _id_hits(df: DataFrame, rm, id_col: str, hit: bool = True) -> DataFrame:
+    """Rows of ``df`` whose ``id_col`` is in the removal set ``rm`` of
+    :func:`_removal_set` (``hit``), or the rest.  A null id is never
+    hit, in either form."""
+    if isinstance(rm, DataFrame):
+        how = "left_semi" if hit else "left_anti"
+        return df.join(F.broadcast(rm), on=id_col, how=how)
+    m = F.coalesce(F.col(id_col).isin(rm), F.lit(False))
+    return df.filter(m if hit else ~m)
+
+
+def _bucket_layout(nb: int | None) -> tuple:
+    """``(part_col, locate)`` of the id-bucket layout for
+    :func:`_remove_ids`: the partitions a removal set can touch are
+    ``pmod(id, nb)`` of its ids, computed without scanning the index
+    (so the removed rows are left for the engine to count).  A flat
+    index (``nb=None``) is ``(None, None)``."""
+    if not nb:
+        return None, None
+
+    def locate(rm) -> tuple[list, None]:
+        if isinstance(rm, DataFrame):
+            # bounded collect: distinct pmod values, at most nb rows
+            b = F.pmod(F.col(rm.columns[0]), F.lit(nb)).cast("int")
+            rows = rm.select(b).distinct().collect()
+            return sorted(r[0] for r in rows if r[0] is not None), None
+        # Python % matches Spark pmod for positive moduli
+        return sorted({i % nb for i in rm}), None
+
+    return "id_bucket", locate
 
 
 def _remove_ids(
@@ -608,173 +672,131 @@ def _remove_ids(
     path: str,
     tables: tuple,
     id_col: str,
-    nb: int | None,
+    part_col: str | None,
+    locate,
 ) -> int:
-    """Shared takedown engine (used by the text dedup index and the
-    perceptual media index): drop ``ids`` from every ``(table, cols)``
-    in ``tables`` under ``path``, partition-pruned when the index is
-    id-bucketed (``nb``), full tmp+swap rewrite otherwise.  Returns the
-    number of rows removed from the FIRST table (the one-row-per-doc
-    one).  Serializes on the table write lock."""
+    """Shared takedown engine of every persisted index (text, media,
+    IVF): drop ``ids`` from every ``(table, cols)`` in ``tables`` under
+    ``path`` and return the number of rows removed from the FIRST table
+    (the one-row-per-item one).  ``locate(rm)`` is the one per-family
+    input: it returns the ``part_col`` values of the partitions that
+    can hold the removal set ``rm`` (id buckets computed from the ids,
+    :func:`_bucket_layout`; IVF clusters from one aggregate over the hit
+    rows), and the first table's hit-row count when its lookup already
+    counted them, else None — the engine then counts them on the first
+    table's source partitions before that table's rewrite.
+    ``part_col=None`` is a flat index, each table rewritten whole.  The
+    tables rewrite disjoint directory trees, so their
+    :func:`_rewrite_parts` calls overlap from a bounded driver pool
+    (guide §2.6).  Serializes on the table write lock."""
+    from fastdb_spark.parallel import run_independent_jobs
+
+    with table_write_lock(path):
+        rm = _removal_set(spark, ids, id_col)
+        parts, removed = locate(rm) if part_col else (None, None)
+        if part_col and not parts:
+            return 0
+
+        def count(src: DataFrame) -> int:
+            return _id_hits(src, rm, id_col).count()
+
+        def _drop_from(item) -> int | None:
+            i, (table, cols) = item
+            return _rewrite_parts(
+                spark, path, table, cols, part_col, parts,
+                lambda df: _id_hits(df, rm, id_col, hit=False),
+                before=count if i == 0 and removed is None else None,
+            )
+
+        counted = run_independent_jobs(_drop_from, list(enumerate(tables)))[0]
+        spark.catalog.refreshByPath(path)
+    return (counted or 0) if removed is None else removed
+
+
+def _rewrite_parts(
+    spark: SparkSession,
+    path: str,
+    table: str,
+    cols: list | None,
+    part_col: str | None,
+    parts,
+    transform,
+    before=None,
+):
+    """THE directory rewrite of every persisted index, takedown and
+    compaction alike: the ``part_col`` partitions ``parts`` of
+    ``path/table`` become ``transform`` of their rows, and every other
+    partition dir is untouched (mtime-asserted in tests).
+    ``part_col=None`` rewrites a flat table whole.  ``cols=None`` means
+    every data column (the IVF vectors schema varies with the PQ
+    options).  ``before(src)``, when given, runs on the source rows
+    before the write; its result is returned.  The caller holds the
+    table write lock.
+
+    One read + one write job over all the partitions together (a
+    per-partition loop pays job-launch latency per partition — measured
+    3x slower on the takedown gate).  The rows are repartitioned on
+    ``part_col`` first: the multi-dir read bin-packs files of several
+    partitions into one task, and ``partitionBy`` then SORTS every task
+    by the partition column (30+ s on a 4M-doc shingles table); after
+    the shuffle each task holds one partition, which lands as one file.
+    The write goes to a tmp dir OUTSIDE the partitioned tree (partition
+    discovery never sees it, and writing over a directory a live plan
+    reads is the refreshByPath recomputation hazard), then each
+    partition is swapped in with two renames, so an unlocked reader can
+    at worst miss one partition for the span of its swap.  A partition
+    left with no rows has no tmp dir, so its swap deletes it; a table
+    left with no part files at all is re-seeded
+    (:func:`_seed_if_empty`) so the next read still infers a schema.  A
+    failed write swaps nothing."""
     import shutil
 
-    with table_write_lock(os.path.normpath(path)):
-        buckets: list[int] = []
-        if not isinstance(ids, DataFrame):
-            idlist = [int(i) for i in ids]
-            if len(idlist) > 1024:
-                # a 10^4-element isin literal is a codegen/eval bomb:
-                # measured at a 10M-doc index (BENCH_SCALE r9), the
-                # 10k-id list form cost 96.6 s (bucketed) / 37.5 s
-                # (flat) vs ~6 s for the equivalent 1k batch — the
-                # filter, not the rewrite.  Above this threshold a list
-                # silently takes the documented backfill form
-                # (single-column frame -> broadcast anti-join).
-                from fastdb_spark.localrel import tiny_local_df
-
-                ids = tiny_local_df(
-                    spark, [(i,) for i in idlist], f"{id_col} long"
-                )
-            else:
-                ids = idlist
-        if isinstance(ids, DataFrame):
-            # sever lineage BEFORE the rewrites: a caller naturally derives
-            # the removal set from the index's own tables (filter on
-            # fingerprints), and the broadcast below is re-evaluated once
-            # per rewritten table — after the fingerprints swap the old
-            # part-files are gone and a lazy plan over them throws
-            # FILE_NOT_EXIST (the round-6 refreshByPath hazard, caught
-            # here by test_no_cartesian_product[dedup_index_takedown])
-            rm = ids.select(
-                F.col(ids.columns[0]).alias(id_col)
-            ).localCheckpoint(eager=True)
-            if nb:
-                # bounded collect: distinct pmod values, at most nb rows
-                buckets = sorted(
-                    r["b"]
-                    for r in rm.select(
-                        F.pmod(F.col(id_col), F.lit(nb))
-                        .cast("int")
-                        .alias("b")
-                    )
-                    .distinct()
-                    .collect()
-                )
-
-            def drop(df: DataFrame) -> DataFrame:
-                return df.join(F.broadcast(rm), on=id_col, how="left_anti")
-
-        else:
-            idlist = list(ids)
-            if nb:
-                # Python % matches Spark pmod for positive moduli
-                buckets = sorted({int(i) % nb for i in idlist})
-
-            def drop(df: DataFrame) -> DataFrame:
-                return df.filter(~F.col(id_col).isin(idlist))
-
-        first_table = tables[0][0]
-        if nb:
-            # pruned path: rewrite ONLY the hive partitions holding
-            # removed ids; every other partition dir is untouched
-            # (mtime-asserted in tests).  ONE read+write job per table
-            # over all affected partitions together (a per-bucket loop
-            # would pay Spark job-launch overhead × buckets × 3 —
-            # measured 3x slower on the takedown gate), then a cheap
-            # per-bucket directory swap.
-            def _rewrite_table(tc) -> int | None:
-                table, cols = tc
-                tdir = os.path.join(path, table)
-                hit = [
-                    b
-                    for b in buckets
-                    if os.path.isdir(os.path.join(tdir, f"id_bucket={b}"))
-                ]
-                if not hit:
-                    return None
-                src = spark.read.option("basePath", tdir).parquet(
-                    *[os.path.join(tdir, f"id_bucket={b}") for b in hit]
-                )
-                # schema captured BEFORE the swaps: src's lineage reads
-                # the original partition dirs, which the swap deletes
-                tschema = src.select(*cols).schema
-                n_before = src.count() if table == first_table else None
-                tmp = os.path.join(path, f"_tmp_{table}")
-                # repartition on the bucket column before the dynamic-
-                # partition write: the multi-dir read bin-packs files
-                # from different buckets into one task, and partitionBy
-                # then SORTS every task by id_bucket — 30+ s on a 4M-doc
-                # shingles table.  After the shuffle each task holds one
-                # bucket, the sort is single-valued, and output files
-                # stay bucket-aligned.
-                drop(src.select(*cols, "id_bucket")).repartition(
-                    "id_bucket"
-                ).write.partitionBy("id_bucket").mode("overwrite").parquet(
-                    tmp
-                )
-                removed = None
-                if table == first_table:
-                    # a removal that empties every affected bucket leaves
-                    # tmp with NO part files (an empty partitionBy write),
-                    # and reading it back raises UNABLE_TO_INFER_SCHEMA —
-                    # check for data files before counting
-                    n_tmp = (
-                        spark.read.parquet(tmp).count()
-                        if _has_part_files(tmp)
-                        else 0
-                    )
-                    removed = n_before - n_tmp
-                for b in hit:
-                    pdir = os.path.join(tdir, f"id_bucket={b}")
-                    old = os.path.join(path, f"_old_{table}_{b}")
-                    new_part = os.path.join(tmp, f"id_bucket={b}")
-                    os.rename(pdir, old)
-                    # a bucket whose rows were ALL removed has no dir in
-                    # tmp — the swap then simply deletes the partition
-                    if os.path.isdir(new_part):
-                        os.rename(new_part, pdir)
-                    shutil.rmtree(old, ignore_errors=True)
-                shutil.rmtree(tmp, ignore_errors=True)
-                # a removal that emptied EVERY partition leaves the
-                # table with no part files — unreadable
-                # (UNABLE_TO_INFER_SCHEMA) for the next upsert's read;
-                # keep the schema alive with a zero-row slice in one
-                # partition dir
-                _seed_if_empty(spark, tdir, tschema, hit[0])
-                return removed
-
-            # each table rewrites its own directory tree (separate tmp,
-            # separate swaps) — independent jobs, overlapped from a
-            # bounded driver pool (guide §2.6) instead of the r11
-            # serial three-table loop
-            from fastdb_spark.parallel import run_independent_jobs
-
-            results = run_independent_jobs(_rewrite_table, list(tables))
-            removed = next((r for r in results if r is not None), 0)
-            spark.catalog.refreshByPath(path)
-            return removed
-        first = spark.read.parquet(os.path.join(path, first_table))
-        n_before = first.count()
-
-        def _rewrite_flat(tc) -> None:
-            table, cols = tc
-            tdir = os.path.join(path, table)
-            tmp = tdir + "_tmp"
-            drop(spark.read.parquet(tdir).select(*cols)).write.mode(
-                "overwrite"
-            ).parquet(tmp)
-            old = tdir + "_old"
-            os.rename(tdir, old)
-            os.rename(tmp, tdir)
+    tdir = os.path.join(path, table)
+    tmp = os.path.join(path, f"_tmp_{table}")
+    if part_col is None:
+        swaps = [(tdir, tmp)]
+        src = spark.read.parquet(tdir)
+    else:
+        parts = [
+            v for v in parts
+            if os.path.isdir(os.path.join(tdir, f"{part_col}={v}"))
+        ]
+        if not parts:
+            return None
+        swaps = [
+            (os.path.join(tdir, d), os.path.join(tmp, d))
+            for d in (f"{part_col}={v}" for v in parts)
+        ]
+        src = spark.read.option("basePath", tdir).parquet(
+            *(cur for cur, _ in swaps)
+        )
+    cols = cols or [c for c in src.columns if c != part_col]
+    # captured BEFORE the swaps: src's lineage reads the dirs they delete
+    schema = src.select(*cols).schema
+    out = before(src) if before else None
+    rows = transform(src.select(*cols, *([part_col] if part_col else [])))
+    w = (
+        rows.repartition(part_col).write.partitionBy(part_col)
+        if part_col
+        else rows.write
+    )
+    try:
+        w.option("maxRecordsPerFile", 10_000_000).mode("overwrite").parquet(
+            tmp
+        )
+        for cur, new in swaps:
+            old = os.path.join(
+                path, "_old_" + os.path.relpath(cur, path).replace(os.sep, "_")
+            )
+            os.rename(cur, old)
+            if os.path.isdir(new):
+                os.rename(new, cur)
             shutil.rmtree(old, ignore_errors=True)
-
-        # independent per-table rewrites, overlapped (guide §2.6)
-        from fastdb_spark.parallel import run_independent_jobs
-
-        run_independent_jobs(_rewrite_flat, list(tables))
-        spark.catalog.refreshByPath(path)
-        n_after = spark.read.parquet(os.path.join(path, first_table)).count()
-    return n_before - n_after
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    if part_col:
+        _seed_if_empty(spark, tdir, schema, part_col, parts[0])
+    return out
 
 
 def compact_dedup_index(
@@ -789,11 +811,10 @@ def compact_dedup_index(
     does — the classic small-files failure at 100 TB).  Rewrites ONLY
     the partitions holding more than ``min_files`` part files, one
     read+write job per table over the affected partitions together
-    (the ``_remove_ids`` pruning/swap discipline: tmp+swap outside the
-    partitioned tree, bucket-aligned repartition before the dynamic-
-    partition write).  Content is untouched — pure file-count hygiene.
-    Serializes on the table write lock.  Returns per-table
-    ``{buckets_compacted, files_before, files_after}``."""
+    (:func:`_rewrite_parts`, the engine the takedown uses).  Content is
+    untouched — pure file-count hygiene.  Serializes on the table write
+    lock.  Returns per-table ``{buckets_compacted, files_before,
+    files_after}``."""
     p = _load_params(path)
     return _compact_tables(
         spark,
@@ -803,7 +824,7 @@ def compact_dedup_index(
             ("bands", ["band", _id_col_of(p)]),
             ("shingles", [_id_col_of(p), "sh"]),
         ),
-        p.get("id_buckets"),
+        _bucket_layout(p.get("id_buckets"))[0],
         min_files,
     )
 
@@ -816,119 +837,49 @@ def _compact_tables(
     spark: SparkSession,
     path: str,
     tables: tuple,
-    nb: int | None,
+    part_col: str | None,
     min_files: int,
-    part_col: str = "id_bucket",
 ) -> dict:
     """Shared compaction engine (text dedup index, perceptual media
-    index, IVF vector index).  Partitioned layout: rewrite only
-    over-threshold ``part_col`` partitions; flat layout: rewrite the
-    whole table when it exceeds the threshold.  ``cols=None`` in a
-    tables entry means every data column (derived from the scan —
-    the IVF vectors table's schema varies with the PQ options)."""
-    import shutil
+    index, IVF vector index): :func:`_rewrite_parts` with an identity
+    transform over the ``part_col`` partitions holding more than
+    ``min_files`` part files; on a flat layout (``part_col=None``) the
+    whole table, coalesced to one file, when it does.  ``cols=None`` in
+    a tables entry means every data column."""
+    from fastdb_spark.parallel import run_independent_jobs
+
+    def _compact_one(tc) -> tuple[str, dict | None]:
+        table, cols = tc
+        tdir = os.path.join(path, table)
+        if not os.path.isdir(tdir):
+            return table, None
+        if part_col is None:
+            units = {None: tdir}
+        else:
+            units = {
+                d.split("=", 1)[1]: os.path.join(tdir, d)
+                for d in os.listdir(tdir)
+                if d.startswith(f"{part_col}=")
+                and os.path.isdir(os.path.join(tdir, d))
+            }
+        before = {v: _part_files(d) for v, d in units.items()}
+        hit = [v for v, n in before.items() if n > min_files]
+        if hit:
+            _rewrite_parts(
+                spark, path, table, cols, part_col, hit,
+                (lambda df: df) if part_col else (lambda df: df.coalesce(1)),
+            )
+        return table, {
+            "buckets_compacted": len(hit),
+            "files_before": sum(before[v] for v in hit),
+            "files_after": sum(_part_files(units[v]) for v in hit),
+        }
 
     out: dict = {}
-    with table_write_lock(os.path.normpath(path)):
-
-        def _compact_one(tc) -> tuple[str, dict | None]:
-            table, cols = tc
-            tdir = os.path.join(path, table)
-            if not os.path.isdir(tdir):
-                return table, None
-            if nb:
-                hit = []
-                before = 0
-                for d in os.listdir(tdir):
-                    pdir = os.path.join(tdir, d)
-                    if not (
-                        d.startswith(f"{part_col}=") and os.path.isdir(pdir)
-                    ):
-                        continue
-                    nfiles = sum(
-                        1 for f in os.listdir(pdir) if f.startswith("part-")
-                    )
-                    if nfiles > min_files:
-                        hit.append(d)
-                        before += nfiles
-                if not hit:
-                    return table, {
-                        "buckets_compacted": 0,
-                        "files_before": 0,
-                        "files_after": 0,
-                    }
-                src = spark.read.option("basePath", tdir).parquet(
-                    *[os.path.join(tdir, d) for d in hit]
-                )
-                if cols is None:
-                    cols = [c for c in src.columns if c != part_col]
-                tmp = os.path.join(path, f"_tmp_compact_{table}")
-                # partition-aligned repartition: one task per partition
-                # value -> one output file each (the round-8 write-path
-                # lesson), and the dynamic-partition sort is
-                # single-valued per task
-                src.select(*cols, part_col).repartition(
-                    part_col
-                ).write.option("maxRecordsPerFile", 10_000_000).partitionBy(
-                    part_col
-                ).mode("overwrite").parquet(tmp)
-                after = 0
-                for d in hit:
-                    pdir = os.path.join(tdir, d)
-                    old = os.path.join(path, f"_old_compact_{table}_{d}")
-                    new_part = os.path.join(tmp, d)
-                    os.rename(pdir, old)
-                    os.rename(new_part, pdir)
-                    shutil.rmtree(old, ignore_errors=True)
-                    after += sum(
-                        1 for f in os.listdir(pdir) if f.startswith("part-")
-                    )
-                shutil.rmtree(tmp, ignore_errors=True)
-                return table, {
-                    "buckets_compacted": len(hit),
-                    "files_before": before,
-                    "files_after": after,
-                }
-            else:
-                nfiles = sum(
-                    1
-                    for _r, _d, files in os.walk(tdir)
-                    for f in files
-                    if f.startswith("part-")
-                )
-                if nfiles <= min_files:
-                    return table, {
-                        "buckets_compacted": 0,
-                        "files_before": 0,
-                        "files_after": 0,
-                    }
-                tmp = tdir + "_tmp_compact"
-                src = spark.read.parquet(tdir)
-                if cols is None:
-                    cols = src.columns
-                src.select(*cols).coalesce(1).write.option(
-                    "maxRecordsPerFile", 10_000_000
-                ).mode("overwrite").parquet(tmp)
-                old = tdir + "_old_compact"
-                os.rename(tdir, old)
-                os.rename(tmp, tdir)
-                shutil.rmtree(old, ignore_errors=True)
-                return table, {
-                    "buckets_compacted": 1,
-                    "files_before": nfiles,
-                    "files_after": sum(
-                        1
-                        for _r, _d, files in os.walk(tdir)
-                        for f in files
-                        if f.startswith("part-")
-                    ),
-                }
-
+    with table_write_lock(path):
         # per-table compactions rewrite disjoint directory trees —
         # independent jobs, overlapped from a bounded driver pool
-        # (guide §2.6) instead of the r11 serial three-table loop
-        from fastdb_spark.parallel import run_independent_jobs
-
+        # (guide §2.6)
         for table, stats in run_independent_jobs(_compact_one, list(tables)):
             if stats is not None:
                 out[table] = stats
@@ -974,7 +925,9 @@ def _write_id_bucketed(
     if overwrite:
         w = w.option("partitionOverwriteMode", "static")
     w.partitionBy("id_bucket").mode(mode).parquet(tdir)
-    _seed_if_empty(df.sparkSession, tdir, df.drop("id_bucket").schema)
+    _seed_if_empty(
+        df.sparkSession, tdir, df.drop("id_bucket").schema, "id_bucket"
+    )
 
 
 def _stream_index(
@@ -1051,7 +1004,8 @@ def _near_dups_vs_index(
     caps candidates PER NEW doc (the refine only needs one hit; never
     the index side); truncated docs are recorded in ``audit`` when one
     is passed (one bounded limit-collect on a cachereg-staged frame —
-    the caller's ``release_staged()`` frees it)."""
+    the caller's ``release_staged()`` frees it; without an audit the
+    capped frame is not staged)."""
     from fastdb_spark.cachereg import stage
 
     new_banded = fresh.select(id_col, F.explode("bands").alias("band"))
@@ -1071,12 +1025,18 @@ def _near_dups_vs_index(
         # partition (no extra shuffle) so truncated docs can be flagged.
         w = Window.partitionBy(id_col).orderBy("_old_id")
         wc = Window.partitionBy(id_col)
-        cand = stage(
+        cand = (
             cand.withColumn("_rn", F.row_number().over(w))
             .withColumn("_cnt", F.count("*").over(wc))
             .filter(F.col("_rn") <= max_bucket_size)
         )
         if audit is not None:
+            # staged only for the audit, the one second reader; without
+            # it the refine below reads the capped frame once (inside
+            # the caller's `near` checkpoint), and a stage would add a
+            # persist and an eager count job for nothing — the rule
+            # imagededup.hash_matches follows
+            cand = stage(cand)
             trunc = (
                 cand.filter(F.col("_cnt") > max_bucket_size)
                 .select(id_col)
@@ -1206,7 +1166,7 @@ def dedup_index_probe(
     _check_scheme(p, path)
     from fastdb_spark.cachereg import release_staged
 
-    with table_write_lock(os.path.normpath(path)):
+    with table_write_lock(path):
         # pre-hash_impl indexes carry no key: they were md5
         sk = _staged_sketch(
             new_docs, id_col, text_col,
@@ -1251,7 +1211,7 @@ def dedup_index_upsert(
     # must not leave a previous call's truncation counts standing
     LAST_UPSERT_AUDIT["truncated_docs"] = 0
     LAST_UPSERT_AUDIT["sample"] = []
-    with table_write_lock(os.path.normpath(path)):
+    with table_write_lock(path):
         # pre-hash_impl indexes carry no key: they were md5
         sk = _staged_sketch(
             new_docs, id_col, text_col,

@@ -62,6 +62,7 @@ from fastdb_spark.pipeline.incdedup import (
     DEFAULT_ID_BUCKETS,
     DEFAULT_ID_CEILING,
     _align_id_buckets,
+    _bucket_layout,
     _remove_ids,
     _stream_index,
     _write_id_bucketed,
@@ -321,7 +322,7 @@ def media_index_upsert(
 
     LAST_UPSERT_AUDIT["truncated_items"] = 0
     LAST_UPSERT_AUDIT["sample"] = []
-    with table_write_lock(os.path.normpath(path)):
+    with table_write_lock(path):
         # decode wide, maintain narrow (see build_media_index)
         hashes = stage_adaptive(
             _hash_frame(
@@ -393,7 +394,7 @@ def media_index_probe(
     id_col = p.get("id_col", "media_id")
     from fastdb_spark.cachereg import release_staged, stage
 
-    with table_write_lock(os.path.normpath(path)):
+    with table_write_lock(path):
         # plain stage: on this read-only probe stage_adaptive's narrowed
         # view measured no faster than the cached layout in interleaved
         # A/Bs (build and upsert, where it did help, keep it)
@@ -436,7 +437,7 @@ def media_index_remove(
         path,
         (("hashes", ["phash", id_col]),),
         id_col,
-        p.get("id_buckets"),
+        *_bucket_layout(p.get("id_buckets")),
     )
 
 
@@ -460,7 +461,7 @@ def compact_media_index(
         spark,
         path,
         (("hashes", ["phash", id_col]),),
-        p.get("id_buckets"),
+        _bucket_layout(p.get("id_buckets"))[0],
         min_files,
     )
 

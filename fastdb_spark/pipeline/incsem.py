@@ -378,7 +378,7 @@ def semantic_index_probe(
     concurrent takedown's partition swap cannot invalidate the frame."""
     from fastdb_spark.cachereg import release_staged
 
-    with table_write_lock(os.path.normpath(path)):
+    with table_write_lock(path):
         verdicts, _ = _classify(
             spark, batch, path, id_col, vec_col,
             strategy, assign_strategy, max_cluster_size,
@@ -411,7 +411,7 @@ def semantic_index_upsert(
     from fastdb_spark.pipeline.ann import _ivf_upsert_unlocked
 
     spark = batch.sparkSession
-    with table_write_lock(os.path.normpath(path)):
+    with table_write_lock(path):
         _, fresh_keyed = _classify(
             spark, batch, path, id_col, vec_col,
             strategy, assign_strategy, max_cluster_size,
@@ -428,8 +428,8 @@ def semantic_index_upsert(
 
 def semantic_index_remove(spark: SparkSession, ids, path: str,
                           id_col: str = "vec_id") -> int:
-    """Takedown — delegates to the IVF engine (per-cluster pruned
-    rewrites, quantizers frozen, non-retroactive)."""
+    """Takedown — delegates to the IVF engine (rewrites only the
+    clusters holding removed ids, quantizers frozen, non-retroactive)."""
     from fastdb_spark.pipeline.ann import ivf_index_remove
 
     return ivf_index_remove(spark, ids, path, id_col=id_col)

@@ -299,9 +299,10 @@ def test_semantic_index_upsert_vs_remove_two_processes(spark, tmp_path):
 
 
 def test_wide_takedown_bulk_path(spark, tmp_path):
-    """A takedown spread over >32 clusters takes the one-job dynamic-
-    partition-overwrite path (the serial per-cluster loop measured 70 s
-    for a 1k-id removal over 256 clusters): membership exact, emptied
+    """A takedown spread over many clusters (36 partially affected, one
+    emptied) is still one rewrite job with a rename swap per cluster
+    (the serial per-cluster job loop it replaced measured 70 s for a
+    1k-id removal over 256 clusters): membership exact, emptied
     clusters deleted, partially-affected clusters rewritten, untouched
     clusters untouched (mtime-asserted)."""
     from fastdb_spark.pipeline.ann import build_ivf_index, ivf_index_remove
@@ -319,7 +320,7 @@ def test_wide_takedown_bulk_path(spark, tmp_path):
     path = str(tmp_path / "wideidx")
     build_ivf_index(df, path, n_clusters=k, centroids=cents)
     vdir = os.path.join(path, "vectors")
-    # clusters 0..35: remove one member (partial, 36 > 32 -> bulk path);
+    # clusters 0..35: remove one member (partially affected);
     # cluster 36: remove all three (emptied); 37-39 untouched
     rm = [c * 10 for c in range(36)] + [360, 361, 362]
     mt_untouched = {

@@ -119,20 +119,15 @@ def _q_priority_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_versioned_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1 through the full processing-version path: broadcast bpv-mapping
-    join + priority dedup (fastdb_spark.versions.versioned)."""
+    """A1 through the full processing-version path: base-version priority
+    map + priority dedup (fastdb_spark.versions.versioned)."""
     li = Catalog(spark, sf_dir).table("lineitem")
     phot = ad.versioned_photometry(li).withColumn(
         "base_procver_id", F.concat(F.lit("bpv"), F.col("priority").cast("string"))
     ).drop("priority")
-    mapping = tiny_local_df(
-        spark,
-        [("bpv0", 0), ("bpv1", 1), ("bpv2", 2)],
-        "base_procver_id string, priority bigint",
-    )
     return versioned(
         phot,
-        mapping,
+        {"bpv0": 0, "bpv1": 1, "bpv2": 2},
         keys=("rootid", "visit"),
         extra_order=("srcid", "band", "midpointmjdtai", "psfflux", "psffluxerr"),
     )

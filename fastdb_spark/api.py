@@ -42,7 +42,6 @@ from pyspark.sql import functions as F
 
 from fastdb_spark.catalog import Catalog
 from fastdb_spark.operators.paginate import random_sample
-from fastdb_spark.parallel import run_independent_jobs
 from fastdb_spark.queries import ltcv as ltcv_q
 from fastdb_spark.queries import objstats as objstats_q
 from fastdb_spark.queries import search as search_q
@@ -75,10 +74,10 @@ class FastdbAPI:
     def __init__(self, spark: SparkSession, catalog_root: str, queue_root: str | None = None):
         self.spark = spark
         self.catalog = Catalog(spark, catalog_root)
-        # each open infers its table's schema with a Spark job; overlap them
-        names = [t for t in CATALOG_TABLES if self.catalog.exists(t)]
-        opened = run_independent_jobs(self.catalog.table, names)
-        self.tables = dict(zip(names, opened))
+        # declared-schema opens: no table open submits a Spark job
+        self.tables = {
+            t: self.catalog.table(t) for t in CATALOG_TABLES if self.catalog.exists(t)
+        }
         self.resolver = ProcverResolver(
             self.tables["processing_version"],
             self.tables["processing_version_alias"],
@@ -311,9 +310,10 @@ class FastdbAPI:
     # -- spectrum cycle write path (reference spectrumapp.py POST endpoints) -
 
     def _store(self, name: str):
+        from fastdb_spark.schemas import TABLES
         from fastdb_spark.storage import ParquetTable
 
-        return ParquetTable(self.spark, self.catalog.path(name))
+        return ParquetTable(self.spark, self.catalog.path(name), TABLES[name])
 
     def _refresh(self, name: str) -> None:
         # parquet DataFrames pin their file listing at plan time; re-read
@@ -514,7 +514,7 @@ class FastdbAPI:
         the highest-priority one (the A1 rule) — deterministic.  The
         version mapping uses the diasource table's entry (the reference
         joins the mapping without a table restriction)."""
-        from fastdb_spark.operators.dedup import dedup_top_priority
+        from fastdb_spark.versions import versioned
 
         ids = (
             [int(x) for x in diasourceids]
@@ -528,14 +528,13 @@ class FastdbAPI:
             b = b.filter(F.col("brokername") == brokername)
         if topic is not None:
             b = b.filter(F.col("topic") == topic)
-        mapping = self.resolver.bpv_mapping(processing_version, "diasource")
-        joined = b.join(F.broadcast(mapping), on="base_procver_id", how="inner")
         # base_procver_id tiebreak: equal priorities would otherwise pick
         # a partition-order-dependent row
-        out = dedup_top_priority(
-            joined,
-            ["diasourceid", "brokername", "topic"],
-            ["priority", "base_procver_id"],
+        out = versioned(
+            b,
+            self.resolver.priorities(processing_version, "diasource"),
+            keys=("diasourceid", "brokername", "topic"),
+            extra_order=("base_procver_id",),
         )
         return out.select(
             "diasourceid", "brokername", "topic", "info"

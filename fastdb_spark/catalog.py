@@ -46,13 +46,20 @@ class Catalog:
     def path(self, table: str) -> str:
         return os.path.join(self.root, f"{table}.parquet")
 
-    def table(self, table: str, check_schema: bool = False) -> DataFrame:
+    def table(self, table: str) -> DataFrame:
+        """Open one table.  A table declared in ``schemas.TABLES`` is read
+        with its declared schema, so the open submits no schema-inference
+        job: a stored column of another type raises when the scan reads
+        it (a widening one, int into bigint, reads), and a declared column
+        missing from the files reads as NULL.  Other tables (``events``,
+        the TPC-H-ish set) infer their schema from the files."""
         if table == "events":
             return self._events()
-        df = self.spark.read.parquet(self.path(table))
-        if check_schema and table in schemas.TABLES:
-            schemas.assert_schema(df.schema, table)
-        return df
+        if table in schemas.TABLES:
+            return self.spark.read.schema(schemas.TABLES[table]).parquet(
+                self.path(table)
+            )
+        return self.spark.read.parquet(self.path(table))
 
     def _events(self) -> DataFrame:
         """Read ``events`` with ``ts`` normalised to session-TZ TIMESTAMP.

@@ -822,13 +822,28 @@ def ivf_index_remove(
     already do); an ad-hoc ``ivf_search_index`` call does not."""
     import os
 
-    from fastdb_spark.pipeline.incdedup import _id_hits, _remove_ids
+    from fastdb_spark.pipeline.incdedup import _hit_flag, _remove_ids
 
-    def clusters(rm) -> tuple[list, int]:
-        # bounded by n_clusters (the KB-sized centroid table's row count)
-        vecs = spark.read.parquet(os.path.join(path, "vectors"))
-        hits = _id_hits(vecs, rm, id_col).groupBy("cluster").count().collect()
-        return sorted(r["cluster"] for r in hits), sum(r["count"] for r in hits)
+    def clusters(rm) -> tuple[list, int, set]:
+        # bounded by n_clusters (the KB-sized centroid table's row count);
+        # a cluster whose rows are all hit is emptied
+        vecs, hit = _hit_flag(
+            spark.read.parquet(os.path.join(path, "vectors")), rm, id_col
+        )
+        rows = (
+            vecs.groupBy("cluster")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(hit.cast("long")).alias("hits"),
+            )
+            .filter(F.col("hits") > 0)
+            .collect()
+        )
+        return (
+            sorted(r["cluster"] for r in rows),
+            sum(r["hits"] for r in rows),
+            {r["cluster"] for r in rows if r["hits"] == r["n"]},
+        )
 
     return _remove_ids(
         spark, ids, path, (("vectors", None),), id_col, "cluster", clusters

@@ -50,7 +50,7 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from fastdb_spark.functions.sketches import sketch_impl
@@ -645,6 +645,17 @@ def _id_hits(df: DataFrame, rm, id_col: str, hit: bool = True) -> DataFrame:
     return df.filter(m if hit else ~m)
 
 
+def _hit_flag(df: DataFrame, rm, id_col: str) -> tuple[DataFrame, Column]:
+    """``df`` (its rows unfiltered) and a non-null boolean column: the
+    row's ``id_col`` is in the removal set ``rm`` of :func:`_removal_set`.
+    A DataFrame set is left-joined as a broadcast flag side."""
+    if isinstance(rm, DataFrame):
+        flag = rm.distinct().withColumn("_hit", F.lit(True))
+        joined = df.join(F.broadcast(flag), on=id_col, how="left")
+        return joined, F.col("_hit").isNotNull()
+    return df, F.coalesce(F.col(id_col).isin(rm), F.lit(False))
+
+
 def _bucket_layout(nb: int | None) -> tuple:
     """``(part_col, locate)`` of the id-bucket layout for
     :func:`_remove_ids`: the partitions a removal set can touch are
@@ -654,14 +665,14 @@ def _bucket_layout(nb: int | None) -> tuple:
     if not nb:
         return None, None
 
-    def locate(rm) -> tuple[list, None]:
+    def locate(rm) -> tuple[list, None, tuple]:
         if isinstance(rm, DataFrame):
             # bounded collect: distinct pmod values, at most nb rows
             b = F.pmod(F.col(rm.columns[0]), F.lit(nb)).cast("int")
             rows = rm.select(b).distinct().collect()
-            return sorted(r[0] for r in rows if r[0] is not None), None
+            return sorted(r[0] for r in rows if r[0] is not None), None, ()
         # Python % matches Spark pmod for positive moduli
-        return sorted({i % nb for i in rm}), None
+        return sorted({i % nb for i in rm}), None, ()
 
     return "id_bucket", locate
 
@@ -684,7 +695,10 @@ def _remove_ids(
     :func:`_bucket_layout`; IVF clusters from one aggregate over the hit
     rows), and the first table's hit-row count when its lookup already
     counted them, else None — the engine then counts them on the first
-    table's source partitions before that table's rewrite.
+    table's source partitions before that table's rewrite — and the
+    partitions the removal empties, when its lookup counted their rows
+    too (else ``()``): those are deleted by their swap, unread and
+    unwritten.
     ``part_col=None`` is a flat index, each table rewritten whole.  The
     tables rewrite disjoint directory trees, so their
     :func:`_rewrite_parts` calls overlap from a bounded driver pool
@@ -693,7 +707,7 @@ def _remove_ids(
 
     with table_write_lock(path):
         rm = _removal_set(spark, ids, id_col)
-        parts, removed = locate(rm) if part_col else (None, None)
+        parts, removed, emptied = locate(rm) if part_col else (None, None, ())
         if part_col and not parts:
             return 0
 
@@ -706,6 +720,7 @@ def _remove_ids(
                 spark, path, table, cols, part_col, parts,
                 lambda df: _id_hits(df, rm, id_col, hit=False),
                 before=count if i == 0 and removed is None else None,
+                emptied=emptied,
             )
 
         counted = run_independent_jobs(_drop_from, list(enumerate(tables)))[0]
@@ -722,6 +737,7 @@ def _rewrite_parts(
     parts,
     transform,
     before=None,
+    emptied=(),
 ):
     """THE directory rewrite of every persisted index, takedown and
     compaction alike: the ``part_col`` partitions ``parts`` of
@@ -730,8 +746,10 @@ def _rewrite_parts(
     ``part_col=None`` rewrites a flat table whole.  ``cols=None`` means
     every data column (the IVF vectors schema varies with the PQ
     options).  ``before(src)``, when given, runs on the source rows
-    before the write; its result is returned.  The caller holds the
-    table write lock.
+    before the write; its result is returned.  Partitions in
+    ``emptied`` are known to end with no rows: they are not read and
+    their swap deletes them (``before`` does not see their rows).  The
+    caller holds the table write lock.
 
     One read + one write job over all the partitions together (a
     per-partition loop pays job-launch latency per partition — measured
@@ -767,23 +785,31 @@ def _rewrite_parts(
             (os.path.join(tdir, d), os.path.join(tmp, d))
             for d in (f"{part_col}={v}" for v in parts)
         ]
-        src = spark.read.option("basePath", tdir).parquet(
-            *(cur for cur, _ in swaps)
+        read = [cur for (cur, _), v in zip(swaps, parts) if v not in emptied]
+        if not read and _part_files(tdir) == sum(_part_files(c) for c, _ in swaps):
+            # nothing else would be left: read them all, so the re-seed
+            # below has the table's schema
+            read = [cur for cur, _ in swaps]
+        src = (
+            spark.read.option("basePath", tdir).parquet(*read) if read else None
         )
-    cols = cols or [c for c in src.columns if c != part_col]
-    # captured BEFORE the swaps: src's lineage reads the dirs they delete
-    schema = src.select(*cols).schema
-    out = before(src) if before else None
-    rows = transform(src.select(*cols, *([part_col] if part_col else [])))
-    w = (
-        rows.repartition(part_col).write.partitionBy(part_col)
-        if part_col
-        else rows.write
-    )
+    out = w = None
+    if src is not None:
+        cols = cols or [c for c in src.columns if c != part_col]
+        # captured BEFORE the swaps: src's lineage reads the dirs they delete
+        schema = src.select(*cols).schema
+        out = before(src) if before else None
+        rows = transform(src.select(*cols, *([part_col] if part_col else [])))
+        w = (
+            rows.repartition(part_col).write.partitionBy(part_col)
+            if part_col
+            else rows.write
+        )
     try:
-        w.option("maxRecordsPerFile", 10_000_000).mode("overwrite").parquet(
-            tmp
-        )
+        if w is not None:
+            w.option("maxRecordsPerFile", 10_000_000).mode(
+                "overwrite"
+            ).parquet(tmp)
         for cur, new in swaps:
             old = os.path.join(
                 path, "_old_" + os.path.relpath(cur, path).replace(os.sep, "_")
@@ -794,7 +820,7 @@ def _rewrite_parts(
             shutil.rmtree(old, ignore_errors=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    if part_col:
+    if part_col and src is not None:
         _seed_if_empty(spark, tdir, schema, part_col, parts[0])
     return out
 

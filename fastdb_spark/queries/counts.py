@@ -33,10 +33,8 @@ def versioned_count(
     the priority dedup itself is unnecessary for counting (each logical
     key contributes exactly once regardless of which version wins).
     """
-    mapping = resolver.bpv_mapping(procver, table)
-    restricted = photometry.join(
-        F.broadcast(mapping.select("base_procver_id")), on="base_procver_id"
-    )
+    bpvs = sorted(resolver.priorities(procver, table))
+    restricted = photometry.filter(F.col("base_procver_id").isin(bpvs))
     key = F.struct(*[F.col(k) for k in keys])
     if estimate:
         agg = F.approx_count_distinct(key).alias("n")

@@ -1,18 +1,24 @@
 """Lightcurve retrieval — the reference's workhorse query family.
 
 Re-expresses ``src/ltcv.py:294-924`` (``many_object_ltcvs`` /
-``object_ltcv``) as a DataFrame program (SURVEY.md §3.1):
+``object_ltcv``) as ONE parameterized SQL statement (SURVEY.md §3.1):
 
-1. normalize requested object ids -> semi-join restriction (J5)
-2. per-table version resolution + priority dedup (J1 + A1)
+1. version-resolved object map: the diaobject table's own priority dedup
+   per diaobjectid, restricted to the requested roots (J5)
+2. per-table version restriction + priority dedup per (rootid, visit)
+   (J1 + A1, ``versions.versioned_sql``)
 3. optional band filter (P4) and ``mjd_now`` time-travel cut (P3)
 4. ``which='detections'|'forced'|'patch'`` — patch is the full-outer
-   forced-vs-detections join (J3)
+   forced-vs-detections join (J3, ``operators.patch.patch_sql``)
 5. per-root nested assembly via collect_list(struct) (X1/A7)
 
-The reference stages steps 2-4 through Postgres temp tables with planner
-hints (``src/ltcv.py:569-712``); here each stage is a lazily-composed
-DataFrame and Catalyst plans the whole program at once.
+The reference stages steps 1-4 through Postgres temp tables with planner
+hints (``src/ltcv.py:569-712``).  Here steps 1-4 are SQL fragments
+composed into one ``spark.sql`` statement over the opened table frames,
+so a request builds one plan instead of a chain of DataFrame calls, each
+a driver round trip.  User values never enter the SQL text: the object
+list is a DataFrame argument, the bands, ``mjd_now`` and the version
+priorities (resolved on the driver) are statement parameters.
 """
 
 from __future__ import annotations
@@ -22,11 +28,31 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from fastdb_spark.operators.patch import patch_lightcurve
-from fastdb_spark.versions import ProcverResolver, versioned
+from fastdb_spark.operators.patch import patch_sql
+from fastdb_spark.versions import ProcverResolver, priority_map, versioned_sql
 
 #: photometry value columns returned by lightcurve queries
 LTCV_COLS = ("diaobjectid", "band", "midpointmjdtai", "psfflux", "psffluxerr")
+
+#: per ``which``: (CTE name, photometry table, unique id tie-breaker)
+_SIDES = {
+    "detections": (("det", "diasource", "diasourceid"),),
+    "forced": (("forced", "diaforcedsource", "diaforcedsourceid"),),
+    "patch": (
+        ("det", "diasource", "diasourceid"),
+        ("forced", "diaforcedsource", "diaforcedsourceid"),
+    ),
+}
+
+
+#: the version-resolved diaobjectid -> rootid map over ``{diaobject}``
+_OBJMAP_SQL = versioned_sql(
+    "{diaobject}",
+    ("diaobjectid", "rootid"),
+    keys=("diaobjectid",),
+    extra_order=("base_procver_id",),
+    param="prio_diaobject",
+)
 
 
 def resolve_objects(
@@ -36,44 +62,30 @@ def resolve_objects(
     ``tmp_objids``, ``src/ltcv.py:569-630``): the object table gets its OWN
     priority dedup per diaobjectid, independent of the photometry's base
     version — a bpv2a source row still resolves through the bpv2 object."""
-    mapping = resolver.bpv_mapping(procver, "diaobject")
-    resolved = versioned(
-        diaobject,
-        mapping,
-        keys=("diaobjectid",),
-        extra_order=("base_procver_id",),
+    prio = priority_map(resolver.priorities(procver, "diaobject"))
+    return diaobject.sparkSession.sql(
+        _OBJMAP_SQL, args={"prio_diaobject": prio}, diaobject=diaobject
     )
-    return resolved.select("diaobjectid", "rootid")
 
 
-def _extract(
-    photometry: DataFrame,
-    diaobject: DataFrame,
-    resolver: ProcverResolver,
-    procver: str,
-    table: str,
-    id_col: str,
-    bands: Sequence[str] | None = None,
-    mjd_now: float | None = None,
-    objids: DataFrame | None = None,
-) -> DataFrame:
-    """Shared detections/forced extract (reference ``src/ltcv.py:638-712``):
-    procver restriction + priority dedup per (rootid, visit), band and
-    mjd_now filters, optional object-list semi-join."""
-    df = photometry
-    if bands:
-        df = df.filter(F.col("band").isin(list(bands)))  # P4
-    if mjd_now is not None:
-        df = df.filter(F.col("midpointmjdtai") <= F.lit(mjd_now))  # P3
-    # object map can be millions of rows at full scale — let AQE pick the
-    # join strategy (broadcasts when the restricted map is small)
-    objmap = resolve_objects(diaobject, resolver, procver)
-    df = df.join(objmap, on="diaobjectid", how="inner")
-    if objids is not None:
-        df = df.join(objids.select("rootid"), on="rootid", how="left_semi")  # J5
-    mapping = resolver.bpv_mapping(procver, table)
-    # one row per (rootid, visit): highest priority, id as tiebreaker (A1)
-    return versioned(df, mapping, keys=("rootid", "visit"), extra_order=(id_col,))
+def _extract_sql(table: str, id_col: str, where: str) -> str:
+    """One photometry table's extract (reference ``src/ltcv.py:638-712``):
+    the rows of the ``objmap`` objects that pass ``where``, deduplicated
+    to one row per (rootid, visit), highest priority first and ``id_col``
+    as the tie-breaker (A1)."""
+    cols = ("base_procver_id", "visit", *LTCV_COLS, id_col)
+    rel = (
+        "(SELECT o.rootid, " + ", ".join(f"p.{c}" for c in cols)
+        + f" FROM {{{table}}} p JOIN objmap o ON p.diaobjectid = o.diaobjectid"
+        + f"{where})"
+    )
+    return versioned_sql(
+        rel,
+        ("rootid", "visit", *LTCV_COLS),
+        keys=("rootid", "visit"),
+        extra_order=(id_col,),
+        param=f"prio_{table}",
+    )
 
 
 def many_object_ltcvs(
@@ -93,49 +105,42 @@ def many_object_ltcvs(
     - ``'forced'``     — diaforcedsource points only
     - ``'patch'``      — forced, patched with detections where forced
                          photometry is missing (isdet / ispatch flags)
+
+    ``objids`` is a DataFrame with a ``rootid`` column; None reads every
+    object.
     """
-    sel = [
-        "rootid",
-        "visit",
-        *LTCV_COLS,
-    ]
-    if which in ("detections", "patch"):
-        det = _extract(
-            tables["diasource"],
-            tables["diaobject"],
-            resolver,
-            procver,
-            "diasource",
-            "diasourceid",
-            bands,
-            mjd_now,
-            objids,
-        ).select(*sel)
-        if which == "detections":
-            return det.withColumn("isdet", F.lit(True)).withColumn(
-                "ispatch", F.lit(False)
-            )
-    if which in ("forced", "patch"):
-        forced = _extract(
-            tables["diaforcedsource"],
-            tables["diaobject"],
-            resolver,
-            procver,
-            "diaforcedsource",
-            "diaforcedsourceid",
-            bands,
-            mjd_now,
-            objids,
-        ).select(*sel)
-        if which == "forced":
-            return forced.withColumn("isdet", F.lit(False)).withColumn(
-                "ispatch", F.lit(False)
-            )
-    if which == "patch":
-        return patch_lightcurve(
-            forced, det, keys=("rootid", "visit"), value_cols=list(LTCV_COLS)
+    if which not in _SIDES:
+        raise ValueError(f"unknown which={which!r}")
+    frames = {"diaobject": tables["diaobject"]}
+    args = {"prio_diaobject": priority_map(resolver.priorities(procver, "diaobject"))}
+    objmap = _OBJMAP_SQL
+    if objids is not None:
+        frames["objids"] = objids
+        objmap = (
+            f"SELECT * FROM ({objmap}) "
+            "WHERE rootid IN (SELECT rootid FROM {objids})"  # J5
         )
-    raise ValueError(f"unknown which={which!r}")
+    where = []
+    if bands:
+        where.append("array_contains(:bands, p.band)")  # P4
+        args["bands"] = [str(b) for b in bands]
+    if mjd_now is not None:
+        where.append("p.midpointmjdtai <= :mjd_now")  # P3
+        args["mjd_now"] = float(mjd_now)
+    cond = " WHERE " + " AND ".join(where) if where else ""
+    ctes = [f"objmap AS ({objmap})"]
+    for name, table, id_col in _SIDES[which]:
+        frames[table] = tables[table]
+        args[f"prio_{table}"] = priority_map(resolver.priorities(procver, table))
+        ctes.append(f"{name} AS ({_extract_sql(table, id_col, cond)})")
+    if which == "patch":
+        body = patch_sql("forced", "det", ("rootid", "visit"), LTCV_COLS)
+    else:
+        isdet = "true" if which == "detections" else "false"
+        body = f"SELECT *, {isdet} AS isdet, false AS ispatch FROM {name}"
+    return tables["diaobject"].sparkSession.sql(
+        "WITH " + ", ".join(ctes) + " " + body, args=args, **frames
+    )
 
 
 def assemble_nested(ltcv: DataFrame) -> DataFrame:
@@ -194,16 +199,8 @@ def get_hot_ltcvs(
     cut = detected_since_mjd
     if detected_in_last_days is not None and mjd_now is not None:
         cut = mjd_now - detected_in_last_days
-    det = _extract(
-        tables["diasource"],
-        tables["diaobject"],
-        resolver,
-        procver,
-        "diasource",
-        "diasourceid",
-        None,
-        mjd_now,
-        None,
+    det = many_object_ltcvs(
+        tables, resolver, procver, which="detections", mjd_now=mjd_now
     )
     hot_roots = (
         det.filter(F.col("midpointmjdtai") >= F.lit(cut))

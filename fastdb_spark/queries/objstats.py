@@ -218,7 +218,11 @@ def build_objstats(
 
     objmap = resolve_objects(tables["diaobject"], resolver, procver)
     det = tables["diasource"].join(objmap, on="diaobjectid", how="inner")
-    mapping = resolver.bpv_mapping(procver, "diasource")
-    det = versioned(det, mapping, keys=("rootid", "visit"), extra_order=("diasourceid",))
+    det = versioned(
+        det,
+        resolver.priorities(procver, "diasource"),
+        keys=("rootid", "visit"),
+        extra_order=("diasourceid",),
+    )
     per_band = per_band_stats(det)
     return per_band, combined_stats(per_band)

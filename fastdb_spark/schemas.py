@@ -3,7 +3,9 @@
 The reference reflects its schema from Postgres ``information_schema`` at
 runtime (reference ``src/db.py:874-903``); we instead declare one explicit
 StructType per table (the schema is migration-managed and fixed, reference
-``db/2026-02-02_refactor.sql``) and assert stored tables against it on load.
+``db/2026-02-02_refactor.sql``) and read stored tables with it
+(``catalog.Catalog.table``, ``streaming.ingest.SilverCatalog.table``), so
+opening a table infers nothing.
 
 Type mapping follows SURVEY.md §1.3 (reference ``src/db.py:700-710``
 ``ColumnMeta.typedict``):

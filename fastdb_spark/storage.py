@@ -23,6 +23,7 @@ import uuid
 from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from fastdb_spark.locks import table_write_lock
 
@@ -35,16 +36,25 @@ except ImportError:
 
 
 class ParquetTable:
-    """A parquet-backed table directory with upsert support."""
+    """A parquet-backed table directory with upsert support.
 
-    def __init__(self, spark: SparkSession, path: str):
+    With a declared ``schema`` (``schemas.TABLES``) the table is read
+    with it, so a read submits no schema-inference job, and an upsert
+    stores exactly the declared columns, in declared order."""
+
+    def __init__(
+        self, spark: SparkSession, path: str, schema: StructType | None = None
+    ):
         self.spark = spark
         self.path = path
+        self.schema = schema
 
     def exists(self) -> bool:
         return os.path.exists(self.path)
 
     def read(self) -> DataFrame:
+        if self.schema is not None:
+            return self.spark.read.schema(self.schema).parquet(self.path)
         return self.spark.read.parquet(self.path)
 
     def overwrite(self, df: DataFrame) -> None:
@@ -101,6 +111,8 @@ class ParquetTable:
         ks = list(keys)
         if on_conflict not in ("nothing", "update"):
             raise ValueError(f"unknown on_conflict={on_conflict!r}")
+        if self.schema is not None:
+            updates = updates.select(*self.schema.fieldNames())
         with table_write_lock(self.path):
             if not self.exists():
                 self.overwrite(updates)

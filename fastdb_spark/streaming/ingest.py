@@ -38,6 +38,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from fastdb_spark import schemas
 from fastdb_spark.operators.dedup import dedup_first_seen
 from fastdb_spark.operators.spatial import crossmatch
 from fastdb_spark.parallel import run_independent_jobs
@@ -78,7 +79,13 @@ class SilverCatalog:
         os.makedirs(root, exist_ok=True)
 
     def table(self, name: str) -> ParquetTable:
-        return ParquetTable(self.spark, os.path.join(self.root, f"{name}.parquet"))
+        """One silver table; a table in ``schemas.TABLES`` reads and
+        merges through its declared schema (``cutouts`` infers)."""
+        return ParquetTable(
+            self.spark,
+            os.path.join(self.root, f"{name}.parquet"),
+            schemas.TABLES.get(name),
+        )
 
 
 def dedup_batch(wrangled: dict[str, DataFrame]) -> dict[str, DataFrame]:

@@ -254,3 +254,10 @@ def golden(spark, golden_pandas):
         fields = [f for f in schema.fields if f.name in pdf.columns]
         out[name] = spark.createDataFrame(sub, schema=T.StructType(fields))
     return out
+
+
+def write_golden_catalog(golden, root) -> None:
+    """Write the golden frames (declared column types) as a catalog
+    directory of ``<name>.parquet`` tables."""
+    for name, df in golden.items():
+        df.write.mode("overwrite").parquet(str(root / f"{name}.parquet"))

@@ -9,16 +9,13 @@ from pyspark.sql import functions as F
 from fastdb_spark.api import FastdbAPI
 from fastdb_spark.versions import ProcverResolver
 
-from .conftest import PV, ROOT, count_jobs
+from .conftest import PV, ROOT, count_jobs, write_golden_catalog
 
 
 @pytest.fixture(scope="module")
-def api(spark, golden_pandas, tmp_path_factory):
+def api(spark, golden, tmp_path_factory):
     root = tmp_path_factory.mktemp("catalog")
-    for name, pdf in golden_pandas.items():
-        spark.createDataFrame(pdf).write.mode("overwrite").parquet(
-            str(root / f"{name}.parquet")
-        )
+    write_golden_catalog(golden, root)
     return FastdbAPI(spark, str(root), queue_root=str(root / "queue"))
 
 
@@ -49,6 +46,60 @@ def test_procver_resolution_memoized(spark, api):
 
     assert count_jobs(spark, "resolve-unknown-1", unknown) >= 1
     assert count_jobs(spark, "resolve-unknown-2", unknown) >= 1
+
+
+def test_resolver_priorities_one_collect_highest_duplicate_wins(spark, api):
+    """A handle resolves to per-table priority dicts in one job; a base
+    version listed twice for one table keeps its highest priority."""
+    bpv = api.tables["base_procver_of_procver"]
+    dup = bpv.filter(F.col("procver_id") == PV["pv2"]).withColumn(
+        "priority", F.col("priority") + 10
+    )
+    r = ProcverResolver(
+        api.tables["processing_version"],
+        api.tables["processing_version_alias"],
+        bpv.unionByName(dup),
+    )
+    jobs = count_jobs(spark, "resolve-priorities", lambda: r.procver_id("default"))
+    assert jobs == 1
+    want = {b: p + 10 for b, p in api.resolver.priorities("pv2", "diasource").items()}
+    assert want and r.priorities("default", "diasource") == want
+    assert r.priorities("default", "no_such_table") == {}
+
+
+def test_api_open_submits_no_job(spark, api):
+    """Every catalog table opens with its declared schema: no inference
+    job, whatever the number of tables."""
+    root = api.catalog.root
+    assert count_jobs(spark, "api-open", lambda: FastdbAPI(spark, root)) == 0
+
+
+def test_fresh_get_ltcv_job_budget(spark, api):
+    """A fresh API's one-root lightcurve is one resolve job plus one
+    statement's execution (6 jobs on this fixture; the DataFrame chain it
+    replaced ran 13 after 10 table-open jobs)."""
+    fresh = FastdbAPI(spark, api.catalog.root)
+    rows = []
+    jobs = count_jobs(
+        spark, "fresh-getltcv",
+        lambda: rows.extend(fresh.get_ltcv("realtime", ROOT[0]).collect()),
+    )
+    assert rows and jobs <= 7, jobs
+
+
+@pytest.mark.parametrize(
+    "value", ["x' OR '1'='1", "realtime'; --", "realtime;", "default' --"]
+)
+def test_sql_metacharacters_stay_values(api, value):
+    """Handles, root ids and bands reach the statement as parameters or
+    DataFrame rows, never as SQL text: a quote or semicolon makes an
+    unknown handle (KeyError) or an id that matches nothing."""
+    with pytest.raises(KeyError):
+        api.get_ltcv(value, ROOT[0])
+    assert api.get_ltcv("realtime", value).collect() == []
+    assert api.get_many_ltcvs("realtime", [ROOT[0]], bands=[value]).collect() == []
+    with pytest.raises(KeyError):
+        api.count("diasource", value)
 
 
 def test_get_many_ltcvs_roundtrip(api):

@@ -84,7 +84,7 @@ def test_weighted_positions_golden(golden, golden_pandas, resolver):
     det = golden["diasource"].join(objmap, on="diaobjectid", how="inner")
     det = versioned(
         det,
-        resolver.bpv_mapping("pv2", "diasource"),
+        resolver.priorities("pv2", "diasource"),
         keys=("rootid", "visit"),
         extra_order=("diasourceid",),
     )

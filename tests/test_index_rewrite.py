@@ -28,7 +28,7 @@ def _fail_rewrites_of(monkeypatch, table: str) -> None:
     (the other tables of the takedown rewrite normally)."""
     real = incdedup._rewrite_parts
 
-    def flaky(spark, path, t, cols, part_col, parts, transform, before=None):
+    def flaky(spark, path, t, cols, part_col, parts, transform, **kw):
         if t == table:
             inner = transform
 
@@ -38,7 +38,7 @@ def _fail_rewrites_of(monkeypatch, table: str) -> None:
                 boom = F.raise_error(F.lit(FAIL)).cast(out.schema[c].dataType)
                 return out.withColumn(c, F.coalesce(boom, F.col(c)))
 
-        return real(spark, path, t, cols, part_col, parts, transform, before)
+        return real(spark, path, t, cols, part_col, parts, transform, **kw)
 
     monkeypatch.setattr(incdedup, "_rewrite_parts", flaky)
 
@@ -199,3 +199,49 @@ def test_stage_calls_per_probe_and_upsert(spark, tmp_path, monkeypatch):
         )
     ) == 2
     assert staged(lambda: incdedup.dedup_index_upsert(spark, batch, path)) == 3
+
+
+def test_ivf_takedown_deletes_emptied_clusters_unwritten(spark, tmp_path):
+    """A takedown whose ids fill whole clusters reads and writes no
+    partition: the locate aggregate counts every cluster's rows next to
+    its hits, and the swap deletes the clusters it empties.  The index
+    then probes exactly like one built without the removed vectors."""
+    from fastdb_spark.pipeline.ann import ivf_index_remove
+    from fastdb_spark.pipeline.incsem import build_semantic_index, semantic_index_probe
+
+    from .conftest import count_jobs
+    from .test_incsem import CENTS, _corpus
+
+    corpus = _corpus(spark)
+    evens = corpus.filter("vec_id % 2 = 0")
+    path = str(tmp_path / "idx")
+    build_semantic_index(evens, path, eps=0.92, centroids=CENTS)
+    vdir = os.path.join(path, "vectors")
+    vecs = spark.read.parquet(vdir).select("vec_id", "cluster").collect()
+    gone = sorted({r["cluster"] for r in vecs})[:2]
+    rm = sorted(r["vec_id"] for r in vecs if r["cluster"] in gone)
+
+    out = []
+    jobs = count_jobs(
+        spark, "ivf-emptied-takedown",
+        lambda: out.append(ivf_index_remove(spark, rm, path)),
+    )
+    assert out == [len(rm)]
+    # the vectors schema inference and the two-stage locate aggregate:
+    # no partition read, no write job
+    assert jobs <= 3, jobs
+    for c in gone:
+        assert not os.path.exists(os.path.join(vdir, f"cluster={c}"))
+    assert _no_scratch_dirs(path)
+
+    clean = str(tmp_path / "clean")
+    build_semantic_index(
+        evens.filter(~F.col("vec_id").isin(rm)), clean, eps=0.92, centroids=CENTS
+    )
+    assert _rows(spark, path, "vectors") == _rows(spark, clean, "vectors")
+    odds = corpus.filter("vec_id % 2 = 1")
+    verdicts = [
+        sorted(map(tuple, semantic_index_probe(spark, odds, p).collect()))
+        for p in (path, clean)
+    ]
+    assert verdicts[0] == verdicts[1]

@@ -124,6 +124,40 @@ def test_ingest_batch_idempotent(spark, alerts_batch1, tmp_path):
     assert silver.table("diaobject").read().count() == 3
 
 
+def test_stored_tables_conform_to_declared_schemas(
+    spark, golden, alerts_batch1, tmp_path
+):
+    """The tables the engine writes — an ingest batch's silver merges and
+    a spectrum cycle — store exactly their declared schema: the contract
+    the declared-schema opens of ``Catalog.table`` and
+    ``SilverCatalog.table`` read under."""
+    from fastdb_spark import schemas
+    from fastdb_spark.api import FastdbAPI
+
+    from .conftest import write_golden_catalog
+
+    root = tmp_path / "silver"
+    silver = SilverCatalog(spark, str(root))
+    w = reject_solar_system(wrangle_alerts(alerts_batch1, BPV, savetime=F.lit(T0)))
+    ingest_batch(silver, w, collect_stats=False)
+    write_golden_catalog(
+        {t: golden[t] for t in ("processing_version", "processing_version_alias",
+                                "base_procver_of_procver")},
+        root,
+    )
+    api = FastdbAPI(spark, str(root))
+    rootid = silver.table("root_diaobject").read().first()["id"]
+    api.ask_for_spectrum("conformance", [rootid], [3], [10.0], [-5.0])
+    api.plan_spectrum(rootid, "tel", "2026-02-02T00:00:00")
+    api.report_spectrum_info("tel", 60010.0, 10.0, -5.0, root_diaobject_id=rootid)
+
+    stored = [t for t in schemas.TABLES if (root / f"{t}.parquet").exists()]
+    written = set(SilverCatalog.TABLES) - {"cutouts"}
+    assert written | {"wantedspectra", "plannedspectra", "spectruminfo"} <= set(stored)
+    for t in stored:
+        schemas.assert_schema(spark.read.parquet(str(root / f"{t}.parquet")).schema, t)
+
+
 @pytest.mark.parametrize("failing", ["diaobject_position", "root_diaobject"])
 def test_ingest_replay_repairs_failed_merge(
     spark, alerts_batch1, tmp_path, monkeypatch, failing

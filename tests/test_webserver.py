@@ -11,14 +11,13 @@ import pytest
 from fastdb_spark.api import FastdbAPI
 from fastdb_spark.webserver import FastdbHTTPServer
 
+from .conftest import write_golden_catalog
+
 
 @pytest.fixture(scope="module")
-def server(spark, golden_pandas, tmp_path_factory):
+def server(spark, golden, tmp_path_factory):
     root = tmp_path_factory.mktemp("catalog")
-    for name, pdf in golden_pandas.items():
-        spark.createDataFrame(pdf).write.mode("overwrite").parquet(
-            str(root / f"{name}.parquet")
-        )
+    write_golden_catalog(golden, root)
     api = FastdbAPI(spark, str(root), queue_root=str(root / "queue"))
     srv = FastdbHTTPServer(api).start()
     yield srv
@@ -115,12 +114,9 @@ def test_unknown_endpoint_404_and_bad_body_400(server):
 
 
 @pytest.fixture(scope="module")
-def auth_server(spark, golden_pandas, tmp_path_factory):
+def auth_server(spark, golden, tmp_path_factory):
     root = tmp_path_factory.mktemp("auth_catalog")
-    for name, pdf in golden_pandas.items():
-        spark.createDataFrame(pdf).write.mode("overwrite").parquet(
-            str(root / f"{name}.parquet")
-        )
+    write_golden_catalog(golden, root)
     api = FastdbAPI(spark, str(root), queue_root=str(root / "queue"))
     srv = FastdbHTTPServer(
         api, tokens={"tok-alice": "alice", "tok-bob": "bob"}

@@ -1449,11 +1449,16 @@ def _q_asof_latest_forced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_broker_info(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broker classification lookup (reference ltcvapp.py:280-329 via
-    api.get_broker_info): restrict messages to an id set and a processing
-    version's mapped base versions (unmapped bpv0 drops out), keep the
-    highest-priority message per (source, broker, topic), extract a typed
-    field from the JSON info payload (F9)."""
+    """Broker classification lookup (reference ltcvapp.py:280-329, the
+    lookup ``api.get_broker_info`` serves): restrict messages to an id
+    set and a processing version's mapped base versions (unmapped bpv0
+    drops out), keep the highest-priority message per (source, broker,
+    topic), extract a typed field from the JSON info payload (F9).  The
+    gate builds the lookup itself — a broadcast join to a literal
+    version mapping, then ``dedup_top_priority`` — and does not call
+    ``FastdbAPI.get_broker_info``, which restricts and deduplicates
+    through ``versions.versioned`` (covered by
+    tests/test_api.py::test_get_broker_info)."""
     li = Catalog(spark, sf_dir).table("lineitem")
     bi = ad.brokerinfo(li).filter(F.col("diasourceid") % 50 == 0)
     mapping = tiny_local_df(

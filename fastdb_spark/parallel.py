@@ -1,11 +1,10 @@
 """Driver-side overlap of INDEPENDENT Spark jobs (guide §2.6).
 
-The maintenance paths (index takedown, compaction), the per-table merges
-of an alert-ingest batch and the table opens of a fresh API each touch
-several independent targets — one directory per table or per cluster
-partition.  Run serially from the driver, each target pays its own
-job-launch latency and leaves the executors idle through the tail of the
-previous one.  Spark's scheduler happily runs several jobs at once inside
+The persisted-index maintenance paths (the table writes of an append,
+takedown, compaction) and the per-table merges of an alert-ingest batch
+each touch several independent targets — one directory per table.  Run
+serially from the driver, each target pays its own job-launch latency
+and leaves the executors idle through the tail of the previous one.  Spark's scheduler happily runs several jobs at once inside
 one application; submitting the per-target work from a small thread pool
 lets the next target's tasks back-fill the executors as the previous one
 drains (FIFO scheduling is exactly the back-fill behaviour wanted here).

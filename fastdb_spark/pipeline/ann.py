@@ -40,6 +40,7 @@ from fastdb_spark.functions.vectors import (
     norm_py,
 )
 from fastdb_spark.localrel import tiny_local_df
+from fastdb_spark.pipeline.incdedup import _open, _record_schemas
 
 #: index-root sidecar recording build-time parameters (notably the
 #: assignment strategy — ADVICE r10: maintenance must replay the BUILD's
@@ -80,6 +81,13 @@ def _stored_assign_strategy(path: str, fallback: str = "gemm") -> str:
             "to guess (a wrong guess can re-cluster replayed rows); "
             "restore or rebuild the index"
         ) from None
+
+
+def _load_centroids(spark, path: str) -> list[list[float]]:
+    """The persisted coarse quantizer of the index at ``path``, in
+    cluster order (KBs, ranked on the driver)."""
+    rows = _open(spark, path, "centroids").orderBy("cluster").collect()
+    return [list(map(float, r["centroid"])) for r in rows]
 
 
 def _round9_py(x: float) -> float:
@@ -572,44 +580,43 @@ def build_ivf_index(
         )
     else:
         tagged = _assign(embeddings, cents, id_col, vec_col, assign_strategy)
-    if pq_m is None:
-        _align(tagged).write.option(
-            "maxRecordsPerFile", 10_000_000
-        ).mode("overwrite").partitionBy("cluster").parquet(
-            os.path.join(path, "vectors")
+    tables = {"centroids": cent_df.schema}
+    if pq_m is not None:
+        if pq_residual:
+            books = train_pq_residual(
+                embeddings, cents, m=pq_m, k=pq_k, id_col=id_col,
+                vec_col=vec_col,
+            )
+            tagged = encode_pq_residual(
+                tagged, cents, books, id_col=id_col, vec_col=vec_col,
+                cluster_col="cluster", keep_vec=vec_col,
+            )
+        else:
+            books = train_pq(
+                embeddings, m=pq_m, k=pq_k, id_col=id_col, vec_col=vec_col
+            )
+            tagged = encode_pq(
+                tagged, books, id_col=id_col, vec_col=vec_col,
+                keep=["cluster"], keep_vec=vec_col,
+            )
+        book_df = tiny_local_df(
+            spark,
+            [
+                (i, j, books[i][j], bool(pq_residual))
+                for i in range(len(books))
+                for j in range(len(books[i]))
+            ],
+            "subspace int, code int, vec array<double>, residual boolean",
         )
-        return
-    if pq_residual:
-        books = train_pq_residual(
-            embeddings, cents, m=pq_m, k=pq_k, id_col=id_col, vec_col=vec_col
+        book_df.coalesce(1).write.mode("overwrite").parquet(
+            os.path.join(path, "codebooks")
         )
-        enc = encode_pq_residual(
-            tagged, cents, books, id_col=id_col, vec_col=vec_col,
-            cluster_col="cluster", keep_vec=vec_col,
-        )
-    else:
-        books = train_pq(
-            embeddings, m=pq_m, k=pq_k, id_col=id_col, vec_col=vec_col
-        )
-        enc = encode_pq(
-            tagged, books, id_col=id_col, vec_col=vec_col,
-            keep=["cluster"], keep_vec=vec_col,
-        )
-    book_df = tiny_local_df(
-        spark,
-        [
-            (i, j, books[i][j], bool(pq_residual))
-            for i in range(len(books))
-            for j in range(len(books[i]))
-        ],
-        "subspace int, code int, vec array<double>, residual boolean",
-    )
-    book_df.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(path, "codebooks")
-    )
-    _align(enc).write.option("maxRecordsPerFile", 10_000_000).mode(
+        tables["codebooks"] = book_df.schema
+    vectors = _align(tagged)
+    vectors.write.option("maxRecordsPerFile", 10_000_000).mode(
         "overwrite"
     ).partitionBy("cluster").parquet(os.path.join(path, "vectors"))
+    _record_schemas(path, {**tables, "vectors": vectors.schema})
 
 
 def _align(df: DataFrame) -> DataFrame:
@@ -656,10 +663,8 @@ def _stored_ids_for_clusters(
     (plan-audited in tests/test_round9.py): at a 100 TB index the guard
     reads only the batch's own clusters and only the id column, never
     the whole table."""
-    import os
-
     return (
-        spark.read.parquet(os.path.join(path, "vectors"))
+        _open(spark, path, "vectors")
         .filter(F.col("cluster").isin(clusters))  # partition-pruned
         .select(id_col)
     )
@@ -726,12 +731,7 @@ def _ivf_upsert_unlocked(
     if assign_strategy is None:
         assign_strategy = _stored_assign_strategy(path)
     spark = new_vectors.sparkSession
-    cents_rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    cents = [list(map(float, r["centroid"])) for r in cents_rows]
+    cents = _load_centroids(spark, path)
     base = new_vectors.select(
         F.col(id_col), as_double_array(F.col(vec_col)).alias(vec_col)
     )
@@ -764,10 +764,7 @@ def _ivf_upsert_unlocked(
     # the stored layout may carry payload columns beyond
     # (id, vector, cluster[, pq_code]) — an append missing them would
     # leave files with diverging schemas that read back inconsistently
-    existing = set(
-        spark.read.parquet(os.path.join(path, "vectors")).columns
-    )
-    missing = existing - set(out.columns)
+    missing = set(_open(spark, path, "vectors").columns) - set(out.columns)
     if missing:
         raise ValueError(
             f"index layout at {path} stores columns {sorted(missing)} "
@@ -820,16 +817,12 @@ def ivf_index_remove(
     the index write lock (the engine's own probe entry points —
     ``semantic_index_probe`` and the foreachBatch stream upserts —
     already do); an ad-hoc ``ivf_search_index`` call does not."""
-    import os
-
     from fastdb_spark.pipeline.incdedup import _hit_flag, _remove_ids
 
     def clusters(rm) -> tuple[list, int, set]:
         # bounded by n_clusters (the KB-sized centroid table's row count);
         # a cluster whose rows are all hit is emptied
-        vecs, hit = _hit_flag(
-            spark.read.parquet(os.path.join(path, "vectors")), rm, id_col
-        )
+        vecs, hit = _hit_flag(_open(spark, path, "vectors"), rm, id_col)
         rows = (
             vecs.groupBy("cluster")
             .agg(
@@ -846,7 +839,7 @@ def ivf_index_remove(
         )
 
     return _remove_ids(
-        spark, ids, path, (("vectors", None),), id_col, "cluster", clusters
+        spark, ids, path, ("vectors",), id_col, "cluster", clusters
     )
 
 
@@ -866,13 +859,7 @@ def ivf_index_compact(
     ``{"vectors": {buckets_compacted, files_before, files_after}}``."""
     from fastdb_spark.pipeline.incdedup import _compact_tables
 
-    return _compact_tables(
-        spark,
-        path,
-        (("vectors", None),),  # schema varies with PQ options
-        "cluster",
-        min_files,
-    )
+    return _compact_tables(spark, path, ("vectors",), "cluster", min_files)
 
 
 def ivf_index_stats(
@@ -901,14 +888,8 @@ def ivf_index_stats(
     One partition-parallel aggregate over the vectors table (the
     centroid map rides as a broadcast literal); no driver loops, no
     mutation, no lock — safe to run against a live index."""
-    import os
-
-    cents_rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    vecs = spark.read.parquet(os.path.join(path, "vectors"))
+    cents_rows = _open(spark, path, "centroids").orderBy("cluster").collect()
+    vecs = _open(spark, path, "vectors")
     if not with_drift or vec_col not in vecs.columns:
         return (
             vecs.groupBy("cluster")
@@ -1062,7 +1043,6 @@ def ivfpq_search_index(
     ``ivfpq_topk``/``ivfpq_residual_topk`` (which train per call — fine
     for one-shot exploration, wrong for a query service)."""
     import math
-    import os
 
     cents, books, residual = _read_ivfpq_index(spark, path)
     qn = math.sqrt(sum(x * x for x in query_vec)) or 1.0
@@ -1072,9 +1052,7 @@ def ivfpq_search_index(
     )
     probes = order[:nprobe]
 
-    cand = spark.read.parquet(os.path.join(path, "vectors")).filter(
-        F.col("cluster").isin(probes)
-    )
+    cand = _open(spark, path, "vectors").filter(F.col("cluster").isin(probes))
     score = _adc_score(books, q)
     if residual:
         # normalized-centroid offset, matching the stored residual codes
@@ -1128,7 +1106,6 @@ def ivfpq_search_index_many(
     top-k.
     """
     import math
-    import os
 
     from pyspark.sql import Window
 
@@ -1178,7 +1155,7 @@ def ivfpq_search_index_many(
         "q_offset double, qvec array<double>, qnorm double",
     )
     all_clusters = sorted({r[1] for r in probe_rows})
-    cand = spark.read.parquet(os.path.join(path, "vectors")).filter(
+    cand = _open(spark, path, "vectors").filter(
         F.col("cluster").isin(all_clusters)
     )
     subspace_idx = int_array_lit(range(m))
@@ -1229,18 +1206,9 @@ def ivfpq_search_index_many(
 def _read_ivfpq_index(spark, path: str):
     """Driver-side load of the KB-sized index tables: (centroids, books,
     residual flag)."""
-    import os
-
-    cents_rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    cents = [list(map(float, r["centroid"])) for r in cents_rows]
+    cents = _load_centroids(spark, path)
     book_rows = (
-        spark.read.parquet(os.path.join(path, "codebooks"))
-        .orderBy("subspace", "code")
-        .collect()
+        _open(spark, path, "codebooks").orderBy("subspace", "code").collect()
     )
     residual = bool(book_rows[0]["residual"])
     m = 1 + max(r["subspace"] for r in book_rows)
@@ -1264,21 +1232,12 @@ def ivf_search_index(
     centroids on the driver, read ONLY the ``nprobe`` nearest cluster
     partitions (PartitionFilters — pruned before file listing IO), score,
     take k."""
-    import os
-
-    cents_rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    cents = [list(map(float, r["centroid"])) for r in cents_rows]
+    cents = _load_centroids(spark, path)
     order = sorted(
         range(len(cents)), key=lambda i: (-_cosine_py(query_vec, cents[i]), i)
     )
     probes = order[:nprobe]
-    cand = spark.read.parquet(os.path.join(path, "vectors")).filter(
-        F.col("cluster").isin(probes)
-    )
+    cand = _open(spark, path, "vectors").filter(F.col("cluster").isin(probes))
     scored = cand.select(
         F.col(id_col),
         F.round(

@@ -20,6 +20,12 @@ Index layout (``path/``):
   Jaccard refine of candidate pairs.
 - ``_meta.json``   — sketch parameters; upserts enforce consistency (a
   batch banded with different parameters would silently miss dups).
+- ``_schemas.json`` — every table's schema, its partition column
+  included, recorded once by the build (:func:`_record_schemas`).  Every
+  open of a persisted index table, in all four index families (text,
+  media, semantic, IVF), goes through :func:`_open` and reads with it:
+  no open infers a schema, and a table left with no part files reads as
+  zero rows.
 
 Incremental semantics (stated precisely, tested): a new document is
 dropped iff (a) its fingerprint already exists in the index or collides
@@ -34,10 +40,10 @@ what the probe calls ``fresh``.  Concurrent upserts serialize on the
 table write lock (``locks.table_write_lock``) — same lost-update story
 as storage.py.
 
-Classification shape: the three index tables are opened together; the
-exact leg (a left join to the distinct index fingerprints plus a
-``min(id)`` window over ``fingerprint``, :func:`_exact_leg` — also the
-build's keep-min pass) is staged once with an exact-verdict column;
+Classification shape: the exact leg (a left join to the distinct index
+fingerprints plus a ``min(id)`` window over ``fingerprint``,
+:func:`_exact_leg` — also the build's keep-min pass) is staged once
+with an exact-verdict column;
 the vs-index and in-batch near-dup legs run on its kept rows and come
 back as left-joined id flags, so the verdict is one ``coalesce`` column
 over the staged frame and the upsert's survivors are its ``fresh``
@@ -52,6 +58,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from fastdb_spark.functions.sketches import sketch_impl
 from fastdb_spark.functions.text import doc_fingerprint, word_shingles
@@ -63,6 +70,9 @@ from fastdb_spark.pipeline.dedup import (
 )
 
 _META = "_meta.json"
+_SCHEMAS = "_schemas.json"
+#: the text index's tables; the first holds one row per document
+_TABLES = ("fingerprints", "bands", "shingles")
 
 #: default id-hash partition count for the three index tables.  Removal
 #: rewrites only the partitions holding removed ids, so the takedown bill
@@ -76,6 +86,71 @@ DEFAULT_ID_BUCKETS = 32
 
 def _params_path(path: str) -> str:
     return os.path.join(path, _META)
+
+
+def _record_schemas(path: str, tables: dict) -> None:
+    """Record ``{table: StructType}`` in the ``_schemas.json`` sidecar at
+    the index root, atomically (tmp + ``os.replace``, like
+    ``_ivf_meta.json``).  A schema carries the table's partition column:
+    a declared-schema read puts partition columns last whatever their
+    position, and takes their type from the declaration.  Every build
+    records all its tables once; the id column's name and type are the
+    caller's, so no schema here is a constant."""
+    os.makedirs(path, exist_ok=True)
+    dst = os.path.join(path, _SCHEMAS)
+    with open(dst + ".tmp", "w") as f:
+        json.dump({t: s.jsonValue() for t, s in tables.items()}, f)
+    os.replace(dst + ".tmp", dst)
+
+
+def _open(
+    spark: SparkSession,
+    path: str,
+    table: str,
+    dirs=(),
+    schema: StructType | None = None,
+) -> DataFrame:
+    """THE open of every persisted index table (text, media, semantic,
+    IVF): ``path/table`` — or only its partition directories ``dirs``,
+    with the table as ``basePath`` — read with the schema the build
+    recorded (``schema`` overrides it for a scratch table).  A declared
+    schema submits no Spark job, and a table whose partitions were all
+    deleted, or whose build wrote no rows, reads as zero rows.  An index
+    with no recorded schema raises ``ValueError`` naming
+    :func:`record_index_schemas`, its one-time migration."""
+    if schema is None:
+        try:
+            with open(os.path.join(path, _SCHEMAS)) as f:
+                schema = StructType.fromJson(json.load(f)[table])
+        except (FileNotFoundError, KeyError):
+            raise ValueError(
+                f"index table {table!r} at {path!r} has no recorded schema "
+                "(the index was built before schemas were recorded); run "
+                f"record_index_schemas(spark, {path!r}) once to migrate it"
+            ) from None
+    tdir = os.path.join(path, table)
+    reader = spark.read.schema(schema)
+    if dirs:
+        return reader.option("basePath", tdir).parquet(*dirs)
+    return reader.parquet(tdir)
+
+
+def record_index_schemas(spark: SparkSession, path: str) -> dict:
+    """One-time migration of an index built before table schemas were
+    recorded (any of the four families): infer each table under
+    ``path`` once — one Spark job per table — and record the schemas
+    :func:`_open` reads with.  Nothing calls it implicitly; it is the
+    only schema-inferring open of an index table.  Serializes on the
+    table write lock.  Returns ``{table: StructType}``."""
+    with table_write_lock(path):
+        schemas = {
+            t: spark.read.parquet(os.path.join(path, t)).schema
+            for t in sorted(os.listdir(path))
+            if not t.startswith(("_", "."))
+            and os.path.isdir(os.path.join(path, t))
+        }
+        _record_schemas(path, schemas)
+    return schemas
 
 
 def _sketch(
@@ -300,27 +375,6 @@ def _part_files(d: str) -> int:
     )
 
 
-def _seed_if_empty(
-    spark: SparkSession, tdir: str, schema, part_col: str, value=0
-) -> None:
-    """Keep a partitioned index table READABLE when a write leaves it
-    with no part files at all: a ``partitionBy`` write of a zero-row
-    frame emits nothing, and the next ``spark.read.parquet`` over the
-    table raises UNABLE_TO_INFER_SCHEMA (ADVICE r8: an overwrite BUILD
-    whose survivor set is empty — empty or fully-duplicate corpus —
-    regressed exactly the edge the flat layout handles for free, since
-    an empty non-partitioned write emits a schema-bearing file).
-    Re-seed the ``part_col=value`` partition with a zero-row
-    schema-bearing slice — the same discipline :func:`_rewrite_parts`
-    applies to tables a takedown empties.  ``schema`` carries the data
-    columns only (the partition column comes from the directory
-    name)."""
-    if not _part_files(tdir):
-        spark.createDataFrame([], schema).write.mode("overwrite").parquet(
-            os.path.join(tdir, f"{part_col}={value}")
-        )
-
-
 # Above this many survivors the upsert stops materializing ids on the
 # driver: the batch is staged to a scratch parquet (cluster-side
 # materialization — same read-after-write protection as persist) and the
@@ -379,7 +433,9 @@ def _append_survivors(
         if len(head) > id_ceiling:
             scratch = os.path.join(path, "_scratch_batch")
             surv.write.mode("overwrite").parquet(scratch)
-            surv = surv.sparkSession.read.parquet(scratch)
+            surv = _open(
+                surv.sparkSession, path, "_scratch_batch", schema=surv.schema
+            )
             n = surv.count()  # parquet footer metadata only
             ids = None
         else:
@@ -387,6 +443,13 @@ def _append_survivors(
             ids = sorted(r[id_col] for r in head)
 
         bkt = ["id_bucket"] if id_buckets else []
+        tables = {
+            "fingerprints": surv.select("fingerprint", id_col, *bkt),
+            "bands": surv.select(
+                F.explode("bands").alias("band"), F.col(id_col), *bkt
+            ),
+            "shingles": surv.select(id_col, "sh", *bkt),
+        }
         # the three table writes read the SAME checkpointed partitions
         # and land in disjoint directories — overlap them (guide §2.6)
         # instead of paying three serial write-job latencies (r12:
@@ -394,21 +457,14 @@ def _append_survivors(
         from fastdb_spark.parallel import run_independent_jobs
 
         run_independent_jobs(
-            lambda spec: _write_id_bucketed(
-                spec[0], os.path.join(path, spec[1]), id_buckets, overwrite
+            lambda t: _write_id_bucketed(
+                tables[t], os.path.join(path, t), id_buckets, overwrite
             ),
-            [
-                (surv.select("fingerprint", id_col, *bkt), "fingerprints"),
-                (
-                    surv.select(
-                        F.explode("bands").alias("band"), F.col(id_col), *bkt
-                    ),
-                    "bands",
-                ),
-                (surv.select(id_col, "sh", *bkt), "shingles"),
-            ],
+            list(tables),
             max_workers=3,
         )
+        if overwrite:  # the build
+            _record_schemas(path, {t: df.schema for t, df in tables.items()})
     finally:
         if scratch is not None:
             import shutil
@@ -465,27 +521,28 @@ def rebuild_dedup_index(
         n_hashes = n_hashes or p["n_hashes"]
         bands = bands or p["bands"]
         impl = sketch_impl(hash_impl)
-        sh = spark.read.parquet(os.path.join(path, "shingles"))
-        id_col = next(
-            c for c in sh.columns if c not in ("sh", "id_bucket")
-        )
+        sh = _open(spark, path, "shingles")
+        # the document key: the id column and, bucketed, its id_bucket —
+        # each bands row stays in its document's bucket
+        key = [c for c in sh.columns if c != "sh"]
         banded = (
             sh.withColumn("sig", impl.signature("sh", n_hashes))
             .withColumn("bands", impl.bands("sig", bands, n_hashes // bands))
-            .select(F.explode("bands").alias("band"), F.col(id_col))
+            .select(F.explode("bands").alias("band"), *key)
         )
         # bands/ derives from shingles/ only, so the overwrite has no
         # read-after-write hazard — lineage is severed anyway so a
         # refreshByPath during the write can never trigger recomputation
-        banded = banded.localCheckpoint(eager=True)
         nb = p.get("id_buckets")
+        if nb:
+            banded = banded.repartition("id_bucket")
         _write_id_bucketed(
-            _align_id_buckets(banded, id_col, nb),
+            banded.localCheckpoint(eager=True),
             os.path.join(path, "bands"),
             nb,
             overwrite=True,
         )
-        n = sh.select(id_col).distinct().count()
+        n = sh.select(*key).distinct().count()
         p.update(
             {
                 "hash_impl": hash_impl,
@@ -593,11 +650,7 @@ def dedup_index_remove(
         spark,
         ids,
         path,
-        (
-            ("fingerprints", ["fingerprint", id_col]),
-            ("bands", ["band", id_col]),
-            ("shingles", [id_col, "sh"]),
-        ),
+        _TABLES,
         id_col,
         *_bucket_layout(p.get("id_buckets")),
     )
@@ -687,7 +740,7 @@ def _remove_ids(
     locate,
 ) -> int:
     """Shared takedown engine of every persisted index (text, media,
-    IVF): drop ``ids`` from every ``(table, cols)`` in ``tables`` under
+    IVF): drop ``ids`` from every table named in ``tables`` under
     ``path`` and return the number of rows removed from the FIRST table
     (the one-row-per-item one).  ``locate(rm)`` is the one per-family
     input: it returns the ``part_col`` values of the partitions that
@@ -715,9 +768,9 @@ def _remove_ids(
             return _id_hits(src, rm, id_col).count()
 
         def _drop_from(item) -> int | None:
-            i, (table, cols) = item
+            i, table = item
             return _rewrite_parts(
-                spark, path, table, cols, part_col, parts,
+                spark, path, table, part_col, parts,
                 lambda df: _id_hits(df, rm, id_col, hit=False),
                 before=count if i == 0 and removed is None else None,
                 emptied=emptied,
@@ -732,7 +785,6 @@ def _rewrite_parts(
     spark: SparkSession,
     path: str,
     table: str,
-    cols: list | None,
     part_col: str | None,
     parts,
     transform,
@@ -743,13 +795,13 @@ def _rewrite_parts(
     compaction alike: the ``part_col`` partitions ``parts`` of
     ``path/table`` become ``transform`` of their rows, and every other
     partition dir is untouched (mtime-asserted in tests).
-    ``part_col=None`` rewrites a flat table whole.  ``cols=None`` means
-    every data column (the IVF vectors schema varies with the PQ
-    options).  ``before(src)``, when given, runs on the source rows
-    before the write; its result is returned.  Partitions in
-    ``emptied`` are known to end with no rows: they are not read and
-    their swap deletes them (``before`` does not see their rows).  The
-    caller holds the table write lock.
+    ``part_col=None`` rewrites a flat table whole.  The rows carry every
+    column of the table's recorded schema (:func:`_open`).
+    ``before(src)``, when given, runs on the source rows before the
+    write; its result is returned.  Partitions in ``emptied`` are known
+    to end with no rows: they are not read and their swap deletes them
+    (``before`` does not see their rows).  The caller holds the table
+    write lock.
 
     One read + one write job over all the partitions together (a
     per-partition loop pays job-launch latency per partition — measured
@@ -763,17 +815,16 @@ def _rewrite_parts(
     reads is the refreshByPath recomputation hazard), then each
     partition is swapped in with two renames, so an unlocked reader can
     at worst miss one partition for the span of its swap.  A partition
-    left with no rows has no tmp dir, so its swap deletes it; a table
-    left with no part files at all is re-seeded
-    (:func:`_seed_if_empty`) so the next read still infers a schema.  A
-    failed write swaps nothing."""
+    left with no rows has no tmp dir, so its swap deletes it (a table
+    left with no partitions reads as zero rows).  A failed write swaps
+    nothing."""
     import shutil
 
     tdir = os.path.join(path, table)
     tmp = os.path.join(path, f"_tmp_{table}")
     if part_col is None:
         swaps = [(tdir, tmp)]
-        src = spark.read.parquet(tdir)
+        src = _open(spark, path, table)
     else:
         parts = [
             v for v in parts
@@ -786,20 +837,11 @@ def _rewrite_parts(
             for d in (f"{part_col}={v}" for v in parts)
         ]
         read = [cur for (cur, _), v in zip(swaps, parts) if v not in emptied]
-        if not read and _part_files(tdir) == sum(_part_files(c) for c, _ in swaps):
-            # nothing else would be left: read them all, so the re-seed
-            # below has the table's schema
-            read = [cur for cur, _ in swaps]
-        src = (
-            spark.read.option("basePath", tdir).parquet(*read) if read else None
-        )
+        src = _open(spark, path, table, dirs=read) if read else None
     out = w = None
     if src is not None:
-        cols = cols or [c for c in src.columns if c != part_col]
-        # captured BEFORE the swaps: src's lineage reads the dirs they delete
-        schema = src.select(*cols).schema
         out = before(src) if before else None
-        rows = transform(src.select(*cols, *([part_col] if part_col else [])))
+        rows = transform(src)
         w = (
             rows.repartition(part_col).write.partitionBy(part_col)
             if part_col
@@ -820,8 +862,6 @@ def _rewrite_parts(
             shutil.rmtree(old, ignore_errors=True)
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-    if part_col and src is not None:
-        _seed_if_empty(spark, tdir, schema, part_col, parts[0])
     return out
 
 
@@ -843,20 +883,8 @@ def compact_dedup_index(
     files_after}``."""
     p = _load_params(path)
     return _compact_tables(
-        spark,
-        path,
-        (
-            ("fingerprints", ["fingerprint", _id_col_of(p)]),
-            ("bands", ["band", _id_col_of(p)]),
-            ("shingles", [_id_col_of(p), "sh"]),
-        ),
-        _bucket_layout(p.get("id_buckets"))[0],
-        min_files,
+        spark, path, _TABLES, _bucket_layout(p.get("id_buckets"))[0], min_files
     )
-
-
-def _id_col_of(p: dict) -> str:
-    return p.get("id_col", "doc_id")
 
 
 def _compact_tables(
@@ -870,12 +898,11 @@ def _compact_tables(
     index, IVF vector index): :func:`_rewrite_parts` with an identity
     transform over the ``part_col`` partitions holding more than
     ``min_files`` part files; on a flat layout (``part_col=None``) the
-    whole table, coalesced to one file, when it does.  ``cols=None`` in
-    a tables entry means every data column."""
+    whole table, coalesced to one file, when it does.  ``tables`` names
+    the tables."""
     from fastdb_spark.parallel import run_independent_jobs
 
-    def _compact_one(tc) -> tuple[str, dict | None]:
-        table, cols = tc
+    def _compact_one(table: str) -> tuple[str, dict | None]:
         tdir = os.path.join(path, table)
         if not os.path.isdir(tdir):
             return table, None
@@ -892,7 +919,7 @@ def _compact_tables(
         hit = [v for v, n in before.items() if n > min_files]
         if hit:
             _rewrite_parts(
-                spark, path, table, cols, part_col, hit,
+                spark, path, table, part_col, hit,
                 (lambda df: df) if part_col else (lambda df: df.coalesce(1)),
             )
         return table, {
@@ -940,9 +967,9 @@ def _write_id_bucketed(
     ``partitionOverwriteMode`` a rebuild would replace only the
     partitions present in the new frame, and bucket partitions of a
     previous larger index at the same path would survive, resurrecting
-    stale (possibly taken-down) entries (ADVICE r8).  A write that
-    leaves the table with no part files is re-seeded
-    (:func:`_seed_if_empty`) so the next read still infers a schema."""
+    stale (possibly taken-down) entries (ADVICE r8).  A zero-row write
+    leaves no part files; the table still reads as zero rows, because
+    every open declares the recorded schema (:func:`_open`)."""
     mode = "overwrite" if overwrite else "append"
     if not nb:
         df.write.mode(mode).parquet(tdir)
@@ -951,9 +978,6 @@ def _write_id_bucketed(
     if overwrite:
         w = w.option("partitionOverwriteMode", "static")
     w.partitionBy("id_bucket").mode(mode).parquet(tdir)
-    _seed_if_empty(
-        df.sparkSession, tdir, df.drop("id_bucket").schema, "id_bucket"
-    )
 
 
 def _stream_index(
@@ -1118,13 +1142,8 @@ def _classify(
     sets come back to it as left-joined flags, so the verdict is one
     ``coalesce`` column and ``surv`` is its ``fresh`` filter."""
     from fastdb_spark.cachereg import stage
-    from fastdb_spark.parallel import run_independent_jobs
 
-    # each open infers its table's schema with a Spark job; overlap them
-    fps, old_bands, old_sh = run_independent_jobs(
-        lambda t: spark.read.parquet(os.path.join(path, t)),
-        ("fingerprints", "bands", "shingles"),
-    )
+    fps, old_bands, old_sh = (_open(spark, path, t) for t in _TABLES)
     # (a) exact vs index + in-batch keep-min-id, staged once
     ex = stage(_exact_leg(sk, id_col, fps))
     keepmin = ex.filter(F.col("_v").isNull())

@@ -23,6 +23,8 @@ Index layout (``path/``):
 - ``_meta.json`` — hash method (phash/dhash) + id_buckets; upserts
   enforce consistency (a batch hashed with the other method would match
   nothing and silently disable dedup).
+- ``_schemas.json`` — the ``hashes`` schema, recorded by the build;
+  every open reads with it (``incdedup._open``).
 
 Incremental semantics (stated precisely, tested): a new item is dropped
 iff (a) some INDEXED item's fingerprint is within ``max_hamming`` of
@@ -63,6 +65,8 @@ from fastdb_spark.pipeline.incdedup import (
     DEFAULT_ID_CEILING,
     _align_id_buckets,
     _bucket_layout,
+    _open,
+    _record_schemas,
     _remove_ids,
     _stream_index,
     _write_id_bucketed,
@@ -222,14 +226,13 @@ def build_media_index(
             hashes, id_col, max_hamming, bands, max_bucket_size
         ).localCheckpoint(eager=True)
         n = surv.count()
-        _write_id_bucketed(
-            _align_id_buckets(
-                surv.select("phash", F.col(id_col)), id_col, id_buckets
-            ),
-            os.path.join(path, "hashes"),
-            id_buckets,
-            overwrite=True,
+        rows = _align_id_buckets(
+            surv.select("phash", F.col(id_col)), id_col, id_buckets
         )
+        _write_id_bucketed(
+            rows, os.path.join(path, "hashes"), id_buckets, overwrite=True
+        )
+        _record_schemas(path, {"hashes": rows.schema})
     finally:
         release_staged()
     with open(_params_path(path), "w") as f:
@@ -267,7 +270,7 @@ def _classify(
     appends.  ``audit`` is forwarded to ``imagededup.hash_matches``
     (the probe passes none).  Caller holds the lock and releases the
     staged frames."""
-    idx = spark.read.parquet(os.path.join(path, "hashes"))
+    idx = _open(spark, path, "hashes")
     dup = hash_matches(
         hashes,
         idx,
@@ -435,7 +438,7 @@ def media_index_remove(
         spark,
         ids,
         path,
-        (("hashes", ["phash", id_col]),),
+        ("hashes",),
         id_col,
         *_bucket_layout(p.get("id_buckets")),
     )
@@ -456,12 +459,8 @@ def compact_media_index(
     from fastdb_spark.pipeline.incdedup import _compact_tables
 
     p = _load_params(path)
-    id_col = p.get("id_col", "media_id")
     return _compact_tables(
-        spark,
-        path,
-        (("hashes", ["phash", id_col]),),
-        _bucket_layout(p.get("id_buckets"))[0],
+        spark, path, ("hashes",), _bucket_layout(p.get("id_buckets"))[0],
         min_files,
     )
 

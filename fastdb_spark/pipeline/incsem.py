@@ -61,6 +61,8 @@ from pyspark.sql import functions as F
 
 from fastdb_spark.functions.vectors import as_double_array
 from fastdb_spark.locks import table_write_lock
+from fastdb_spark.pipeline.ann import _load_centroids
+from fastdb_spark.pipeline.incdedup import _open
 from fastdb_spark.pipeline.semdedup import (
     DEFAULT_MAX_CLUSTER,
     assign_clusters,
@@ -72,15 +74,6 @@ _SEM_META = "_sem_meta.json"
 def _sem_params(path: str) -> dict:
     with open(os.path.join(path, _SEM_META)) as f:
         return json.load(f)
-
-
-def _load_centroids(spark: SparkSession, path: str) -> list[list[float]]:
-    rows = (
-        spark.read.parquet(os.path.join(path, "centroids"))
-        .orderBy("cluster")
-        .collect()
-    )
-    return [list(map(float, r["centroid"])) for r in rows]
 
 
 def _inbatch_drops(
@@ -212,7 +205,6 @@ def _classify(
         # view by the maintenance choreography — r13, VERDICT r12 #5)
         full = stage_adaptive(full)
         pair_side = full
-    vec_dir = os.path.join(path, "vectors")
     if guarded:
         # restrict the VECTOR read to unguarded clusters — a guarded
         # (degenerate, over-max_cluster_size) cluster's stored side can
@@ -228,7 +220,7 @@ def _classify(
             for r in full.select("cluster").distinct().collect()
         ]  # bounded by the centroid count
     old = (
-        spark.read.parquet(vec_dir)
+        _open(spark, path, "vectors")
         .filter(F.col("cluster").isin(touched_pair))  # partition-pruned
         .select("cluster", as_double_array(F.col(vec_col)).alias("v"))
     )
@@ -353,7 +345,7 @@ def build_semantic_index(
     # the build just wrote exactly the survivor set: count the persisted
     # layout (parquet footer metadata — no data read, no recompute of
     # the admission pipeline) instead of re-running the survivor plan
-    n = df.sparkSession.read.parquet(os.path.join(path, "vectors")).count()
+    n = _open(df.sparkSession, path, "vectors").count()
     from fastdb_spark.cachereg import release_staged
 
     release_staged()

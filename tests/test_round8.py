@@ -542,59 +542,6 @@ def test_media_index_flat_fallback(spark, tmp_path):
     assert left == {0, 1, 3, 4, 5}
 
 
-def test_takedown_emptying_whole_index_stays_readable(spark, tmp_path):
-    """Removing every indexed item must leave readable (zero-row,
-    schema-bearing) tables so the next upsert works — both index
-    families (the empty partitionBy write produces no part files, the
-    UNABLE_TO_INFER_SCHEMA regression)."""
-    from fastdb_spark.pipeline import incdedup as inc
-    from fastdb_spark.pipeline import incmedia as im
-
-    tpath = str(tmp_path / "t_all")
-    inc.build_dedup_index(_docs(spark, [1]), tpath)
-    assert inc.dedup_index_remove(spark, [1], tpath) == 1
-    assert inc.dedup_index_upsert(spark, _docs(spark, [1]), tpath) == [1]
-
-    mpath = str(tmp_path / "m_all")
-    im.build_media_index(_media_df(spark, [(1, 1, 0)]), mpath)
-    assert im.media_index_remove(spark, [1], mpath) == 1
-    assert im.media_index_upsert(
-        spark, _media_df(spark, [(1, 1, 0)]), mpath
-    ) == [1]
-
-
-def test_ivf_takedown_wiping_whole_index_stays_readable(spark, tmp_path):
-    """Removing EVERY vector leaves vectors/ readable (zero-row,
-    schema-bearing) so the next upsert or probe works — the IVF twin of
-    the emptied-index regression."""
-    import numpy as np
-
-    from fastdb_spark.pipeline.ann import (
-        build_ivf_index,
-        ivf_index_remove,
-        ivf_index_upsert,
-        ivf_search_index,
-    )
-
-    def vecs(ids):
-        rows = []
-        for i in ids:
-            rng = np.random.default_rng(1000 + i)
-            rows.append((i, [float(x) for x in rng.uniform(-1, 1, 8)]))
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        )
-
-    path = str(tmp_path / "ivf_all")
-    build_ivf_index(vecs(range(20)), path, n_clusters=4, strategy="seed")
-    assert ivf_index_remove(spark, list(range(20)), path) == 20
-    assert spark.read.parquet(path + "/vectors").count() == 0
-    q = [float(x) for x in np.random.default_rng(1).uniform(-1, 1, 8)]
-    assert ivf_search_index(spark, path, q, k=5, nprobe=4).count() == 0
-    ivf_index_upsert(vecs(range(100, 105)), path)
-    assert spark.read.parquet(path + "/vectors").count() == 5
-
-
 def test_media_index_video_and_audio_methods(spark, tmp_path):
     """The index is honestly multimodal: method='video' fingerprints AVI
     clips (regrade twins collapse), method='audio' fingerprints WAVs

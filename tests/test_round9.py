@@ -13,7 +13,8 @@ guard-default flip.
 3. Media index family is guard-ON by default (VERDICT r8 #1), with
    ``LAST_UPSERT_AUDIT`` mirroring the text twin.
 4. An id-bucketed index BUILD with an empty survivor set stays readable
-   (ADVICE r8: zero part files -> UNABLE_TO_INFER_SCHEMA on next read).
+   (ADVICE r8): tested with the other empty-index cases in
+   ``tests/test_index_rewrite.py``.
 5. A rebuild at the same path under partitionOverwriteMode=dynamic must
    not resurrect stale bucket partitions (ADVICE r8).
 6. ``tune_micro_batch_shuffle`` survives a non-numeric ('auto') conf
@@ -203,60 +204,6 @@ def test_media_index_upsert_banded_audit_resets(spark, tmp_path):
     for cap in (1, None):
         im.media_index_probe(spark, probe, ppath, max_bucket_size=cap)
         assert im.LAST_UPSERT_AUDIT == truncated
-
-
-# ---------------------------------------------------------------------------
-# 4. empty-survivor builds stay readable
-
-
-def test_build_dedup_index_empty_corpus_bucketed_stays_readable(
-    spark, tmp_path
-):
-    from fastdb_spark.pipeline import incdedup as inc
-
-    path = str(tmp_path / "eidx")
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert inc.build_dedup_index(empty, path, id_buckets=4) == 0
-    # the regression: this read raised UNABLE_TO_INFER_SCHEMA
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")],
-        "doc_id long, text string",
-    )
-    assert inc.dedup_index_upsert(spark, docs, path) == [1]
-
-
-def test_rebuild_dedup_index_empty_bucketed_index_stays_readable(
-    spark, tmp_path
-):
-    """rebuild_dedup_index rewrites bands/ through the same id-bucket
-    writer as build and upsert, so an empty rebuild is re-seeded too:
-    the rewrite used to leave bands/ with no part files, and the next
-    upsert raised UNABLE_TO_INFER_SCHEMA."""
-    from fastdb_spark.pipeline import incdedup as inc
-
-    path = str(tmp_path / "eridx")
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    assert inc.build_dedup_index(empty, path, id_buckets=4) == 0
-    assert inc.rebuild_dedup_index(spark, path) == 0
-    docs = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon zeta")],
-        "doc_id long, text string",
-    )
-    assert inc.dedup_index_upsert(spark, docs, path) == [1]
-
-
-def test_build_media_index_empty_corpus_bucketed_stays_readable(
-    spark, tmp_path
-):
-    from fastdb_spark.pipeline import incmedia as im
-
-    path = str(tmp_path / "emidx")
-    empty = spark.createDataFrame([], "media_id long, payload binary")
-    assert im.build_media_index(empty, path, id_buckets=4) == 0
-    ids = im.media_index_upsert(
-        spark, _media_df(spark, [(1, 1, 0)]), path
-    )
-    assert ids == [1]
 
 
 # ---------------------------------------------------------------------------

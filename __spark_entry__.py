@@ -776,6 +776,7 @@ def _q_semantic_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         semantic_index_remove,
         semantic_index_upsert,
     )
+    from fastdb_spark.pipeline.incdedup import _open
 
     embs = Catalog(spark, sf_dir).table("embeddings").repartition(
         spark.sparkContext.defaultParallelism
@@ -802,7 +803,7 @@ def _q_semantic_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, embs.filter("vec_id % 10 = 0").select("vec_id"), path
     )
     semantic_index_upsert(corpus.filter("vec_id % 2 = 1"), path)
-    return spark.read.parquet(os.path.join(path, "vectors")).select(
+    return _open(spark, path, "vectors").select(
         "vec_id", F.col("cluster").cast("int").alias("cluster")
     )
 
@@ -1449,26 +1450,20 @@ def _q_asof_latest_forced(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_broker_info(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Broker classification lookup (reference ltcvapp.py:280-329, the
-    lookup ``api.get_broker_info`` serves): restrict messages to an id
-    set and a processing version's mapped base versions (unmapped bpv0
-    drops out), keep the highest-priority message per (source, broker,
-    topic), extract a typed field from the JSON info payload (F9).  The
-    gate builds the lookup itself — a broadcast join to a literal
-    version mapping, then ``dedup_top_priority`` — and does not call
-    ``FastdbAPI.get_broker_info``, which restricts and deduplicates
-    through ``versions.versioned`` (covered by
-    tests/test_api.py::test_get_broker_info)."""
+    """Broker classification lookup (reference ltcvapp.py:280-329) through
+    the operator ``FastdbAPI.get_broker_info`` runs: restrict messages to
+    an id set, then ``versions.versioned`` restricts them to a processing
+    version's mapped base versions (unmapped bpv0 drops out) and keeps the
+    highest-priority message per (source, broker, topic), ``msgid``
+    breaking ties; extract a typed field from the JSON info payload
+    (F9)."""
     li = Catalog(spark, sf_dir).table("lineitem")
     bi = ad.brokerinfo(li).filter(F.col("diasourceid") % 50 == 0)
-    mapping = tiny_local_df(
-        spark,
-        [("bpv1", 1), ("bpv2", 2)],
-        "base_procver_id string, priority bigint",
-    )
-    joined = bi.join(F.broadcast(mapping), on="base_procver_id", how="inner")
-    out = dedup_top_priority(
-        joined, ["diasourceid", "brokername", "topic"], ["priority", "msgid"]
+    out = versioned(
+        bi,
+        {"bpv1": 1, "bpv2": 2},
+        keys=("diasourceid", "brokername", "topic"),
+        extra_order=("msgid",),
     )
     return out.select(
         "diasourceid",
@@ -2600,6 +2595,7 @@ def _q_dedup_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from fastdb_spark.pipeline.incdedup import (
+        _open,
         build_dedup_index,
         dedup_index_upsert,
     )
@@ -2612,7 +2608,7 @@ def _q_dedup_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_index_upsert(
         spark, docs.filter("doc_id % 2 = 1"), path, max_bucket_size=None
     )
-    idx = spark.read.parquet(os.path.join(path, "fingerprints"))
+    idx = _open(spark, path, "fingerprints")
     return idx.select("doc_id", "fingerprint")
 
 
@@ -2628,6 +2624,7 @@ def _q_dedup_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from fastdb_spark.pipeline.incdedup import (
+        _open,
         build_dedup_index,
         dedup_index_remove,
         dedup_index_upsert,
@@ -2638,14 +2635,14 @@ def _q_dedup_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _scratch("fastdb_incdedup_takedown", tag)
     shutil.rmtree(path, ignore_errors=True)  # fresh index per adjudication
     build_dedup_index(docs.filter("doc_id % 2 = 0"), path)
-    rm = spark.read.parquet(os.path.join(path, "fingerprints")).filter(
+    rm = _open(spark, path, "fingerprints").filter(
         "doc_id % 10 = 0"
     ).select("doc_id")
     dedup_index_remove(spark, rm, path)
     dedup_index_upsert(
         spark, docs.filter("doc_id % 2 = 1"), path, max_bucket_size=None
     )
-    idx = spark.read.parquet(os.path.join(path, "fingerprints"))
+    idx = _open(spark, path, "fingerprints")
     return idx.select("doc_id", "fingerprint")
 
 
@@ -2694,6 +2691,7 @@ def _q_dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from fastdb_spark.pipeline.incdedup import (
+        _open,
         build_dedup_index,
         compact_dedup_index,
         dedup_index_upsert,
@@ -2716,7 +2714,7 @@ def _q_dedup_index_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = stats["fingerprints"]
     if fp["buckets_compacted"] == 0 or fp["files_after"] >= fp["files_before"]:
         raise AssertionError(f"compaction did not run/shrink: {stats}")
-    idx = spark.read.parquet(os.path.join(path, "fingerprints"))
+    idx = _open(spark, path, "fingerprints")
     return idx.select("doc_id", "fingerprint")
 
 
@@ -3144,6 +3142,7 @@ def _q_media_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_index_remove,
         media_index_upsert,
     )
+    from fastdb_spark.pipeline.incdedup import _open
     from fastdb_spark.sources import imagecodec as ic
 
     docs = (
@@ -3194,9 +3193,7 @@ def _q_media_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     media_index_remove(spark, rm, path)
     media_index_upsert(spark, docs.mapInPandas(mk_odd, schema), path)
-    return spark.read.parquet(os.path.join(path, "hashes")).select(
-        "media_id"
-    )
+    return _open(spark, path, "hashes").select("media_id")
 
 
 def _q_media_index_av_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3233,6 +3230,7 @@ def _q_media_index_av_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         media_index_remove,
         media_index_upsert,
     )
+    from fastdb_spark.pipeline.incdedup import _open
     from fastdb_spark.sources import avicodec as av
     from fastdb_spark.sources import imagecodec as ic
 
@@ -3305,7 +3303,7 @@ def _q_media_index_av_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         media_index_remove(spark, rm, path)
         media_index_upsert(spark, docs.mapInPandas(mk_odd, schema), path)
-        return spark.read.parquet(os.path.join(path, "hashes")).select(
+        return _open(spark, path, "hashes").select(
             F.lit(modality).alias("modality"), "media_id"
         )
 
@@ -3406,6 +3404,7 @@ def _q_ann_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_index_upsert,
         ivf_search_index,
     )
+    from fastdb_spark.pipeline.incdedup import _open
 
     embs, qvec = _ann_corpus(spark, sf_dir)
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
@@ -3415,7 +3414,7 @@ def _q_ann_index_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         embs.filter("vec_id % 2 = 0"), path, n_clusters=8, strategy="seed"
     )
     rm = (
-        spark.read.parquet(os.path.join(path, "vectors"))
+        _open(spark, path, "vectors")
         .filter("vec_id % 10 = 0")
         .select("vec_id")
     )

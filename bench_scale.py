@@ -283,10 +283,11 @@ def bench_skew(spark) -> dict:
     same operation on a uniform frame vs one with 10% of all rows on a
     single key, AQE skew handling on (the session default).
 
-    - ``dedup_top_priority`` (A1, strategy='agg'): grouping-key skew.
-      The hash-aggregate max_by is partial-aggregated map-side, so the
-      hot key reaches its reducer as <= n_partitions partial rows — the
-      skew NEVER crosses the shuffle.  The wall-time ratio documents it.
+    - ``dedup_top_priority`` (A1): grouping-key skew.  The max_by
+      aggregate is partial-aggregated map-side (a SortAggregate before
+      the shuffle), so the hot key reaches its reducer as <= n_partitions
+      partial rows — the skew NEVER crosses the shuffle.  The wall-time
+      ratio documents it.
     - ``patch_lightcurve`` (J3): a hot rootid (10% of rows, distinct
       visits) through the full-outer join.  The join key is the
       composite (rootid, visit), so hash partitioning spreads the hot

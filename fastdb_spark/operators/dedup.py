@@ -3,34 +3,33 @@
 The reference expresses this as Postgres ``SELECT DISTINCT ON (keys...)
 ... ORDER BY keys..., pv.priority DESC`` in nearly every query (reference
 ``src/ltcv.py:645-669``, ``src/parquet_export.py:63-71``,
-``src/webserver/server.py:149-169``; SURVEY.md A1/A2/W2): given several
+``src/webserver/server.py:149-169``; SURVEY.md A1/A2): given several
 versions of the same logical row (one per base processing version), return
 exactly one row per logical key — the one from the highest-priority version.
 
-Spark design — two physical strategies:
+One implementation, one SQL fragment (:func:`argmax_sql`)::
 
-``agg`` (default)
-    ``groupBy(keys).agg(max_by(struct(<all columns>), struct(<order>)))``.
-    A hash aggregate with **map-side partial aggregation**: each input
-    partition reduces to at most one candidate row per key before the
-    shuffle, so shuffle volume is bounded by the number of *distinct keys*,
-    not the number of input rows.  With ~5 base versions per logical row at
-    100 TB this cuts shuffled bytes ~5x vs. a window, and avoids the
-    window's full partition sort.
+    SELECT <keys>, max_by|min_by(struct(<payload>), named_struct(<order>))
+    FROM <rel> GROUP BY <keys>
 
-``window``
-    ``row_number() over (partition by keys order by <order> desc) = 1``.
-    Shuffles + sorts every input row.  Kept for cases where the ordering
-    columns can be NULL (``max_by`` skips rows whose ordering value is
-    NULL, matching SQL ``MAX`` semantics; ``DISTINCT ON`` would keep them).
+``versions.versioned_sql`` wraps it in the base-version restriction, and
+:func:`dedup_top_priority` / :func:`dedup_first_seen` run it over one
+DataFrame.  Spark 4.1 plans the struct-valued ``max_by`` / ``min_by`` as
+a partial ``SortAggregate`` before the one ``Exchange
+hashpartitioning(keys)`` and a final ``SortAggregate`` after it, each
+over a sort by the keys.  The partial aggregate reduces every input
+partition to one candidate row per key, so the shuffle carries at most
+(partitions x distinct keys) rows, however many versions each key has.
+The keys come out of the grouping columns, not the payload struct, so the
+output keeps the aggregate's hash partitioning (a join on the keys needs
+no further shuffle).
 
-``narrow``
-    Aggregate only (keys + ordering columns) to find each key's winning
-    ordering tuple, then join back to fetch the payload.  The wide rows
-    never enter an aggregate buffer or sort — at 100 TB with 30-column
-    photometry rows this trades one extra (self-)join for shuffling the
-    full payload through a SortAggregate.  Requires ordering columns to be
-    plain column names and (keys + order) to identify rows uniquely.
+Ordering: the order columns compare as one struct, lexicographically, as a
+multi-key ``ORDER BY`` does.  Spark's struct ordering puts a NULL field
+below every non-NULL value: a row whose ordering value is NULL is kept
+when it is alone for its key, loses to a non-NULL row under ``max_by``
+(:func:`dedup_top_priority`) and wins over it under ``min_by``
+(:func:`dedup_first_seen`).
 
 Ties: callers must pass a total order (append a unique id as the last
 ordering column) — Postgres ``DISTINCT ON`` with a non-total order is
@@ -41,25 +40,42 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
-def _ordering_struct(order_by: Sequence[str | Column]) -> Column:
-    # struct comparison is lexicographic, exactly what multi-key ORDER BY
-    # does; positional aliases allow repeated/expression ordering columns
-    cols = [
-        (F.col(c) if isinstance(c, str) else c).alias(f"_o{i}")
-        for i, c in enumerate(order_by)
-    ]
-    return F.struct(*cols)
+def quote_ident(name: str) -> str:
+    """A column name as a backquoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def argmax_sql(
+    rel: str,
+    cols: Sequence[str],
+    keys: Sequence[str],
+    order_by: Sequence[str],
+    largest: bool = True,
+) -> str:
+    """SQL fragment: one row per ``keys`` of ``rel``, the one with the
+    largest (``largest=False``: smallest) ``order_by`` tuple, projected to
+    ``cols``.  ``rel`` is a relation name or a parenthesized subquery;
+    ``cols``, ``keys`` and ``order_by`` are column names."""
+    ks = ", ".join(map(quote_ident, keys))
+    payload = ", ".join(quote_ident(c) for c in cols if c not in keys)
+    out = ", ".join(
+        quote_ident(c) if c in keys else f"_best.{quote_ident(c)}" for c in cols
+    )
+    order = ", ".join(
+        f"'_o{i}', {quote_ident(c)}" for i, c in enumerate(order_by)
+    )
+    agg = "max_by" if largest else "min_by"
+    return (
+        f"SELECT {out} FROM (SELECT {ks}, {agg}(struct({payload}), "
+        f"named_struct({order})) AS _best FROM {rel} GROUP BY {ks})"
+    )
 
 
 def dedup_top_priority(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[str | Column],
-    strategy: str = "agg",
+    df: DataFrame, keys: Sequence[str], order_by: Sequence[str]
 ) -> DataFrame:
     """One row per ``keys``, taking the row with the LARGEST ``order_by``
     (lexicographic over the sequence).
@@ -67,43 +83,13 @@ def dedup_top_priority(
     Equivalent to Postgres ``DISTINCT ON (keys) ... ORDER BY keys,
     o1 DESC, o2 DESC, ...`` (reference ``src/ltcv.py:645-669``).
     """
-    if strategy == "agg":
-        payload = F.struct(*[F.col(c) for c in df.columns])
-        best = df.groupBy(*keys).agg(
-            F.max_by(payload, _ordering_struct(order_by)).alias("_best")
-        )
-        return best.select("_best.*")
-    if strategy == "window":
-        w = Window.partitionBy(*keys).orderBy(
-            *[
-                (F.col(c) if isinstance(c, str) else c).desc()
-                for c in order_by
-            ]
-        )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    if strategy == "narrow":
-        names = [c for c in order_by if isinstance(c, str)]
-        if len(names) != len(order_by):
-            raise ValueError("narrow strategy needs plain column names")
-        winners = df.select(*keys, *names).groupBy(*keys).agg(
-            F.max(_ordering_struct(names)).alias("_w")
-        )
-        winners = winners.select(
-            *keys, *[F.col(f"_w._o{i}").alias(n) for i, n in enumerate(names)]
-        )
-        return df.join(winners, on=[*keys, *names], how="left_semi")
-    raise ValueError(f"unknown strategy {strategy!r}")
+    return df.sparkSession.sql(
+        argmax_sql("{df}", df.columns, keys, order_by), df=df
+    )
 
 
 def dedup_first_seen(
-    df: DataFrame,
-    keys: Sequence[str],
-    order_by: Sequence[str | Column],
-    strategy: str = "agg",
+    df: DataFrame, keys: Sequence[str], order_by: Sequence[str]
 ) -> DataFrame:
     """One row per ``keys``, taking the SMALLEST ``order_by`` — first-seen
     wins.
@@ -113,19 +99,6 @@ def dedup_first_seen(
     ``src/services/source_importer.py:133-212``,
     ``src/services/all_alerts_importer.py:69-95``; SURVEY.md A2/S4).
     """
-    if strategy == "agg":
-        payload = F.struct(*[F.col(c) for c in df.columns])
-        best = df.groupBy(*keys).agg(
-            F.min_by(payload, _ordering_struct(order_by)).alias("_best")
-        )
-        return best.select("_best.*")
-    if strategy == "window":
-        w = Window.partitionBy(*keys).orderBy(
-            *[(F.col(c) if isinstance(c, str) else c).asc() for c in order_by]
-        )
-        return (
-            df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-    raise ValueError(f"unknown strategy {strategy!r}")
+    return df.sparkSession.sql(
+        argmax_sql("{df}", df.columns, keys, order_by, largest=False), df=df
+    )

@@ -29,7 +29,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
-from fastdb_spark.versions import quote_ident
+from fastdb_spark.operators.dedup import quote_ident
 
 
 def patch_sql(

@@ -156,7 +156,12 @@ def associate_roots(
         ).select("diaobjectid", F.col("rootid_existing").alias("rootid"))
 
     if matched is not None:
-        unmatched = objs.join(matched, on="diaobjectid", how="left_anti")
+        # matched holds at most one row per batch object (the crossmatch
+        # broadcasts the batch too): broadcast it, so neither use of
+        # unmatched shuffles the batch for the anti-join
+        unmatched = objs.join(
+            F.broadcast(matched), on="diaobjectid", how="left_anti"
+        )
     else:
         unmatched = objs
 

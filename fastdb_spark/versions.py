@@ -16,7 +16,8 @@ id and, per table, a ``{base_procver_id: priority}`` dict, memoized per
 resolver.  A versioned read carries that dict into its SQL statement as
 one ``map<string,int>`` parameter; the restriction and the priority are
 a map lookup per row, not a join, so the only shuffle in a versioned
-read is the dedup aggregate's.
+read is the dedup aggregate's (``operators.dedup.argmax_sql``, a
+sort-based ``max_by`` that aggregates partially before the shuffle).
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from fastdb_spark.operators.dedup import argmax_sql
 
 #: the processing versions a handle can name, ranked by the resolution
 #: order (0-2), and every base-version row (rank 3): one job of one scan
@@ -112,11 +115,6 @@ def priority_map(priorities: Mapping[str, int]) -> Column:
     return F.create_map(*kv)
 
 
-def quote_ident(name: str) -> str:
-    """A column name as a backquoted SQL identifier."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def versioned_sql(
     rel: str,
     cols: Sequence[str],
@@ -140,31 +138,17 @@ def versioned_sql(
 
     ``:<param>`` is the statement parameter holding the version's
     :func:`priority_map`; a row whose base version is not in it has a NULL
-    priority and is dropped.  The dedup is one map-side-combining
-    ``max_by`` aggregate over ``(priority, *extra_order)`` (see
-    ``operators.dedup``); ``extra_order`` appends deterministic
-    tie-breakers.  ``rel`` is a relation name or a parenthesized
-    subquery; ``cols``, ``keys`` and ``extra_order`` are column names.
+    priority and is dropped.  The dedup is ``operators.dedup.argmax_sql``
+    over ``(priority, *extra_order)``; ``extra_order`` appends
+    deterministic tie-breakers.  ``rel`` is a relation name or a
+    parenthesized subquery; ``cols``, ``keys`` and ``extra_order`` are
+    column names.
     """
-    ks = ", ".join(map(quote_ident, keys))
-    payload = ", ".join(quote_ident(c) for c in cols if c not in keys)
-    # keys come from the grouping columns, not the payload struct, so the
-    # aggregate's hash partitioning on them survives into the output (a
-    # join on the keys needs no further shuffle)
-    out = ", ".join(
-        quote_ident(c) if c in keys else f"_best.{quote_ident(c)}" for c in cols
+    restricted = (
+        f"(SELECT * FROM (SELECT *, CAST(:{param} AS map<string,int>)"
+        f"[base_procver_id] AS _prio FROM {rel}) WHERE _prio IS NOT NULL)"
     )
-    order = ", ".join(
-        f"'_o{i}', {c}"
-        for i, c in enumerate(["_prio", *map(quote_ident, extra_order)])
-    )
-    return (
-        f"SELECT {out} FROM (SELECT {ks}, max_by(struct({payload}), "
-        f"named_struct({order})) AS _best "
-        f"FROM (SELECT *, CAST(:{param} AS map<string,int>)[base_procver_id] "
-        f"AS _prio FROM {rel}) "
-        f"WHERE _prio IS NOT NULL GROUP BY {ks})"
-    )
+    return argmax_sql(restricted, cols, keys, ("_prio", *extra_order))
 
 
 def versioned(

@@ -1,12 +1,15 @@
-"""Unit tests for the core operators (strategy equivalence, null handling,
+"""Unit tests for the core operators (argmax dedup answers, null handling,
 predicate compiler errors)."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
-from fastdb_spark.operators.dedup import dedup_first_seen, dedup_top_priority
+from fastdb_spark.operators.dedup import (
+    argmax_sql,
+    dedup_first_seen,
+    dedup_top_priority,
+)
 from fastdb_spark.operators.patch import patch_lightcurve
 from fastdb_spark.operators.predicates import FieldSpec, apply_where, compile_where
 
@@ -27,41 +30,49 @@ def versions_df(spark):
     return spark.createDataFrame(rows, ["k1", "k2", "priority", "val"])
 
 
+def _by_key(df):
+    return {(r["k1"], r["k2"]): r["val"] for r in df.collect()}
+
+
 def test_dedup_strategies_agree(versions_df):
-    a = dedup_top_priority(versions_df, ["k1", "k2"], ["priority", "val"], "agg")
-    w = dedup_top_priority(versions_df, ["k1", "k2"], ["priority", "val"], "window")
-    ra = {(r["k1"], r["k2"]): r["val"] for r in a.collect()}
-    rw = {(r["k1"], r["k2"]): r["val"] for r in w.collect()}
-    assert ra == rw == {(1, 1): "b", (1, 2): "d", (2, 1): "y"}
+    """The DataFrame operator and the ``argmax_sql`` fragment it shares with
+    ``versions.versioned_sql`` pick the same rows: the largest
+    (priority, val) per key, with the input's columns in the input's order."""
+    keys, order = ["k1", "k2"], ["priority", "val"]
+    op = dedup_top_priority(versions_df, keys, order)
+    frag = versions_df.sparkSession.sql(
+        argmax_sql("{df}", versions_df.columns, keys, order), df=versions_df
+    )
+    assert op.columns == frag.columns == versions_df.columns
+    assert _by_key(op) == _by_key(frag) == {(1, 1): "b", (1, 2): "d", (2, 1): "y"}
 
 
 def test_first_seen_strategies_agree(versions_df):
-    a = dedup_first_seen(versions_df, ["k1", "k2"], ["priority", "val"], "agg")
-    w = dedup_first_seen(versions_df, ["k1", "k2"], ["priority", "val"], "window")
-    ra = {(r["k1"], r["k2"]): r["val"] for r in a.collect()}
-    rw = {(r["k1"], r["k2"]): r["val"] for r in w.collect()}
-    assert ra == rw == {(1, 1): "a", (1, 2): "d", (2, 1): "x"}
-
-
-def test_dedup_narrow_strategy(versions_df):
-    a = dedup_top_priority(versions_df, ["k1", "k2"], ["priority", "val"], "agg")
-    n = dedup_top_priority(versions_df, ["k1", "k2"], ["priority", "val"], "narrow")
-    ra = {(r["k1"], r["k2"]): r["val"] for r in a.collect()}
-    rn = {(r["k1"], r["k2"]): r["val"] for r in n.collect()}
-    assert ra == rn
-    with pytest.raises(ValueError):
-        dedup_top_priority(
-            versions_df, ["k1"], [F.col("priority") * 2], "narrow"
-        )  # expression ordering not allowed for narrow
-
-
-def test_dedup_expression_ordering(versions_df):
-    # Column-expression ordering (e.g. negated priority) works
-    out = dedup_top_priority(
-        versions_df, ["k1", "k2"], [-F.col("priority"), F.col("val")]
+    """As above for first seen: the smallest (priority, val) per key."""
+    keys, order = ["k1", "k2"], ["priority", "val"]
+    op = dedup_first_seen(versions_df, keys, order)
+    frag = versions_df.sparkSession.sql(
+        argmax_sql("{df}", versions_df.columns, keys, order, largest=False),
+        df=versions_df,
     )
-    got = {(r["k1"], r["k2"]): r["val"] for r in out.collect()}
-    assert got[(1, 1)] == "a"  # lowest priority wins under negation
+    assert op.columns == frag.columns == versions_df.columns
+    assert _by_key(op) == _by_key(frag) == {(1, 1): "a", (1, 2): "d", (2, 1): "x"}
+
+
+def test_dedup_null_ordering_value(spark):
+    """Spark's struct ordering puts a NULL ordering field below every
+    non-NULL value: a row with a NULL ordering value is kept when it is
+    alone for its key, loses to a non-NULL row under ``max_by`` (top
+    priority) and wins over it under ``min_by`` (first seen)."""
+    df = spark.createDataFrame(
+        [(1, None, "alone"), (2, None, "null"), (2, 5, "five"),
+         (3, -7, "minus7"), (3, None, "null")],
+        "k int, o int, v string",
+    )
+    top = {r["k"]: r["v"] for r in dedup_top_priority(df, ["k"], ["o"]).collect()}
+    first = {r["k"]: r["v"] for r in dedup_first_seen(df, ["k"], ["o"]).collect()}
+    assert top == {1: "alone", 2: "five", 3: "minus7"}
+    assert first == {1: "alone", 2: "null", 3: "null"}
 
 
 def test_patch_row_level_preference(spark):

@@ -90,14 +90,72 @@ def test_scan_prunes_columns(spark):
     assert read and "l_extendedprice" not in read[0] and "l_comment" not in read[0]
 
 
-def test_broker_info_broadcasts_mapping_and_prunes(spark):
-    """Broker lookup: version mapping broadcast; scan pruned to the four
-    source columns the derivation needs."""
+def test_broker_info_restricts_by_priority_map_and_prunes(spark):
+    """Broker lookup through ``versions.versioned``: the version
+    restriction is a map lookup (no join, nothing to broadcast); scan
+    pruned to the four source columns the derivation needs."""
     df = entrymod.queries()["broker_info"](spark, SF_DIR)
     plan = _plan(df)
-    assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
+    assert "Join" not in plan and "BroadcastExchange" not in plan, plan
+    assert "map(keys: [bpv1,bpv2]" in plan, plan
     scan = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert scan and "l_extendedprice" not in scan[0]
+
+
+def _assert_one_argmax(df, agg: str) -> None:
+    """The argmax dedup plans as one shuffle between a partial and a
+    final ``agg`` aggregate: no window, no join."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"(?<![A-Za-z])Exchange ", plan)) == 1, plan
+    assert "Window" not in plan and "Join" not in plan, plan
+    assert f"[partial_{agg}(" in plan and f"[{agg}(" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "name, agg",
+    [
+        ("priority_dedup", "max_by"),
+        ("versioned_dedup", "max_by"),
+        ("first_seen_dedup", "min_by"),
+    ],
+)
+def test_dedup_gate_is_one_argmax_aggregate(spark, name, agg):
+    _assert_one_argmax(entrymod.queries()[name](spark, SF_DIR), agg)
+
+
+def test_ingest_dedup_batch_is_one_argmax_aggregate(spark):
+    """Each of the ingest batch's first-seen dedups is one ``min_by``
+    aggregate over one shuffle."""
+    from fastdb_spark.streaming.ingest import dedup_batch
+
+    wrangled = {
+        "diasource": spark.createDataFrame(
+            [(1, "bpv1", 2.0, 0.5), (1, "bpv1", 1.0, 0.7)],
+            "diasourceid long, base_procver_id string, savetime double,"
+            " psfflux double",
+        ),
+        "diaforcedsource": spark.createDataFrame(
+            [(7, 3, "bpv1", 1.0, 0.1)],
+            "diaobjectid long, visit long, base_procver_id string,"
+            " savetime double, psfflux double",
+        ),
+        "diaobject": spark.createDataFrame(
+            [(7, "bpv1", None, 1.0), (7, "bpv1", 10.0, 2.0)],
+            "diaobjectid long, base_procver_id string, ra double,"
+            " savetime double",
+        ),
+        "brokerinfo": spark.createDataFrame(
+            [("fink", "t", 1, "bpv1", 1.0, "{}")],
+            "brokername string, topic string, diasourceid long,"
+            " base_procver_id string, savetime double, info string",
+        ),
+    }
+    out = dedup_batch(wrangled)
+    assert set(out) == set(wrangled)
+    for df in out.values():
+        _assert_one_argmax(df, "min_by")
 
 
 def test_bucketed_dedup_has_no_exchange(spark):

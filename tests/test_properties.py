@@ -116,31 +116,6 @@ def test_rolling_fingerprint_matches_python_fold(spark, toks):
     assert got == expected
 
 
-@given(rows=ROWS)
-@settings(**_SETTINGS)
-def test_dedup_strategies_agree(spark, rows):
-    """The three physical dedup strategies (agg / window / narrow) are one
-    logical operator: identical output rows on any input with a total
-    order."""
-    seen, uniq = set(), []
-    for k, p, i, v in rows:
-        if i not in seen:
-            seen.add(i)
-            uniq.append((k, p, i, float(v)))
-    df = spark.createDataFrame(
-        uniq, "key int, priority int, rid int, value double"
-    )
-    outs = {
-        strat: sorted(
-            tuple(r) for r in dedup_top_priority(
-                df, ["key"], ["priority", "rid"], strategy=strat
-            ).select("key", "priority", "rid", "value").collect()
-        )
-        for strat in ("agg", "window", "narrow")
-    }
-    assert outs["agg"] == outs["window"] == outs["narrow"]
-
-
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     toks=st.lists(st.integers(min_value=0, max_value=50), min_size=1, max_size=40),

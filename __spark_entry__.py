@@ -786,15 +786,12 @@ def _q_semantic_index_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     tag = os.path.basename(os.path.normpath(sf_dir)).replace(".", "_")
     path = _scratch("fastdb_incsem_gate", tag)
     shutil.rmtree(path, ignore_errors=True)  # fresh index per adjudication
-    # This gate runs the DEFAULT assignment path on purpose — since the
-    # round-10 default flip that is the Arrow GEMM (the k=25 literal-
-    # expression argmax costs ~8 s of DRIVER-side analysis per
-    # materialization and this choreography builds it five times), so
-    # the production-default path carries its own driver-adjudicated
-    # parity evidence (VERDICT r9 What's-missing #4).  Safe for an
-    # exact gate because the hash covers membership only (vec_id,
-    # cluster) — no cosine value — and GEMM==expr cluster equality is
-    # regression-tested in tests/test_incsem.py.
+    # The semantic index assigns by the Arrow GEMM, its only assignment
+    # kernel, so this gate is the driver-adjudicated parity evidence for
+    # the production path.  Safe for an exact gate because the hash
+    # covers membership only (vec_id, cluster) — no cosine value — and
+    # the oracle's expression argmax picks the same clusters as the
+    # GEMM (regression-tested in tests/test_incsem.py).
     build_semantic_index(
         corpus.filter("vec_id % 2 = 0"), path, eps=0.92,
         centroids=centroids,

@@ -1443,8 +1443,7 @@ def bench_semindex(spark) -> dict:
     try:
         t0 = time.perf_counter()
         n_built = build_semantic_index(
-            vecs(0, n), path, eps=0.99, centroids=cents,
-            strategy="gemm", assign_strategy="gemm",
+            vecs(0, n), path, eps=0.99, centroids=cents, strategy="gemm"
         )
         out["build_1m_s"] = round(time.perf_counter() - t0, 2)
         out["build_1m_admitted"] = n_built
@@ -1454,7 +1453,7 @@ def bench_semindex(spark) -> dict:
         batch = vecs(n, n + inc, twin_of=n)
         t0 = time.perf_counter()
         verdicts = None if "probe" in skip else semantic_index_probe(
-            spark, batch, path, assign_strategy="gemm"
+            spark, batch, path
         )
         if verdicts is not None:
             hist = {
@@ -1467,16 +1466,12 @@ def bench_semindex(spark) -> dict:
             out["probe_100k_verdicts"] = hist
         if "upsert" not in skip:
             t0 = time.perf_counter()
-            appended = semantic_index_upsert(
-                batch, path, assign_strategy="gemm"
-            )
+            appended = semantic_index_upsert(batch, path)
             out["upsert_100k_s"] = round(time.perf_counter() - t0, 2)
             out["upsert_100k_appended"] = appended
         if "replay" not in skip:
             t0 = time.perf_counter()
-            replayed = semantic_index_upsert(
-                batch, path, assign_strategy="gemm", dedup_ids=True
-            )
+            replayed = semantic_index_upsert(batch, path, dedup_ids=True)
             out["replay_100k_s"] = round(time.perf_counter() - t0, 2)
             out["replay_100k_appended"] = replayed
         # SCALE_SEMINDEX_RM_STEP picks the takedown spread: step 100

@@ -16,6 +16,11 @@
                          At scale the cluster id is the table's partition
                          column (same layout trick as the LSH bucket), and
                          the centroid table is broadcast.
+
+The persisted IVF layout (``build_ivf_index`` and its upsert, stream,
+takedown and compaction) has one nearest-centroid assignment, the Arrow
+batch GEMM of ``semdedup.assign_clusters``; the column-expression
+argmax ``with_ivf_cluster`` serves the per-query ``*_topk`` paths.
 """
 
 from __future__ import annotations
@@ -42,45 +47,25 @@ from fastdb_spark.functions.vectors import (
 from fastdb_spark.localrel import tiny_local_df
 from fastdb_spark.pipeline.incdedup import _open, _record_schemas
 
-#: index-root sidecar recording build-time parameters (notably the
-#: assignment strategy — ADVICE r10: maintenance must replay the BUILD's
-#: strategy, not the module default of the day)
-_IVF_META = "_ivf_meta.json"
-
-
-def _stored_assign_strategy(path: str, fallback: str = "gemm") -> str:
-    """The ``assign_strategy`` the index at ``path`` was built with.
-
-    A MISSING meta file is a pre-round-11 layout and falls back to
-    ``gemm`` (what every build since round 10 used).  A PRESENT but
-    unparseable or strategy-less meta RAISES (ADVICE r11 #2): builds
-    have written the file atomically since round 11, so a torn/corrupt
-    meta is a damaged index, and silently assuming ``gemm`` for an
-    index genuinely built with ``expr`` would reintroduce the exact
-    replay-idempotency mismatch this sidecar exists to prevent — a
-    rounded-cosine tie could re-cluster a replayed row."""
+def _refuse_expr_built(path: str) -> None:
+    """Raise ``ValueError`` if a leftover build sidecar of the index at
+    ``path`` records the retired ``assign_strategy="expr"``: maintenance
+    assigns by GEMM only, and a rounded-cosine tie could put a replayed
+    row in another cluster than the one it is stored in, where the
+    partition-pruned replay guards miss it.  Search does not call this."""
     import os
 
-    meta_path = os.path.join(path, _IVF_META)
-    try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-    except FileNotFoundError:
-        return fallback
-    except (json.JSONDecodeError, OSError) as e:
-        raise ValueError(
-            f"corrupt index meta {meta_path!r}: {e} — refusing to guess "
-            "an assign_strategy (a wrong guess can re-cluster replayed "
-            "rows); restore or rebuild the index"
-        ) from e
-    try:
-        return meta["assign_strategy"]
-    except (KeyError, TypeError):
-        raise ValueError(
-            f"index meta {meta_path!r} has no assign_strategy — refusing "
-            "to guess (a wrong guess can re-cluster replayed rows); "
-            "restore or rebuild the index"
-        ) from None
+    for name in ("_ivf_meta.json", "_sem_meta.json"):
+        try:
+            with open(os.path.join(path, name)) as f:
+                built = json.load(f).get("assign_strategy")
+        except FileNotFoundError:
+            continue
+        if built == "expr":
+            raise ValueError(
+                f"index at {path!r} was built with assign_strategy='expr'"
+                "; rebuild it (maintenance assigns by GEMM only)"
+            )
 
 
 def _load_centroids(spark, path: str) -> list[list[float]]:
@@ -483,7 +468,6 @@ def build_ivf_index(
     pq_k: int = 16,
     pq_residual: bool = True,
     centroids: list[list[float]] | None = None,
-    assign_strategy: str = "gemm",
     pre_assigned: bool = False,
 ) -> None:
     """Materialize the IVF index as an engine-owned layout: a tiny
@@ -491,15 +475,15 @@ def build_ivf_index(
     its nearest-centroid id (``vectors/cluster=N/``).
 
     ``pre_assigned=True`` (r12): the input ALREADY carries the
-    ``cluster`` column produced by the same quantizer/strategy — skip
-    the assignment pass entirely.  The semantic-index build assigns
-    once for its admission pass and then built the layout from the
-    post-admission survivors; re-deriving their clusters here was a
-    full redundant pass over the corpus (identical values by
-    construction: frozen centroids, same ``assign_strategy``).
-    Requires ``centroids`` (the quantizer is not re-derivable from a
-    tagged frame) and is the caller's assertion that the tags came
-    from exactly that quantizer + strategy.
+    ``cluster`` column produced by the same quantizer's GEMM
+    assignment — skip the assignment pass entirely.  The semantic-index
+    build assigns once for its admission pass and then built the layout
+    from the post-admission survivors; re-deriving their clusters here
+    was a full redundant pass over the corpus (identical values by
+    construction: frozen centroids, one assignment kernel).  Requires
+    ``centroids`` (the quantizer is not re-derivable from a tagged
+    frame) and is the caller's assertion that the tags came from
+    exactly that quantizer.
 
     ``centroids`` (optional) skips the ``ivf_centroids`` fit and freezes
     the given quantizer directly — callers that already own a trained or
@@ -507,17 +491,14 @@ def build_ivf_index(
     its admission pass so admission and layout share one quantizer)
     persist it unchanged.
 
-    ``assign_strategy='gemm'`` (the default since round 10 — the expr
-    argmax embeds k array literals in the plan, measured 136 s vs ~3 s
-    per 1M rows at k=256 plus ~8 s of driver-side plan analysis per
-    materialization even at k=25; at SemDeDup-paper scale, 110k
-    clusters, the expr plan is unbuildable) assigns via the vectorized
-    Arrow batch GEMM (``semdedup.assign_clusters``); every input column
-    passes through, so payload columns survive either strategy.
-    ``assign_strategy='expr'`` is the column-expression twin, bit-exact
-    with the duckdb oracle fold — adjudication gates that hash cosine
-    values pin it by name (equality on membership is regression-tested
-    gemm==expr).
+    Build and upsert assign every vector by the vectorized Arrow batch
+    GEMM (``semdedup.assign_clusters``), the one nearest-centroid kernel
+    of the index families: the column-expression argmax embeds k array
+    literals in the plan (measured 136 s vs ~3 s per 1M rows at k=256,
+    plus ~8 s of driver-side plan analysis per materialization even at
+    k=25).  Every input column passes through, so payload columns
+    survive.  Cluster membership equals the expression argmax's
+    (regression-tested), which the index gates' oracles replay.
 
     Train-once/query-many: the coarse quantizer is fit ONCE here (one
     k-means job, or the deterministic seed pick) instead of per query, and
@@ -547,28 +528,6 @@ def build_ivf_index(
     cent_df.coalesce(1).write.mode("overwrite").parquet(
         os.path.join(path, "centroids")
     )
-    # persist the assignment strategy the layout was BUILT with (ADVICE
-    # r10): gemm and expr agree on membership everywhere tested, but a
-    # rounded-cosine tie can in principle resolve differently between
-    # the numpy GEMM and the Catalyst fold — a post-build upsert/probe
-    # that silently used the OTHER strategy could then assign a replayed
-    # row to a different cluster than it was stored in, and the
-    # partition-pruned dedup_ids guard would miss it.  Maintenance entry
-    # points default to this stored value (assign_strategy=None).
-    os.makedirs(path, exist_ok=True)
-    meta_path = os.path.join(path, _IVF_META)
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {
-                "assign_strategy": assign_strategy,
-                "n_clusters": len(cents),
-                "pq_m": pq_m,
-                "pq_residual": bool(pq_residual) if pq_m else None,
-            },
-            f,
-        )
-    os.replace(tmp, meta_path)  # atomic: a killed build leaves no torn meta
     if pre_assigned:
         if centroids is None or "cluster" not in embeddings.columns:
             raise ValueError(
@@ -579,7 +538,7 @@ def build_ivf_index(
             vec_col, as_double_array(F.col(vec_col))
         )
     else:
-        tagged = _assign(embeddings, cents, id_col, vec_col, assign_strategy)
+        tagged = _assign(embeddings, cents, id_col, vec_col)
     tables = {"centroids": cent_df.schema}
     if pq_m is not None:
         if pq_residual:
@@ -641,14 +600,9 @@ def _assign(
     cents: list[list[float]],
     id_col: str,
     vec_col: str,
-    assign_strategy: str,
 ) -> DataFrame:
-    """Nearest-centroid tagging for the index build/upsert paths:
-    ``'expr'`` is the column-expression argmax (``with_ivf_cluster``),
-    ``'gemm'`` the Arrow batch GEMM; BOTH keep every input column
-    (the gemm path passes payload columns through since round 10)."""
-    if assign_strategy == "expr":
-        return with_ivf_cluster(df, cents, vec_col)
+    """Nearest-centroid tagging for the index build/upsert paths: the
+    Arrow batch GEMM, keeping every input column."""
     from fastdb_spark.pipeline.semdedup import assign_clusters
 
     return assign_clusters(df, cents, id_col, vec_col, "gemm").drop("cos_c")
@@ -676,7 +630,6 @@ def ivf_index_upsert(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dedup_ids: bool = False,
-    assign_strategy: str | None = None,
 ) -> int:
     """Append a vector batch to an existing ``build_ivf_index`` layout
     WITHOUT retraining or a rebuild — the incremental-maintenance half of
@@ -705,7 +658,7 @@ def ivf_index_upsert(
 
     with table_write_lock(path):
         return _ivf_upsert_unlocked(
-            new_vectors, path, id_col, vec_col, dedup_ids, assign_strategy
+            new_vectors, path, id_col, vec_col, dedup_ids
         )
 
 
@@ -715,27 +668,21 @@ def _ivf_upsert_unlocked(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dedup_ids: bool = False,
-    assign_strategy: str | None = None,
 ) -> int:
     """:func:`ivf_index_upsert` body for callers that ALREADY hold the
     index write lock (``incsem.semantic_index_upsert`` classifies and
-    appends under one lock — the file lock is not reentrant).
-
-    ``assign_strategy=None`` (the default) replays the strategy the
-    index was BUILT with (``_ivf_meta.json``) — the replay-idempotency
-    guard depends on a replayed row re-deriving its stored cluster, so
-    the build's arithmetic must win over the module default (ADVICE
-    r10)."""
+    appends under one lock — the file lock is not reentrant).  An
+    index built with the retired expression assignment is refused
+    (:func:`_refuse_expr_built`)."""
     import os
 
-    if assign_strategy is None:
-        assign_strategy = _stored_assign_strategy(path)
+    _refuse_expr_built(path)
     spark = new_vectors.sparkSession
     cents = _load_centroids(spark, path)
     base = new_vectors.select(
         F.col(id_col), as_double_array(F.col(vec_col)).alias(vec_col)
     )
-    tagged = _assign(base, cents, id_col, vec_col, assign_strategy)
+    tagged = _assign(base, cents, id_col, vec_col)
     if dedup_ids:
         clusters = [
             r["cluster"]

@@ -88,19 +88,30 @@ def _params_path(path: str) -> str:
     return os.path.join(path, _META)
 
 
+def _write_sidecar(dst: str, obj) -> None:
+    """Write ``obj`` as the JSON sidecar ``dst`` atomically: dump to
+    ``dst.tmp``, then ``os.replace`` it in.  A build or rebuild killed
+    mid-dump leaves the previous file (or none), never a torn one that
+    every later call fails to parse.  The one writer of every index
+    sidecar (``_meta.json``, ``_sem_meta.json``, ``_schemas.json``)."""
+    os.makedirs(os.path.dirname(dst), exist_ok=True)
+    with open(dst + ".tmp", "w") as f:
+        json.dump(obj, f)
+    os.replace(dst + ".tmp", dst)
+
+
 def _record_schemas(path: str, tables: dict) -> None:
     """Record ``{table: StructType}`` in the ``_schemas.json`` sidecar at
-    the index root, atomically (tmp + ``os.replace``, like
-    ``_ivf_meta.json``).  A schema carries the table's partition column:
-    a declared-schema read puts partition columns last whatever their
-    position, and takes their type from the declaration.  Every build
-    records all its tables once; the id column's name and type are the
-    caller's, so no schema here is a constant."""
-    os.makedirs(path, exist_ok=True)
-    dst = os.path.join(path, _SCHEMAS)
-    with open(dst + ".tmp", "w") as f:
-        json.dump({t: s.jsonValue() for t, s in tables.items()}, f)
-    os.replace(dst + ".tmp", dst)
+    the index root (:func:`_write_sidecar`).  A schema carries the
+    table's partition column: a declared-schema read puts partition
+    columns last whatever their position, and takes their type from the
+    declaration.  Every build records all its tables once; the id
+    column's name and type are the caller's, so no schema here is a
+    constant."""
+    _write_sidecar(
+        os.path.join(path, _SCHEMAS),
+        {t: s.jsonValue() for t, s in tables.items()},
+    )
 
 
 def _open(
@@ -291,26 +302,25 @@ def build_dedup_index(
         )[1]
     finally:
         release_staged()
-    with open(_params_path(path), "w") as f:
-        json.dump(
-            {
-                "shingle_k": shingle_k,
-                "n_hashes": n_hashes,
-                "bands": bands,
-                "threshold": threshold,
-                "hash_impl": hash_impl,
-                "id_buckets": id_buckets,
-                # scheme marker: the md5x rewrite changed band-key and
-                # signature formats IN PLACE, so an index persisted by
-                # pre-md5x code would band-join zero rows against new
-                # sketches (silently disabling near-dup detection).
-                # Upserts refuse indexes whose marker is not the one
-                # their hash_impl produces today (rebuild_dedup_index
-                # migrates in one call).
-                "sketch_scheme": sketch_impl(hash_impl).scheme,
-            },
-            f,
-        )
+    _write_sidecar(
+        _params_path(path),
+        {
+            "shingle_k": shingle_k,
+            "n_hashes": n_hashes,
+            "bands": bands,
+            "threshold": threshold,
+            "hash_impl": hash_impl,
+            "id_buckets": id_buckets,
+            # scheme marker: the md5x rewrite changed band-key and
+            # signature formats IN PLACE, so an index persisted by
+            # pre-md5x code would band-join zero rows against new
+            # sketches (silently disabling near-dup detection).
+            # Upserts refuse indexes whose marker is not the one
+            # their hash_impl produces today (rebuild_dedup_index
+            # migrates in one call).
+            "sketch_scheme": sketch_impl(hash_impl).scheme,
+        },
+    )
     return n
 
 
@@ -551,8 +561,7 @@ def rebuild_dedup_index(
                 "sketch_scheme": impl.scheme,
             }
         )
-        with open(_params_path(path), "w") as f:
-            json.dump(p, f)
+        _write_sidecar(_params_path(path), p)
     return n
 
 

@@ -47,7 +47,6 @@ the hive partitions holding removed ids.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -65,14 +64,15 @@ from fastdb_spark.pipeline.incdedup import (
     DEFAULT_ID_CEILING,
     _align_id_buckets,
     _bucket_layout,
+    _load_params,
     _open,
+    _params_path,
     _record_schemas,
     _remove_ids,
     _stream_index,
     _write_id_bucketed,
+    _write_sidecar,
 )
-
-_META = "_meta.json"
 
 #: audit of the most recent :func:`media_index_upsert`'s candidate-cap
 #: truncation (the media twin of ``incdedup.LAST_UPSERT_AUDIT``): new
@@ -83,15 +83,6 @@ _META = "_meta.json"
 #: every upsert, so an uncapped (or hamming-0 — structurally capless,
 #: see ``imagededup.hash_matches``) run reports zeros.
 LAST_UPSERT_AUDIT: dict = {"truncated_items": 0, "sample": []}
-
-
-def _params_path(path: str) -> str:
-    return os.path.join(path, _META)
-
-
-def _load_params(path: str) -> dict:
-    with open(_params_path(path)) as f:
-        return json.load(f)
 
 
 def _hash_frame(
@@ -235,19 +226,18 @@ def build_media_index(
         _record_schemas(path, {"hashes": rows.schema})
     finally:
         release_staged()
-    with open(_params_path(path), "w") as f:
-        json.dump(
-            {
-                "method": method,
-                "max_hamming": max_hamming,
-                "bands": bands,
-                "id_buckets": id_buckets,
-                "id_col": id_col,
-                "every_ms": every_ms,
-                "audio_kw": audio_kw or {},
-            },
-            f,
-        )
+    _write_sidecar(
+        _params_path(path),
+        {
+            "method": method,
+            "max_hamming": max_hamming,
+            "bands": bands,
+            "id_buckets": id_buckets,
+            "id_col": id_col,
+            "every_ms": every_ms,
+            "audio_kw": audio_kw or {},
+        },
+    )
     return n
 
 

@@ -37,9 +37,11 @@ instead of re-appending (ADVICE r9).  What the guard regime does NOT
 catch is a content duplicate under a NEW id inside an oversized
 cluster — that is the documented under-dedup, not an idempotency hole.
 
-Scale shape: assignment is a map (frozen centroid literals or the
-Arrow GEMM path); the vs-index probe reads ONLY the batch's touched
-``cluster=N/`` partitions (plan-assertable PartitionFilters — the
+Scale shape: assignment is a map (the Arrow GEMM under frozen
+centroids, the one assignment kernel of the IVF layout — an index built
+with the retired expression assignment is refused maintenance, see
+``ann._refuse_expr_built``); the vs-index probe reads ONLY the batch's
+touched ``cluster=N/`` partitions (plan-assertable PartitionFilters — the
 ``nprobe`` trick applied to dedup); scoring is one Arrow GEMM cogroup
 task per touched cluster, never all-pairs; appends touch only the
 batch's own cluster directories; takedown rewrites only clusters
@@ -61,8 +63,8 @@ from pyspark.sql import functions as F
 
 from fastdb_spark.functions.vectors import as_double_array
 from fastdb_spark.locks import table_write_lock
-from fastdb_spark.pipeline.ann import _load_centroids
-from fastdb_spark.pipeline.incdedup import _open
+from fastdb_spark.pipeline.ann import _load_centroids, _refuse_expr_built
+from fastdb_spark.pipeline.incdedup import _open, _write_sidecar
 from fastdb_spark.pipeline.semdedup import (
     DEFAULT_MAX_CLUSTER,
     assign_clusters,
@@ -170,7 +172,6 @@ def _classify(
     id_col: str,
     vec_col: str,
     strategy: str,
-    assign_strategy: str | None,
     max_cluster_size: int | None,
 ) -> tuple[DataFrame, DataFrame]:
     """(verdicts, fresh_keyed) for ``batch`` vs the index at ``path``.
@@ -178,17 +179,13 @@ def _classify(
     verdicts: one ``(id, verdict)`` row per batch item, verdict in
     ``dup`` / ``in_batch_dup`` / ``fresh``.  fresh_keyed carries the
     fresh items as ``(id, v, cluster, cos_c)``.  Caller holds the lock.
+    ``strategy`` picks the pair kernel; assignment is always the GEMM.
     """
     from fastdb_spark.cachereg import stage_adaptive
     from fastdb_spark.pipeline.semdedup import _guarded_keyed
 
-    p = _sem_params(path)
-    eps = p["eps"]
-    if assign_strategy is None:
-        # replay the strategy the index was BUILT with (ADVICE r10);
-        # pre-round-11 meta files have no entry -> gemm (what every
-        # build since round 10 used)
-        assign_strategy = p.get("assign_strategy", "gemm")
+    _refuse_expr_built(path)
+    eps = _sem_params(path)["eps"]
     cents = _load_centroids(spark, path)
     # `guarded` comes from the RETURN VALUE, never from the process-
     # global LAST_SEMDEDUP_AUDIT: a concurrent _guarded_keyed call (a
@@ -196,7 +193,7 @@ def _classify(
     # between our computation and our read, and a wrong False here
     # silently skips the replay id-guard (round-10 review finding)
     full, pair_side, guarded = _guarded_keyed(
-        batch, cents, id_col, vec_col, max_cluster_size, assign_strategy
+        batch, cents, id_col, vec_col, max_cluster_size, "gemm"
     )
     if max_cluster_size is None:
         # guard off -> _guarded_keyed did not stage; still share one
@@ -287,7 +284,6 @@ def build_semantic_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     strategy: str = "gemm",
-    assign_strategy: str = "gemm",
     centroid_strategy: str = "seed",
     seed: int = 42,
     centroids: list[list[float]] | None = None,
@@ -298,7 +294,8 @@ def build_semantic_index(
     run the one-shot in-batch admission at ``eps``, and persist the
     SURVIVORS as a standard ``ann.build_ivf_index`` layout (so every IVF
     search/maintenance entry point works on it unchanged) plus
-    ``_sem_meta.json`` recording the admission parameters.
+    ``_sem_meta.json`` recording the admission parameters.  Admission
+    and layout share one GEMM assignment under the frozen quantizer.
 
     Returns the number of vectors admitted.  The quantizer is trained on
     the FULL input (pre-admission) so the oracle and a rebuild replay it
@@ -313,11 +310,11 @@ def build_semantic_index(
         strategy=centroid_strategy, seed=seed,
     )
     full, pair_side, _guarded = _guarded_keyed(
-        df, cents, id_col, vec_col, max_cluster_size, assign_strategy
+        df, cents, id_col, vec_col, max_cluster_size, "gemm"
     )
     drops = _inbatch_drops(pair_side, id_col, eps, strategy)
     # survivors KEEP the cluster tag the admission pass already computed
-    # (frozen centroids, same assign_strategy): pre_assigned=True lets
+    # (frozen centroids, one assignment kernel): pre_assigned=True lets
     # build_ivf_index skip its own assignment — the r11 build re-ran a
     # full redundant assignment pass over the survivors (r12, guide
     # §1.2 "don't compute things you throw away")
@@ -326,22 +323,11 @@ def build_semantic_index(
     )
     build_ivf_index(
         survivors, path, n_clusters=len(cents), id_col=id_col,
-        vec_col=vec_col, centroids=cents, pq_m=pq_m,
-        assign_strategy=assign_strategy, pre_assigned=True,
+        vec_col=vec_col, centroids=cents, pq_m=pq_m, pre_assigned=True,
     )
-    with open(os.path.join(path, _SEM_META), "w") as f:
-        # assign_strategy persisted so maintenance replays the BUILD's
-        # arithmetic (ADVICE r10): a rounded-cosine tie could assign a
-        # replayed row differently under the other strategy, and the
-        # partition-pruned replay guards would then miss it
-        json.dump(
-            {
-                "eps": eps,
-                "n_clusters": len(cents),
-                "assign_strategy": assign_strategy,
-            },
-            f,
-        )
+    _write_sidecar(
+        os.path.join(path, _SEM_META), {"eps": eps, "n_clusters": len(cents)}
+    )
     # the build just wrote exactly the survivor set: count the persisted
     # layout (parquet footer metadata — no data read, no recompute of
     # the admission pipeline) instead of re-running the survivor plan
@@ -359,7 +345,6 @@ def semantic_index_probe(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     strategy: str = "gemm",
-    assign_strategy: str | None = None,
     max_cluster_size: int | None = DEFAULT_MAX_CLUSTER,
 ) -> DataFrame:
     """Classify ``batch`` against the index WITHOUT mutating it — the
@@ -373,7 +358,7 @@ def semantic_index_probe(
     with table_write_lock(path):
         verdicts, _ = _classify(
             spark, batch, path, id_col, vec_col,
-            strategy, assign_strategy, max_cluster_size,
+            strategy, max_cluster_size,
         )
         out = verdicts.localCheckpoint(eager=True)
         release_staged()
@@ -386,7 +371,6 @@ def semantic_index_upsert(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     strategy: str = "gemm",
-    assign_strategy: str | None = None,
     max_cluster_size: int | None = DEFAULT_MAX_CLUSTER,
     dedup_ids: bool = False,
 ) -> int:
@@ -406,7 +390,7 @@ def semantic_index_upsert(
     with table_write_lock(path):
         _, fresh_keyed = _classify(
             spark, batch, path, id_col, vec_col,
-            strategy, assign_strategy, max_cluster_size,
+            strategy, max_cluster_size,
         )
         fresh = fresh_keyed.select(
             F.col(id_col), F.col("v").alias(vec_col)
@@ -414,7 +398,7 @@ def semantic_index_upsert(
         release_staged()
         return _ivf_upsert_unlocked(
             fresh, path, id_col=id_col, vec_col=vec_col,
-            dedup_ids=dedup_ids, assign_strategy=assign_strategy,
+            dedup_ids=dedup_ids,
         )
 
 
@@ -445,7 +429,6 @@ def stream_semantic_index(
     vec_col: str = "embedding",
     vec_type: str = "array<float>",
     strategy: str = "gemm",
-    assign_strategy: str | None = None,
     available_now: bool = True,
     max_files_per_trigger: int | None = None,
     compact_every: int | None = None,
@@ -477,8 +460,7 @@ def stream_semantic_index(
         checkpoint,
         lambda batch_df: semantic_index_upsert(
             batch_df, index_path, id_col=id_col, vec_col=vec_col,
-            strategy=strategy, assign_strategy=assign_strategy,
-            dedup_ids=True,
+            strategy=strategy, dedup_ids=True,
         ),
         lambda: compact_semantic_index(
             spark, index_path, min_files=compact_min_files

@@ -125,7 +125,7 @@ def test_probe_reads_are_partition_pruned(spark, built):
     from fastdb_spark.pipeline.incsem import _classify
 
     verdicts, _ = _classify(
-        spark, one, path, "vec_id", "embedding", "gemm", "expr", 65536
+        spark, one, path, "vec_id", "embedding", "gemm", 65536
     )
     # the plan of the classify output embeds the pruned vectors/ scan
     buf = io.StringIO()
@@ -374,3 +374,69 @@ def test_semantic_index_with_pq_codes(spark, tmp_path):
     q = corpus.filter("vec_id = 0").select("embedding").head()[0]
     top = ivfpq_search_index(spark, path, list(q), k=5, nprobe=25)
     assert top.count() == 5
+
+
+# ---------------------------------------------------------------------------
+# guarded-regime replay idempotency (ADVICE r9): the id guard always
+# runs for guard-skipped rows
+
+
+def test_guarded_cluster_replay_is_idempotent(spark, tmp_path):
+    """A batch whose cluster exceeds max_cluster_size bypasses the
+    CONTENT probe (documented under-dedup) — but a straight REPLAY of
+    that batch must classify its rows as dup and append nothing, even
+    with dedup_ids=False (the default)."""
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    seed = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "semidx")
+    build_semantic_index(seed, path, eps=0.99, centroids=cents)
+    # 6 distinct near-axis vectors -> all land in cluster 0, which the
+    # tiny guard (max_cluster_size=4) marks oversized -> content probe
+    # skipped, all admitted as singletons
+    batch = spark.createDataFrame(
+        [(10 + i, [1.0, 0.001 * i, 0.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    n1 = semantic_index_upsert(batch, path, max_cluster_size=4)
+    assert n1 == 6  # guarded regime: admitted without content dedup
+    # replay of the SAME batch: the id guard must absorb every row
+    v = semantic_index_probe(
+        spark, batch, path, max_cluster_size=4
+    ).toPandas()
+    assert set(v[v["verdict"] == "dup"]["vec_id"]) == set(
+        10 + i for i in range(6)
+    )
+    n2 = semantic_index_upsert(batch, path, max_cluster_size=4)
+    assert n2 == 0
+    stored = spark.read.parquet(os.path.join(path, "vectors"))
+    assert stored.filter("vec_id >= 10").count() == 6
+
+
+def test_guarded_cluster_new_ids_still_underdedup(spark, tmp_path):
+    """The documented carve-out: content duplicates under NEW ids in an
+    oversized cluster are admitted (under-dedup, audited) — the id
+    guard is an idempotency fix, not a content probe."""
+    from fastdb_spark.pipeline.semdedup import LAST_SEMDEDUP_AUDIT
+
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    seed = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "semidx2")
+    build_semantic_index(seed, path, eps=0.99, centroids=cents)
+    batch = spark.createDataFrame(
+        [(10 + i, [1.0, 0.001 * i, 0.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    semantic_index_upsert(batch, path, max_cluster_size=4)
+    renamed = spark.createDataFrame(
+        [(20 + i, [1.0, 0.001 * i, 0.0]) for i in range(6)],
+        "vec_id long, embedding array<double>",
+    )
+    n = semantic_index_upsert(renamed, path, max_cluster_size=4)
+    assert n == 6  # content twins admitted: the guarded-regime carve-out
+    assert LAST_SEMDEDUP_AUDIT["skipped_clusters"] >= 1

@@ -2,8 +2,8 @@
 engine (``incdedup._rewrite_parts`` behind every takedown and compaction
 of the text, media and IVF indexes) when a rewrite fails part-way, the
 number of frames a dedup-index probe or upsert stages, the recorded
-table schemas every index open reads with (``incdedup._open``), and
-indexes whose tables hold no rows.
+table schemas every index open reads with (``incdedup._open``), the
+atomic sidecar writes, and indexes whose tables hold no rows.
 
 A takedown rewrites each table into a tmp dir and swaps only after the
 write succeeds, so a table whose rewrite raises keeps its old
@@ -405,6 +405,34 @@ def test_index_modules_open_tables_only_through_the_shared_helper():
             and not any(a <= n.lineno <= b for a, b in allowed)
         ]
     assert not bad, bad
+
+
+# ---------------------------------------------------------------------------
+# index sidecars are written atomically (incdedup._write_sidecar)
+
+
+def test_rebuild_failed_mid_meta_dump_keeps_previous_meta(
+    spark, tmp_path, monkeypatch
+):
+    """A ``rebuild_dedup_index`` whose ``_meta.json`` dump fails part-way
+    leaves the previous ``_meta.json`` whole, so every later call still
+    parses it (a plain ``open(..., "w")`` left it torn)."""
+    path = str(tmp_path / "idx")
+    _text_index(spark, path)
+    before = incdedup._load_params(path)
+    real = json.dump
+
+    def torn(obj, f, **kw):
+        if "sketch_scheme" not in obj:
+            return real(obj, f, **kw)
+        f.write(json.dumps(obj)[:20])
+        raise OSError("No space left on device")
+
+    monkeypatch.setattr(json, "dump", torn)
+    with pytest.raises(OSError, match="No space left"):
+        incdedup.rebuild_dedup_index(spark, path)
+    monkeypatch.undo()
+    assert incdedup._load_params(path) == before
 
 
 # ---------------------------------------------------------------------------

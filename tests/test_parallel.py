@@ -14,7 +14,9 @@ from .conftest import count_jobs
 def test_pool_jobs_keep_caller_job_group(spark):
     def submit():
         with warnings.catch_warnings():
-            warnings.simplefilter("error")  # no "tags will not be inherited"
+            # only the inheritance warning is an error: a broad filter
+            # also raises py4j's unrelated unclosed-socket ResourceWarning
+            warnings.filterwarnings("error", message=".*will not be inherited")
             run_independent_jobs(lambda i: spark.range(i + 1).collect(), range(3))
 
     assert count_jobs(spark, "parallel-pool-group", submit) >= 3

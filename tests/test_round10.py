@@ -1,8 +1,7 @@
 """Round-10 structural tests: the rotation invariant executed as
-pinned (VERDICT r9 #2), and the assign_strategy="gemm" default flip
-(VERDICT r9 #1 / What's-wrong #1) with its payload-passthrough
-prerequisite and the ADVICE-r9 fixes (greedy-MIS fixpoint discipline,
-guarded-regime id guard, oracle cache keying)."""
+pinned (VERDICT r9 #2) and the ADVICE-r9 fixes (greedy-MIS fixpoint
+discipline, oracle cache keying).  The vector-index tests of this round
+live in tests/test_ivf_index.py and tests/test_incsem.py."""
 
 import json
 import os
@@ -50,120 +49,6 @@ def test_rotation_invariant_r10():
     assert uncovered == LAGGARDS_R11
     # rule (b) at r10: the 15 r10-named laggards led that window
     assert set(artifact_r10[:15]) == LAGGARDS_R10
-
-
-# ---------------------------------------------------------------------------
-# assign_strategy default flip (VERDICT r9 #1)
-
-
-def test_gemm_is_the_default_everywhere():
-    """Every production BUILD entry point that assigns vectors to
-    centroids defaults to the Arrow GEMM path — the expr twin (k array
-    literals in the plan; 136 s vs 3 s at 1M rows / k=256) is opt-in
-    for oracle adjudication only.  MAINTENANCE entry points (upsert /
-    probe / stream against an existing index) default to None =
-    "replay the strategy the index was built with" (ADVICE r10: a
-    rounded-cosine tie can in principle resolve differently between
-    the numpy GEMM and the Catalyst fold, and the partition-pruned
-    replay guards need a replayed row to re-derive its STORED
-    cluster); the stored value is gemm for every index built since
-    round 10, so gemm remains the effective default everywhere."""
-    import inspect
-
-    from fastdb_spark.pipeline import ann, incsem, semdedup
-
-    for fn in (
-        ann.build_ivf_index,
-        incsem.build_semantic_index,
-        semdedup.semantic_pairs, semdedup.semantic_dedup,
-        semdedup.assign_clusters,
-    ):
-        sig = inspect.signature(fn)
-        p = sig.parameters.get("assign_strategy") or sig.parameters.get(
-            "strategy"
-        )
-        assert p is not None, fn.__name__
-        assert p.default == "gemm", (fn.__name__, p.default)
-    for fn in (
-        ann.ivf_index_upsert, ann._ivf_upsert_unlocked,
-        incsem.semantic_index_probe, incsem.semantic_index_upsert,
-        incsem.stream_semantic_index,
-    ):
-        sig = inspect.signature(fn)
-        p = sig.parameters["assign_strategy"]
-        assert p.default is None, (fn.__name__, p.default)
-
-
-def test_gemm_assign_passes_payload_columns_through(spark):
-    """The prerequisite for the default flip: the gemm assignment keeps
-    every input column (round 9 kept only (id, vec), which silently
-    dropped payload and is why it could not be the default)."""
-    from fastdb_spark.pipeline.semdedup import assign_clusters
-
-    df = spark.createDataFrame(
-        [(1, [1.0, 0.0], "a", 10), (2, [0.0, 1.0], "b", 20)],
-        "vec_id long, embedding array<double>, tag string, n long",
-    )
-    cents = [[1.0, 0.0], [0.0, 1.0]]
-    out = assign_clusters(df, cents, strategy="gemm")
-    assert set(out.columns) == {
-        "vec_id", "embedding", "tag", "n", "cluster", "cos_c"
-    }
-    rows = {r["vec_id"]: r for r in out.collect()}
-    assert rows[1]["cluster"] == 0 and rows[2]["cluster"] == 1
-    assert rows[1]["tag"] == "a" and rows[2]["n"] == 20
-    # and equality with the expr twin on cluster choice
-    exp = {
-        r["vec_id"]: r["cluster"]
-        for r in assign_clusters(df, cents, strategy="expr").collect()
-    }
-    assert {k: v["cluster"] for k, v in rows.items()} == exp
-
-
-def test_build_ivf_index_gemm_default_keeps_payload(spark, tmp_path):
-    """An index built through the DEFAULT path keeps payload columns in
-    the stored layout."""
-    from fastdb_spark.pipeline.ann import build_ivf_index
-
-    df = spark.createDataFrame(
-        [(i, [float(i % 2), float(1 - i % 2)], f"doc{i}") for i in range(8)],
-        "vec_id long, embedding array<double>, src string",
-    )
-    path = str(tmp_path / "ivf_payload")
-    build_ivf_index(df, path, n_clusters=2, strategy="seed")
-    stored = spark.read.parquet(os.path.join(path, "vectors"))
-    assert "src" in stored.columns
-    assert stored.count() == 8
-
-
-def test_ivf_writes_are_cluster_aligned(spark, tmp_path):
-    """Build and upsert both repartition on the cluster key before the
-    partitionBy write: ONE file per cluster per write, not tasks x
-    clusters (80k sliver files per 100k-row upsert at k=2500 without
-    it)."""
-    import glob
-
-    from fastdb_spark.pipeline.ann import build_ivf_index, ivf_index_upsert
-
-    df = spark.range(0, 2000).selectExpr(
-        "id as vec_id",
-        "array(cast(id % 4 as double), cast(1 - id % 4 as double)) "
-        "as embedding",
-    ).repartition(8)  # many input tasks on purpose
-    path = str(tmp_path / "aligned")
-    build_ivf_index(df, path, n_clusters=4, strategy="seed")
-    for cdir in glob.glob(os.path.join(path, "vectors", "cluster=*")):
-        files = glob.glob(os.path.join(cdir, "part-*"))
-        assert len(files) == 1, (cdir, files)
-    batch = spark.range(10_000, 12_000).selectExpr(
-        "id as vec_id",
-        "array(cast(id % 4 as double), cast(1 - id % 4 as double)) "
-        "as embedding",
-    ).repartition(8)
-    ivf_index_upsert(batch, path)
-    for cdir in glob.glob(os.path.join(path, "vectors", "cluster=*")):
-        files = glob.glob(os.path.join(cdir, "part-*"))
-        assert len(files) <= 2, (cdir, files)
 
 
 # ---------------------------------------------------------------------------
@@ -220,82 +105,6 @@ def test_greedy_mis_ceiling_exact_boundary_not_premature(spark):
     )
     drops = greedy_mis_drops(clique, "doc_id", max_rounds=1)
     assert sorted(r["doc_id"] for r in drops.collect()) == [1, 2, 3]
-
-
-# ---------------------------------------------------------------------------
-# guarded-regime replay idempotency (ADVICE r9): the id guard always
-# runs for guard-skipped rows
-
-
-def test_guarded_cluster_replay_is_idempotent(spark, tmp_path):
-    """A batch whose cluster exceeds max_cluster_size bypasses the
-    CONTENT probe (documented under-dedup) — but a straight REPLAY of
-    that batch must classify its rows as dup and append nothing, even
-    with dedup_ids=False (the default)."""
-    from fastdb_spark.pipeline.incsem import (
-        build_semantic_index,
-        semantic_index_probe,
-        semantic_index_upsert,
-    )
-
-    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
-    seed = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "semidx")
-    build_semantic_index(seed, path, eps=0.99, centroids=cents)
-    # 6 distinct near-axis vectors -> all land in cluster 0, which the
-    # tiny guard (max_cluster_size=4) marks oversized -> content probe
-    # skipped, all admitted as singletons
-    batch = spark.createDataFrame(
-        [(10 + i, [1.0, 0.001 * i, 0.0]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    n1 = semantic_index_upsert(batch, path, max_cluster_size=4)
-    assert n1 == 6  # guarded regime: admitted without content dedup
-    # replay of the SAME batch: the id guard must absorb every row
-    v = semantic_index_probe(
-        spark, batch, path, max_cluster_size=4
-    ).toPandas()
-    assert set(v[v["verdict"] == "dup"]["vec_id"]) == set(
-        10 + i for i in range(6)
-    )
-    n2 = semantic_index_upsert(batch, path, max_cluster_size=4)
-    assert n2 == 0
-    stored = spark.read.parquet(os.path.join(path, "vectors"))
-    assert stored.filter("vec_id >= 10").count() == 6
-
-
-def test_guarded_cluster_new_ids_still_underdedup(spark, tmp_path):
-    """The documented carve-out: content duplicates under NEW ids in an
-    oversized cluster are admitted (under-dedup, audited) — the id
-    guard is an idempotency fix, not a content probe."""
-    from fastdb_spark.pipeline.incsem import (
-        build_semantic_index,
-        semantic_index_upsert,
-    )
-    from fastdb_spark.pipeline.semdedup import LAST_SEMDEDUP_AUDIT
-
-    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
-    seed = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "semidx2")
-    build_semantic_index(seed, path, eps=0.99, centroids=cents)
-    batch = spark.createDataFrame(
-        [(10 + i, [1.0, 0.001 * i, 0.0]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    semantic_index_upsert(batch, path, max_cluster_size=4)
-    renamed = spark.createDataFrame(
-        [(20 + i, [1.0, 0.001 * i, 0.0]) for i in range(6)],
-        "vec_id long, embedding array<double>",
-    )
-    n = semantic_index_upsert(renamed, path, max_cluster_size=4)
-    assert n == 6  # content twins admitted: the guarded-regime carve-out
-    assert LAST_SEMDEDUP_AUDIT["skipped_clusters"] >= 1
 
 
 # ---------------------------------------------------------------------------

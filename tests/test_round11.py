@@ -1,7 +1,7 @@
 """Round-11 structural tests: exact oracles for the approximate-ANN
 gates (VERDICT r10 #2), the ADVICE-r10 fixes (greedy-MIS edge-contract
-guard, persisted assign_strategy, zero-norm assignment guard, oracle
-cache eviction), and the r11 rotation invariant."""
+guard, zero-norm assignment guard, oracle cache eviction), and the r11
+rotation invariant."""
 
 import json
 import os
@@ -176,68 +176,6 @@ def test_greedy_mis_canonicalizes_reversed_and_drops_self_loops(spark):
     # chain 1-2-3 keeps {1, 3} and drops {2}; canonicalized (4,5)
     # keeps 4 and drops 5; (3,3) is ignored
     assert sorted(r["doc_id"] for r in out.collect()) == [2, 5]
-
-
-# ---------------------------------------------------------------------------
-# persisted assign_strategy (ADVICE r10)
-
-
-def test_index_meta_records_assign_strategy(spark, tmp_path):
-    """build_ivf_index and build_semantic_index persist the assignment
-    strategy; maintenance entry points replay the STORED value when the
-    caller passes none."""
-    from fastdb_spark.pipeline.ann import (
-        _stored_assign_strategy,
-        build_ivf_index,
-    )
-    from fastdb_spark.pipeline.incsem import _sem_params, build_semantic_index
-
-    embs = spark.createDataFrame(
-        [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    p1 = str(tmp_path / "ivf_expr")
-    build_ivf_index(embs, p1, n_clusters=4, assign_strategy="expr")
-    assert _stored_assign_strategy(p1) == "expr"
-    p2 = str(tmp_path / "ivf_default")
-    build_ivf_index(embs, p2, n_clusters=4)
-    assert _stored_assign_strategy(p2) == "gemm"
-    # a pre-round-11 layout (no meta file) falls back to gemm
-    os.remove(os.path.join(p2, "_ivf_meta.json"))
-    assert _stored_assign_strategy(p2) == "gemm"
-    p3 = str(tmp_path / "sem_expr")
-    build_semantic_index(
-        embs, p3, n_clusters=4, eps=0.999, assign_strategy="expr"
-    )
-    assert _sem_params(p3)["assign_strategy"] == "expr"
-
-
-def test_upsert_replays_stored_strategy(spark, tmp_path, monkeypatch):
-    """An upsert with assign_strategy=None must resolve to the stored
-    build strategy, not the module default — instrumented via the
-    _assign dispatcher."""
-    from fastdb_spark.pipeline import ann
-
-    embs = spark.createDataFrame(
-        [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(20)],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "ivf")
-    ann.build_ivf_index(embs, path, n_clusters=2, assign_strategy="expr")
-    seen = []
-    orig = ann._assign
-
-    def spy(df, cents, id_col, vec_col, strategy):
-        seen.append(strategy)
-        return orig(df, cents, id_col, vec_col, strategy)
-
-    monkeypatch.setattr(ann, "_assign", spy)
-    more = spark.createDataFrame(
-        [(100 + i, [1.0, float(i), 0.5]) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    ann.ivf_index_upsert(more, path)
-    assert seen == ["expr"]
 
 
 # ---------------------------------------------------------------------------

@@ -1,12 +1,11 @@
 """Round-12 structural tests: the ADVICE-r11 fixes (quantized LSH sign
-test, loud corrupt-meta error, null-safe bench sentinels, explicit
-greedy-MIS null-edge contract), the doc_similar_w2v retirement, the
+test, null-safe bench sentinels, explicit greedy-MIS null-edge
+contract), the doc_similar_w2v retirement, the
 batched-hybrid born gate, and the r12 rotation invariant."""
 
 import json
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
 import __spark_entry__ as em
@@ -61,43 +60,6 @@ def test_lsh_sign_test_is_quantized(spark):
     assert got[0] & 1 == 0  # +2e-10 rounds to 0 -> not > 0
     assert got[1] & 1 == 1  # +1e-9 survives the round
     assert got[2] & 1 == 0
-
-
-# ---------------------------------------------------------------------------
-# ADVICE r11 #2 — corrupt index meta raises instead of guessing
-
-
-def test_corrupt_ivf_meta_raises(spark, tmp_path):
-    """A PRESENT but torn/strategy-less _ivf_meta.json raises (builds
-    write atomically since r11, so damage means a damaged index); a
-    MISSING file is a pre-r11 layout and still falls back to gemm."""
-    from fastdb_spark.pipeline.ann import (
-        _IVF_META,
-        _stored_assign_strategy,
-        build_ivf_index,
-    )
-
-    embs = spark.createDataFrame(
-        [(i, [float(i % 7), float((i * 3) % 5), 1.0]) for i in range(40)],
-        "vec_id long, embedding array<double>",
-    )
-    p = str(tmp_path / "ivf")
-    build_ivf_index(embs, p, n_clusters=4, assign_strategy="expr")
-    assert _stored_assign_strategy(p) == "expr"
-    meta = os.path.join(p, _IVF_META)
-    # torn write: truncated JSON
-    with open(meta, "w") as f:
-        f.write('{"assign_str')
-    with pytest.raises(ValueError, match="corrupt index meta"):
-        _stored_assign_strategy(p)
-    # parseable but strategy-less: also refuse to guess
-    with open(meta, "w") as f:
-        json.dump({"n_clusters": 4}, f)
-    with pytest.raises(ValueError, match="no assign_strategy"):
-        _stored_assign_strategy(p)
-    # pre-r11 layout (no meta at all) keeps the documented fallback
-    os.remove(meta)
-    assert _stored_assign_strategy(p) == "gemm"
 
 
 # ---------------------------------------------------------------------------
